@@ -6,17 +6,27 @@ import java.security.MessageDigest
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Runtime kernels for the graft native hash expressions
-  * (graft.plans.NativeExprs). Called from whole-stage-generated code via
-  * the Scala static forwarders, so the per-token / per-shingle loops run
-  * as compiled JVM code instead of interpreted Catalyst higher-order
-  * folds — the ~80 ms/doc front-end cost the round-2 bench flagged.
+/** Runtime kernels for the graft_* hash functions
+  * ([[graft.plans.GraftFunctions]]). Called from whole-stage-generated
+  * code via the Scala static forwarders, so the per-token / per-shingle
+  * loops run as compiled JVM code instead of interpreted Catalyst
+  * higher-order folds — the ~80 ms/doc front-end cost the round-2 bench
+  * flagged.
   *
   * Every kernel is bit-for-bit equivalent to the Column-function spec in
   * [[hashing]] / [[vectors]] (md5 hex domain, left-fold double sums), so
   * the DuckDB oracles are unchanged.
+  *
+  * The functions are in the session catalog for arbitrary SQL use, so
+  * each kernel checks its integer arguments (shared by interpreted and
+  * codegen paths): an out-of-range value fails typed, naming the
+  * function, instead of indexing out of bounds or emitting empty grams.
   */
 object NativeHashOps {
+
+  private def atLeast1(fn: String, arg: String, v: Int): Unit =
+    if (v < 1) throw new IllegalArgumentException(
+      s"graft_$fn: $arg must be >= 1, got $v")
 
   private val md5Local = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest =
@@ -50,9 +60,7 @@ object NativeHashOps {
     * base-conversion allocations.
     */
   def md5Buckets(arr: ArrayData, dim: Int): ArrayData = {
-    // the function is in the session catalog for arbitrary SQL use, so
-    // guard here (shared by interpreted and codegen paths): a hostile
-    // dim must fail typed, a null element must stay null, not NPE
+    // a null element must stay null, not NPE
     if (dim <= 0) throw new IllegalArgumentException(
       s"graft_md5_buckets: dim must be > 0, got $dim")
     val n = arr.numElements()
@@ -76,6 +84,9 @@ object NativeHashOps {
     * digest byte j/8).
     */
   def simhash(tokens: ArrayData, bits: Int): UTF8String = {
+    // one md5 digest carries 128 vote bits
+    if (bits < 1 || bits > 128) throw new IllegalArgumentException(
+      s"graft_simhash: bits must be in 1..128, got $bits")
     val n = tokens.numElements()
     val ones = new Array[Int](bits)
     var t = 0
@@ -106,6 +117,7 @@ object NativeHashOps {
     * empty shingle sets before signing).
     */
   def minhashSig(shingles: ArrayData, k: Int): ArrayData = {
+    atLeast1("minhash_sig", "k", k)
     val n = shingles.numElements()
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, Long.MaxValue)
@@ -138,6 +150,7 @@ object NativeHashOps {
     * when fewer than n words (= text.wordShingles).
     */
   def wordShingles(words: ArrayData, n: Int): ArrayData = {
+    atLeast1("word_shingles", "n", n)
     val m = words.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](m - n + 1)
@@ -164,6 +177,8 @@ object NativeHashOps {
     * minima is arithmetic, not implementation.
     */
   def winnowFps(words: ArrayData, k: Int, window: Int): ArrayData = {
+    atLeast1("winnow_fps", "k", k)
+    atLeast1("winnow_fps", "window", window)
     val m = words.numElements()
     if (m < k) return new GenericArrayData(Array.empty[Any])
     val n = m - k + 1
@@ -218,6 +233,7 @@ object NativeHashOps {
     * Code-point based like Spark substr.
     */
   def md5CharNgrams(s: UTF8String, n: Int): ArrayData = {
+    atLeast1("md5_char_ngrams", "n", n)
     val str = s.toString
     val cpCount = str.codePointCount(0, str.length)
     if (cpCount < n) return new GenericArrayData(Array.empty[Any])

@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * heavy lifting in compiled code, initialise state once).
   *
   * Each kernel here is a LINE-FOR-LINE transcription of the expression
-  * tree it replaces (the legacy expressions remain in HaploProteins
-  * behind `spark.graft.protein.kernels=false`, and
-  * HaploProteinsKernelSpec pins row identity between the two paths).
+  * tree it replaced (that expression form is kept in test scope as the
+  * parity oracle, and HaploProteinsKernelSpec pins row identity between
+  * the two).
   * String semantics reuse the exact Catalyst primitives:
   * `UTF8String.substringSQL` (= `Column.substr`), `UTF8String.concat`
   * (= `concat`), char-count lengths (= `length`), and
@@ -52,7 +52,7 @@ object NativeProteinOps {
   }
 
   // ---- coordinates_toolbox.get_rna_position ------------------------------
-  /** The [[graft.operators.HaploProteins]] `rnaAllele` fold: spliced rna
+  /** The `rnaAllele` fold of [[graft.operators.HaploProteins]]: spliced rna
     * position of `dnaLoc0`, allele truncation at exon borders with
     * reach-into-next-exon reassembly, and the splice-junction flag.
     *

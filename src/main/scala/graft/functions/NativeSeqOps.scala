@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native sequence kernels (see [[graft.plans.NativeExprs]] for the
-  * codegen'd Expression wrappers).
+/** Native sequence kernels (bound to Catalyst as graft_translate_dna by
+  * [[graft.plans.GraftFunctions]]).
   *
   * The original `dna.translateDna` walked a 64-entry codon map *literal*
   * with `element_at` inside `transform` — a linear scan of a MapData per

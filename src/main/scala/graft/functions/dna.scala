@@ -59,12 +59,9 @@ object dna {
     * registration (SQL users get the same kernel as graft_translate_dna
     * via GraftFunctions / spark.sql.extensions).
     */
-  def translateDna(seq: Column, frame: Column = lit(0)): Column = {
-    import org.apache.spark.sql.classic.GraftColumnBridge
-    GraftColumnBridge.column(graft.plans.NativeExprs.GraftTranslateDna(
-      GraftColumnBridge.expression(seq),
-      GraftColumnBridge.expression(frame.cast("int"))))
-  }
+  def translateDna(seq: Column, frame: Column = lit(0)): Column =
+    graft.plans.GraftFunctions.call("graft_translate_dna", seq,
+      frame.cast("int"))
 
   /** Apply an ordered list of variants to a sequence.
     *

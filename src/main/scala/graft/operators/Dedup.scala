@@ -14,7 +14,7 @@ import graft.plans.GraftFunctions
   * candidates through bucket self-joins whose bucket sizes stay bounded, so
   * the shuffled pair count stays ~linear in corpus size. The hash
   * front-ends (shingle -> minhash, token -> simhash, gram -> md5) run
-  * through the native graft_* expressions (graft.plans.NativeExprs) so the
+  * through the native graft_* functions (graft.plans.GraftFunctions) so the
   * per-document hashing loops execute as compiled code inside whole-stage
   * codegen rather than interpreted Catalyst folds.
   *

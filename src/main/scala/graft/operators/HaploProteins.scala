@@ -5,6 +5,27 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.dna
 
+/** The five sequential per-row folds of [[HaploProteins.proteinDatabase]]
+  * as Column builders: `rnaAllele` -> struct<rna, ref, alt, intersect>,
+  * `affected` -> array<struct<ploc, aa>>, `startState` -> struct<sl, rf,
+  * ps, lost, invalid, lostOrd>, `applyVars` -> struct<s, ok>, `conseq`
+  * -> struct<conseq, protch, syn>. The pipeline runs the compiled
+  * kernels; tests pass the higher-order-function form they transcribe
+  * as a parity oracle.
+  */
+private[graft] trait ProteinFolds {
+  def rnaAllele(exons: Column, loc: Column, ref: Column,
+                alt: Column): Column
+  def affected(cdna: Column, loc: Column, alen: Column, rf: Column,
+               pstart: Column): Column
+  def startState(vars: Column, sl0: Column, rf0: Column, ps0: Column,
+                 hasStart: Column, forceRf: Boolean,
+                 skipStartLoss: Boolean): Column
+  def applyVars(vars: Column, cdna: Column): Column
+  def conseq(refA: Column, altA: Column, dnaType: Column, isFs: Column,
+             hasFsBefore: Column): Column
+}
+
 /** The ProHap core: haplotype -> mutated cDNA -> protein database.
   *
   * Re-expresses /root/reference/src/modules/process_haplotypes.py:72-430 and
@@ -12,12 +33,13 @@ import graft.functions.dna
   * loops become a RELATIONAL dataflow: variants explode to rows (one small
   * codegen'd expression per derivation), sequential state that is a pure
   * prefix aggregate (cumulative indel offsets, frameshift chaining) becomes
-  * window functions over the variant order, and only the two genuinely
-  * data-dependent folds — start-codon shift tracking and mutated-cDNA
-  * construction — stay as per-row `aggregate` lambdas over the (small)
-  * variant array. This keeps every Catalyst expression tree bounded: an
-  * early all-nested-folds version produced a tree the optimizer chewed on
-  * for minutes.
+  * window functions over the variant order, and the genuinely sequential
+  * per-row folds — exon mapping, start-codon shift tracking,
+  * mutated-cDNA construction, affected codons, consequences — run as
+  * compiled kernels over the (small) variant array ([[ProteinFolds]]).
+  * This keeps every Catalyst expression tree bounded: an early
+  * all-nested-folds version produced a tree the optimizer chewed on for
+  * minutes.
   *
   * Semantics covered: reading-frame inference from the start codon (stop
   * codon + forceRf fallback), reverse-strand allele reverse-complementing
@@ -35,121 +57,25 @@ import graft.functions.dna
   */
 object HaploProteins {
 
-  // ---- coordinates_toolbox.get_rna_position ------------------------------
-  /** Fold over exons computing the spliced position of `dnaLoc` and
-    * truncating alleles that cross exon borders. Alleles that reach over
-    * the intron into the NEXT exon are reassembled across the junction
-    * (ref[:remaining] + ref[next.start - loc:]) exactly as
-    * coordinates_toolbox.py:46-52 / 62-68 do.
-    * Returns struct(rna, ref, alt, intersect).
-    */
-  private def rnaAllele(exons: Column, dnaLoc0: Column, ref0: Column,
-                        alt0: Column): Column = {
-    val indexed = transform(exons, (e, i) =>
-      struct(e.getField("start").as("s"), e.getField("end").as("en"),
-        i.as("i"),
-        get(exons, i + 1).getField("start").as("ns")))
-    aggregate(
-      indexed,
-      struct(lit(0L).as("rna"), lit(false).as("found"), ref0.as("ref"),
-        alt0.as("alt"), dnaLoc0.as("loc"),
-        lit(null).cast("int").as("intersect")),
-      (acc, e) => {
-        val found = acc.getField("found")
-        val loc = acc.getField("loc")
-        val ref = acc.getField("ref")
-        val alt = acc.getField("alt")
-        val refLen = length(ref)
-        val s = e.getField("s")
-        val en = e.getField("en")
-        val i = e.getField("i")
-
-        val before = en < loc
-        // allele begins in the intron before this exon: truncate front
-        val fromIntron = s > loc
-        val intronicLen = (s - loc).cast("int")
-        val refT = when(fromIntron, ref.substr(intronicLen + 1, length(ref)))
-          .otherwise(ref)
-        val altT = when(fromIntron, alt.substr(intronicLen + 1, length(alt)))
-          .otherwise(alt)
-        val locT = when(fromIntron, s).otherwise(loc)
-        val intersectFront = when(fromIntron, i.cast("int"))
-
-        // allele runs past the exon end: cut the intronic middle; when the
-        // allele reaches INTO the next exon, splice its tail back on
-        // (coordinates_toolbox.py "check if the mutation does not reach
-        // into the next exon")
-        val refLenT = length(refT)
-        val altLenT = length(altT)
-        // reference: "dna_location + ref_len > exon.end" — with 1-based
-        // inclusive coordinates this fires for alleles ending exactly AT
-        // the exon end too (they get the splice flag, and an insertion at
-        // the last base has its alt truncated below)
-        val pastEnd = locT + refLenT > en
-        val remaining = (en - locT + 1).cast("int")
-        val ns = e.getField("ns")
-        val startAgain = (ns - locT).cast("int")
-        val refReach = ns.isNotNull && (locT + refLenT > ns)
-        val refT2 = when(pastEnd,
-          when(refReach, concat(refT.substr(lit(1), remaining),
-            refT.substr(startAgain + 1, length(refT))))
-            .otherwise(refT.substr(lit(1), remaining)))
-          .otherwise(refT)
-        val altPast = locT + altLenT > en
-        val altReach = ns.isNotNull && (locT + altLenT > ns)
-        val altT2 = when(pastEnd && altPast,
-          when(altReach, concat(altT.substr(lit(1), remaining),
-            altT.substr(startAgain + 1, length(altT))))
-            .otherwise(altT.substr(lit(1), remaining)))
-          .otherwise(altT)
-        val intersectBack = when(pastEnd, i.cast("int") + 1)
-          .when(en - locT + refLenT < 3, i.cast("int") + 1)
-          .when(locT - s < 3, i.cast("int"))
-
-        val hit = !before && (s < loc + greatest(refLen, lit(1)))
-        struct(
-          when(found, acc.getField("rna"))
-            .when(before, acc.getField("rna") + (en - s + 1))
-            .when(hit, acc.getField("rna") + (locT - s))
-            .otherwise(acc.getField("rna")).as("rna"),
-          (found || hit).as("found"),
-          when(!found && hit, refT2).otherwise(ref).as("ref"),
-          when(!found && hit, altT2).otherwise(alt).as("alt"),
-          when(!found && hit, locT).otherwise(loc).as("loc"),
-          // the back-junction flag overwrites the front flag when both
-          // apply, mirroring the reference's assignment order
-          when(found, acc.getField("intersect"))
-            .when(hit, coalesce(intersectBack, intersectFront))
-            .otherwise(acc.getField("intersect")).as("intersect"))
-      },
-      acc => struct(acc.getField("rna").as("rna"),
-        acc.getField("ref").as("ref"), acc.getField("alt").as("alt"),
-        acc.getField("intersect").as("intersect")))
-  }
-
-  // ---- coordinates_toolbox.get_affected_codons ---------------------------
-  /** Residues covered by [loc, loc+len): an ARRAY of struct(ploc, aa), one
-    * entry per reading frame — a single entry when rf is known (ploc offset
-    * by pstart), or three entries (frames 0,1,2, no pstart offset) when
-    * rf == -1, matching get_affected_codons' unknown-frame expansion
-    * (coordinates_toolbox.py:139-172). aa = '-' when no full codon covered.
-    */
-  private def affected(cdnaSeq: Column, loc: Column, alen: Column,
-                       rf: Column, pstart: Column): Column = {
-    val frames = when(rf === -1, array(lit(0L), lit(1L), lit(2L)))
-      .otherwise(array(rf))
-    transform(frames, f => {
-      val ploc = when(rf === -1, floor((loc - f) / 3.0).cast("long"))
-        .otherwise(floor((loc - f) / 3.0).cast("long") - pstart)
-      val bpFrom0 = floor((loc - f) / 3.0).cast("long") * 3 + f
-      val bpFrom = greatest(greatest(bpFrom0, lit(0L)), f)
-      val bpTo = ceil((loc + alen - f) / 3.0).cast("long") * 3 + f
-      val aa = when(bpTo - bpFrom > 2,
-        dna.translateDna(cdnaSeq.substr((bpFrom + 1).cast("int"),
-          (bpTo - bpFrom).cast("int"))))
-        .otherwise(lit("-"))
-      struct(ploc.as("ploc"), aa.as("aa"))
-    })
+  /** The folds as [[graft.functions.NativeProteinOps]] kernel calls. */
+  private object KernelFolds extends ProteinFolds {
+    import graft.plans.GraftFunctions.call
+    def rnaAllele(exons: Column, loc: Column, ref: Column,
+                  alt: Column): Column =
+      call("graft_rna_allele", exons, loc, ref, alt)
+    def affected(cdna: Column, loc: Column, alen: Column, rf: Column,
+                 pstart: Column): Column =
+      call("graft_affected", cdna, loc, alen, rf, pstart)
+    def startState(vars: Column, sl0: Column, rf0: Column, ps0: Column,
+                   hasStart: Column, forceRf: Boolean,
+                   skipStartLoss: Boolean): Column =
+      call("graft_start_state", vars, sl0, rf0, ps0, hasStart,
+        lit(forceRf), lit(skipStartLoss))
+    def applyVars(vars: Column, cdna: Column): Column =
+      call("graft_apply_vars", vars, cdna)
+    def conseq(refA: Column, altA: Column, dnaType: Column, isFs: Column,
+               hasFsBefore: Column): Column =
+      call("graft_conseq", refA, altA, dnaType, isFs, hasFsBefore)
   }
 
   /** Build the protein database. Input row columns:
@@ -173,19 +99,16 @@ object HaploProteins {
                       skipStartLoss: Boolean = true,
                       minCount: Long = 0L,
                       requireNonSyn: Boolean = true,
-                      keepCdna: Boolean = false): DataFrame = {
+                      keepCdna: Boolean = false): DataFrame =
+    proteinDatabaseWith(KernelFolds, haplo0, forceRf, ignoreUtr,
+      skipStartLoss, minCount, requireNonSyn, keepCdna)
+
+  /** [[proteinDatabase]] with the per-row `folds` supplied by the caller. */
+  private[graft] def proteinDatabaseWith(folds: ProteinFolds,
+      haplo0: DataFrame, forceRf: Boolean, ignoreUtr: Boolean,
+      skipStartLoss: Boolean, minCount: Long, requireNonSyn: Boolean,
+      keepCdna: Boolean): DataFrame = {
     graft.plans.GraftFunctions.register(haplo0.sparkSession)
-    // The sequential per-variant / per-haplotype folds run as compiled
-    // kernels ([[graft.functions.NativeProteinOps]]) by default: the
-    // higher-order-function forms they transcribe evaluate interpreted —
-    // per element Spark walks a large `when`-chain tree and rebinds
-    // lambda variables, which made the protein family the largest
-    // remaining CPU sink at r17 (guide §4.2/§4.5). The legacy expression
-    // path stays selectable (and parity-pinned by
-    // HaploProteinsKernelSpec) via spark.graft.protein.kernels=false.
-    val useKernels = haplo0.sparkSession.conf
-      .getOption("spark.graft.protein.kernels").forall(_.toBoolean)
-    import graft.plans.ProteinExprs
     // optional per-haplotype population rollup strings ("POP:0.00123;..."),
     // carried through and merged on the vcf-id merge like
     // process_haplotypes.add_population_freqs
@@ -242,12 +165,8 @@ object HaploProteins {
     val altN = when(col("v").getField("alt") === "-", "")
       .otherwise(col("v").getField("alt"))
     val mapped = exploded
-      .withColumn("_ra",
-        if (useKernels)
-          ProteinExprs.rnaAllele(col("exons"), col("v").getField("pos"),
-            refN, altN)
-        else rnaAllele(col("exons"), col("v").getField("pos"),
-          refN, altN))
+      .withColumn("_ra", folds.rnaAllele(col("exons"),
+        col("v").getField("pos"), refN, altN))
       .withColumn("ref", when(col("_rev"),
         dna.revComp(col("_ra").getField("ref")))
         .otherwise(col("_ra").getField("ref")))
@@ -295,48 +214,9 @@ object HaploProteins {
         carry.map(c => first(col(c)).as(c)): _*)
 
     // ---- 5) start-codon shift/loss fold (check_start_change) -----------
-    val startState = if (useKernels)
-      ProteinExprs.startState(col("vars"), col("_startLoc0"),
-        col("_rf0"), col("_pstart0"), col("_hasStart"),
-        forceRf, skipStartLoss)
-    else aggregate(
-      col("vars"),
-      struct(col("_startLoc0").as("sl"), col("_rf0").as("rf"),
-        col("_pstart0").as("ps"), lit(false).as("lost"),
-        lit(false).as("invalid"), lit(-1L).as("lostOrd")),
-      (acc, v) => {
-        val applies = col("_hasStart") && acc.getField("rf") > -1 &&
-          !acc.getField("lost")
-        val vloc = v.getField("rna")
-        val delta = v.getField("altLen") - v.getField("refLen")
-        val beforeStart = vloc < acc.getField("sl") + 3
-        val hitsStart = vloc + v.getField("refLen") > acc.getField("sl")
-        val isFs = v.getField("isFs")
-        val lostNow = applies && beforeStart &&
-          (hitsStart || (isFs && lit(!forceRf)))
-        val shifted = applies && beforeStart && !hitsStart && !lostNow
-        val newRf = when(shifted && isFs,
-          pmod(acc.getField("rf") + delta.cast("int"), lit(3)))
-          .otherwise(acc.getField("rf"))
-        val newSl = when(lostNow, lit(0L))
-          .when(shifted, acc.getField("sl") + delta)
-          .otherwise(acc.getField("sl"))
-        struct(
-          newSl.as("sl"),
-          // start loss drops to the unknown-frame path (check_start_change
-          // returns (-1, -1)): downstream translates in all three frames
-          when(lostNow, lit(-1)).otherwise(newRf).as("rf"),
-          when(lostNow, lit(0L))
-            .when(shifted, ((newSl - newRf) / 3).cast("long"))
-            .otherwise(acc.getField("ps")).as("ps"),
-          (acc.getField("lost") || lostNow).as("lost"),
-          (acc.getField("invalid") ||
-            (lostNow && lit(skipStartLoss))).as("invalid"),
-          // ord of the variant that destroyed the start codon — its
-          // dna-type becomes 'start_lost' (process_haplotypes.py:246)
-          when(lostNow, v.getField("ord").cast("long"))
-            .otherwise(acc.getField("lostOrd")).as("lostOrd"))
-      })
+    val startState = folds.startState(col("vars"), col("_startLoc0"),
+      col("_rf0"), col("_pstart0"), col("_hasStart"), forceRf,
+      skipStartLoss)
 
     val withStart = perHaplo.withColumn("_ss", startState)
       .where(!col("_ss").getField("invalid"))
@@ -351,25 +231,7 @@ object HaploProteins {
         when(col("_startLost"), lit(0L)).otherwise(col("_pstart0")))
 
     // ---- 6) apply variants to the cDNA (sequential concat fold) --------
-    val applied = if (useKernels)
-      ProteinExprs.applyVars(col("vars"), col("cdna"))
-    else aggregate(
-      col("vars"),
-      struct(col("cdna").as("s"), lit(0L).as("off"), lit(true).as("ok")),
-      (acc, v) => {
-        val rna = v.getField("rna") + acc.getField("off")
-        val refLen = v.getField("refLen")
-        val s = acc.getField("s")
-        val matches = s.substr((rna + 1).cast("int"),
-          refLen.cast("int")) === v.getField("ref")
-        struct(
-          when(acc.getField("ok") && matches,
-            concat(s.substr(lit(1), rna.cast("int")), v.getField("alt"),
-              s.substr((rna + refLen + 1).cast("int"), length(s))))
-            .otherwise(s).as("s"),
-          (acc.getField("off") + v.getField("altLen") - refLen).as("off"),
-          (acc.getField("ok") && matches).as("ok"))
-      })
+    val applied = folds.applyVars(col("vars"), col("cdna"))
 
     val withCdna = withStart.withColumn("_ap", applied)
       .where(col("_ap").getField("ok"))
@@ -392,20 +254,11 @@ object HaploProteins {
       .select(Seq(col("*")) ++
         varFields.map(f => col("_v").getField(f).as(f)): _*)
       .drop("_v", "vars")
-      .withColumn("_refA",
-        if (useKernels)
-          ProteinExprs.affected(col("cdna"), col("rna"), col("refLen"),
-            col("_rfRef").cast("long"), col("_pstartRef"))
-        else affected(col("cdna"), col("rna"), col("refLen"),
-          col("_rfRef").cast("long"), col("_pstartRef")))
-      .withColumn("_altA",
-        if (useKernels)
-          ProteinExprs.affected(col("_mutated"),
-            col("rna") + col("offBefore"), col("altLen"),
-            col("_rf").cast("long"), col("_pstart"))
-        else affected(col("_mutated"),
-          col("rna") + col("offBefore"), col("altLen"),
-          col("_rf").cast("long"), col("_pstart")))
+      .withColumn("_refA", folds.affected(col("cdna"), col("rna"),
+        col("refLen"), col("_rfRef").cast("long"), col("_pstartRef")))
+      .withColumn("_altA", folds.affected(col("_mutated"),
+        col("rna") + col("offBefore"), col("altLen"),
+        col("_rf").cast("long"), col("_pstart")))
       // frameshift chaining state: the reference ORs
       // "frameshifts[ch_idx] and loc_ref >= 0" over EVERY frame inside
       // the per-frame loop (process_haplotypes.py:353), so a frameshift
@@ -421,53 +274,19 @@ object HaploProteins {
       "start_lost")
       .when(col("intersect").isNotNull, "splice")
       .when(col("refLen") === col("altLen"), "SNP").otherwise("indel")
-    // per-frame consequence + change string; frames joined with '|'
-    val perFrame = zip_with(col("_refA"), col("_altA"), (r, a) => {
-      val refAa = r.getField("aa")
-      val altAa = a.getField("aa")
-      val c0 = when(dnaType === "splice", "splice_variant")
-        .when(dnaType === "start_lost", "start_lost")
-        .when(refAa === altAa, "synonymous")
-        .when(refAa.contains("*") && !altAa.contains("*"), "stop_lost")
-        .when(!refAa.contains("*") && altAa.contains("*"), "stop_gained")
-        .when(dnaType === "SNP", "SAV")
-        .when(col("isFs"), "frameshift")
-        .otherwise("inframe_indel")
-      val cF = when(!col("isFs") && col("_hasFsBefore"),
-        concat(c0, lit("_after_fs"))).otherwise(c0)
-      val pch = concat(r.getField("ploc").cast("string"), lit(":"), refAa,
-        lit(">"), a.getField("ploc").cast("string"), lit(":"), altAa,
-        when(col("isFs"), "(+fs)")
-          .when(col("_hasFsBefore"), "(fs)").otherwise(lit("")))
-      struct(cF.as("conseq"), pch.as("pch"), (refAa === altAa).as("syn"))
-    })
     val cdnaCh = concat(col("rna").cast("string"), lit(":"), col("ref"),
       lit(">"), col("alt"))
 
-    // kernel path: one compiled call yields the '|'-joined consequence /
-    // change strings and the all-frames synonymous flag (the zip_with +
-    // two transforms + forall it replaces each re-walked the interpreted
-    // lambda per frame)
-    val conseqCols = conseqRows
-      .withColumn("_pf", if (useKernels)
-        ProteinExprs.conseq(col("_refA"), col("_altA"), dnaType,
-          col("isFs"), col("_hasFsBefore"))
-      else perFrame)
-    val conseqDone = (if (useKernels)
-      conseqCols
-        .withColumn("conseq", col("_pf").getField("conseq"))
-        .withColumn("protCh", col("_pf").getField("protch"))
-        .withColumn("cdnaCh", cdnaCh)
-        // a variant counts as synonymous only when EVERY frame is
-        // synonymous ("if not all(is_synonymous)" in the reference)
-        .withColumn("synonymous", col("_pf").getField("syn"))
-    else conseqCols
-      .withColumn("conseq", array_join(transform(col("_pf"),
-        p => p.getField("conseq")), "|"))
-      .withColumn("protCh", array_join(transform(col("_pf"),
-        p => p.getField("pch")), "|"))
+    // per-frame consequence and change strings '|'-joined, plus the
+    // all-frames synonymous flag: a variant counts as synonymous only
+    // when EVERY frame is ("if not all(is_synonymous)" in the reference)
+    val conseqDone = conseqRows
+      .withColumn("_pf", folds.conseq(col("_refA"), col("_altA"), dnaType,
+        col("isFs"), col("_hasFsBefore")))
+      .withColumn("conseq", col("_pf").getField("conseq"))
+      .withColumn("protCh", col("_pf").getField("protch"))
       .withColumn("cdnaCh", cdnaCh)
-      .withColumn("synonymous", forall(col("_pf"), p => p.getField("syn"))))
+      .withColumn("synonymous", col("_pf").getField("syn"))
       // UTR filter coordinates: only consulted when _rf > -1, where the
       // frame arrays have exactly one entry
       .withColumn("keepLoc",

@@ -8,10 +8,11 @@ import graft.plans.GraftFunctions
   * media ride as opaque `binary` columns with typed metadata.
   *
   * Image decode / resample / feature extraction are REAL, built on the
-  * JDK's javax.imageio via the graft_img_* expressions
-  * (graft.plans.MediaExprs) — PNG/JPEG/GIF/BMP, no external codecs, no
-  * UDFs, no driver-side work: decodes run executor-side with partition
-  * parallelism and poison blobs yield NULL instead of failing the stage.
+  * JDK's javax.imageio via the graft_img_* functions
+  * (graft.functions.NativeMediaOps) — PNG/JPEG/GIF/BMP, no external
+  * codecs, no UDFs, no driver-side work: decodes run executor-side with
+  * partition parallelism and poison blobs yield NULL instead of failing
+  * the stage.
   *
   * Frame sampling over chunked payloads (the video/audio analog) and
   * metadata extraction go through the hex-string domain (`hex(payload)`)

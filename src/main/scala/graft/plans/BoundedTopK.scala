@@ -158,10 +158,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectFunction((FunctionIdentifier(BoundedTopK.name),
       new ExpressionInfo(classOf[BoundedTopK].getName, BoundedTopK.name),
       BoundedTopK.builder))
-    GraftFunctions.all.foreach { case (name, cls, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), builder))
-    }
+    GraftFunctions.descriptions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RangeJoinRule)
   }
 }

@@ -8,14 +8,14 @@ import graft.fixtures.GenomicFixtures
 import graft.operators.HaploProteins
 import graft.queries.GenomicPipeline
 
-/** Row-for-row parity between the compiled protein kernels
-  * (spark.graft.protein.kernels=true, the default) and the legacy
-  * higher-order-function expressions they transcribe. The kernels are
-  * an r18 OPTIMIZATION — identical semantics is the contract, so every
-  * flag combination the declared queries use runs both paths over the
-  * fixture mini-genome, the inline edge-case haplotypes, and a
-  * generated multi-shape corpus, and the outputs must match exactly
-  * (schema and rows).
+/** Row-for-row parity between [[HaploProteins.proteinDatabase]], which
+  * runs the compiled protein kernels, and the same pipeline over
+  * [[LegacyProteinFolds]], the higher-order-function expressions the
+  * kernels transcribe. The kernels are an OPTIMIZATION — identical
+  * semantics is the contract, so every flag combination the declared
+  * queries use runs both over the fixture mini-genome, the inline
+  * edge-case haplotypes, and a generated multi-shape corpus, and the
+  * outputs must match exactly (schema and rows).
   */
 class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -34,17 +34,16 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def both(build: => DataFrame): (DataFrame, DataFrame) = {
-    spark.conf.set("spark.graft.protein.kernels", "true")
-    val kernel = build
-    spark.conf.set("spark.graft.protein.kernels", "false")
-    val legacy = build
-    spark.conf.set("spark.graft.protein.kernels", "true")
-    (kernel, legacy)
-  }
-
-  private def assertSame(build: => DataFrame, what: String): Unit = {
-    val (kernel, legacy) = both(build)
+  private def assertSame(haplo: DataFrame, what: String,
+                         forceRf: Boolean = true,
+                         ignoreUtr: Boolean = true,
+                         skipStartLoss: Boolean = true,
+                         requireNonSyn: Boolean = true,
+                         keepCdna: Boolean = false): Unit = {
+    val kernel = HaploProteins.proteinDatabase(haplo, forceRf, ignoreUtr,
+      skipStartLoss, 0L, requireNonSyn, keepCdna)
+    val legacy = HaploProteins.proteinDatabaseWith(LegacyProteinFolds,
+      haplo, forceRf, ignoreUtr, skipStartLoss, 0L, requireNonSyn, keepCdna)
     assert(kernel.schema.map(f => (f.name, f.dataType)) ==
       legacy.schema.map(f => (f.name, f.dataType)),
       s"$what: schema diverged")
@@ -60,24 +59,18 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fixture corpus: default flags match the legacy expressions") {
-    assertSame(
-      HaploProteins.proteinDatabase(GenomicPipeline.haploInput(spark)),
-      "default flags")
+    assertSame(GenomicPipeline.haploInput(spark), "default flags")
   }
 
   test("fixture corpus: pv1 flags (UTRs kept, start-loss kept, " +
     "synonymous kept) match") {
-    assertSame(
-      HaploProteins.proteinDatabase(GenomicPipeline.haploInput(spark),
-        ignoreUtr = false, skipStartLoss = false, requireNonSyn = false),
-      "pv1 flags")
+    assertSame(GenomicPipeline.haploInput(spark), "pv1 flags",
+      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false)
   }
 
   test("fixture corpus: forceRf=false and keepCdna=true match") {
-    assertSame(
-      HaploProteins.proteinDatabase(GenomicPipeline.haploInput(spark),
-        forceRf = false, keepCdna = true),
-      "forceRf=false keepCdna=true")
+    assertSame(GenomicPipeline.haploInput(spark),
+      "forceRf=false keepCdna=true", forceRf = false, keepCdna = true)
     GenomicPipeline.releaseCaches()
   }
 
@@ -141,12 +134,11 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("edge-case haplotypes match under every declared flag combo") {
-    assertSame(HaploProteins.proteinDatabase(edgeCases), "edges default")
-    assertSame(HaploProteins.proteinDatabase(edgeCases,
-      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false),
-      "edges pv1 flags")
-    assertSame(HaploProteins.proteinDatabase(edgeCases,
-      forceRf = false, keepCdna = true), "edges forceRf=false")
+    assertSame(edgeCases, "edges default")
+    assertSame(edgeCases, "edges pv1 flags",
+      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false)
+    assertSame(edgeCases, "edges forceRf=false",
+      forceRf = false, keepCdna = true)
   }
 
   // ---- generated corpus: many shapes through the same plan --------------
@@ -203,10 +195,30 @@ class HaploProteinsKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("generated corpus (120 haplotypes, mixed shapes) matches") {
     val corpus = generated(120).localCheckpoint()
-    assertSame(HaploProteins.proteinDatabase(corpus), "generated default")
-    assertSame(HaploProteins.proteinDatabase(corpus,
-      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false),
-      "generated pv1 flags")
+    assertSame(corpus, "generated default")
+    assertSame(corpus, "generated pv1 flags",
+      ignoreUtr = false, skipStartLoss = false, requireNonSyn = false)
     corpus.unpersist(blocking = false)
+  }
+
+  test("the main path compiles every protein kernel inside " +
+    "WholeStageCodegen") {
+    val corpus = generated(12).localCheckpoint()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val db = HaploProteins.proteinDatabase(corpus)
+      db.collect()
+      val folds = Set("graft_rna_allele", "graft_start_state",
+        "graft_apply_vars", "graft_affected", "graft_conseq")
+      val (compiled, interpreted) =
+        GraftFunctionsSpec.kernelsByStage(db.queryExecution.executedPlan)
+      assert(compiled == folds + "graft_translate_dna")
+      // the optimizer also inlines one translation into the UTR filter's
+      // lambda, which evaluates interpreted; no fold may follow it there
+      assert(interpreted.intersect(folds).isEmpty, interpreted)
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      corpus.unpersist(blocking = false)
+    }
   }
 }
