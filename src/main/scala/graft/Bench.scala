@@ -114,6 +114,17 @@ object Bench {
       concat(lit("NM:i:"), pmod(col("id"), lit(5))).as("tags"))
   }
 
+  /** `chrom === c` as an expression Catalyst cannot translate into a
+    * data-source filter (the column sits under `concat`), so the
+    * full-scan twins of the pruning entries read every byte of the
+    * DSv2 relation and filter above it — their plans show no pushed
+    * chrom/pos.
+    */
+  private[graft] def chromUnpushed(c: String): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    concat(col("chrom"), lit("")) === c
+  }
+
   private var bamScalePath: String = null
   private def ensureSyntheticBam(spark: SparkSession, n: Long): String =
     synchronized {
@@ -226,8 +237,8 @@ object Bench {
   /** One BIG synthetic bgzipped VCF (~n variants × 20 samples as BGZF
     * text) — the single-huge-file layout cohort VCFs ship in. Two bench
     * entries read it: the Hadoop-codec path (non-splittable, one task)
-    * and the byte-range splittable [[graft.sources.Bgzf.readLines]]
-    * path; their ratio is the measured value of in-file splitting.
+    * and the byte-range splittable [[graft.sources.Vcf.readTable]]
+    * relation; their ratio is the measured value of in-file splitting.
     */
   private var vcfGzScalePath: String = null
 
@@ -882,17 +893,18 @@ object Bench {
       // number a 1000-executor fan-out multiplies.
       "bamx_bam_scale" -> (() => {
         val path = ensureSyntheticBam(spark, nDocs * 60)
-        graft.sources.Bam.read(spark, path)
+        graft.sources.Bam.readTable(spark, path,
+          splitSize = graft.fixtures.GenomicFixtures.wholeFile(path))
           .where(!col("is_unmapped"))
           .agg(count(lit(1)), sum(col("ref_end") - col("pos") + 1))
           .head.getLong(0)
       }),
-      // The same BAM through the byte-range splittable reader (no .bai
-      // index): 1 MiB ranges -> ~5 tasks vs bamx's one. The ratio is
-      // the single-huge-BAM parallelism win.
+      // The same BAM through byte-range splits (no .bai index): 1 MiB
+      // ranges -> ~5 tasks vs bamx's one. The ratio is the
+      // single-huge-BAM parallelism win.
       "bamxs_bam_split_scale" -> (() => {
         val path = ensureSyntheticBam(spark, nDocs * 60)
-        graft.sources.Bam.readSplit(spark, path, splitSize = 1L << 20)
+        graft.sources.Bam.readTable(spark, path, splitSize = 1L << 20)
           .where(!col("is_unmapped"))
           .agg(count(lit(1)), sum(col("ref_end") - col("pos") + 1))
           .head.getLong(0)
@@ -904,20 +916,21 @@ object Bench {
       // lands in run 1 only, the min comes from the warm runs)
       "bamx10_bam_decade_scale" -> (() => {
         val path = ensureSyntheticBam10(spark, nDocs * 600)
-        graft.sources.Bam.readSplit(spark, path, splitSize = 8L << 20)
+        graft.sources.Bam.readTable(spark, path, splitSize = 8L << 20)
           .where(!col("is_unmapped"))
           .agg(count(lit(1)), sum(col("ref_end") - col("pos") + 1))
           .head.getLong(0)
       }),
       "bcfx10_bcf_decade_scale" -> (() => {
         val path = ensureSyntheticBcf10(spark, nDocs * 200)
-        graft.sources.Bcf.readSplit(spark, path, splitSize = 8L << 20)
+        graft.sources.Bcf.readTable(spark, path, splitSize = 8L << 20)
           .agg(count(lit(1)), sum(size(col("genotypes"))))
           .head.getLong(0)
       }),
       "bcfx_bcf_scale" -> (() => {
         val path = ensureSyntheticBcf(spark, nDocs * 20)
-        graft.sources.Bcf.read(spark, path)
+        graft.sources.Bcf.readTable(spark, path,
+          splitSize = graft.fixtures.GenomicFixtures.wholeFile(path))
           .agg(count(lit(1)), sum(size(col("genotypes"))))
           .head.getLong(0)
       }),
@@ -935,7 +948,7 @@ object Bench {
       }),
       // One HUGE bgzipped VCF two ways: the non-splittable Hadoop-codec
       // path (one task regardless of size) vs the byte-range splittable
-      // BGZF reader. The ratio is the measured value of in-file
+      // DSv2 relation. The ratio is the measured value of in-file
       // splitting for the single-file cohort layout.
       "vgzx_vcfgz_codec_scale" -> (() => {
         val path = ensureSyntheticVcfGz((nDocs * 60).toInt)
@@ -944,14 +957,14 @@ object Bench {
       }),
       "vgzx_vcfgz_split_scale" -> (() => {
         val path = ensureSyntheticVcfGz((nDocs * 60).toInt)
-        graft.sources.Vcf.readBgzf(spark, path, splitSize = 1L << 20)
+        graft.sources.Vcf.readTable(spark, path, splitSize = 1L << 20)
           .agg(count(lit(1)), sum(col("pos"))).head.getLong(0)
       }),
       // Region pushdown vs full scan on the SAME sorted cohort file:
       // vrgx binary-searches the member chain and inflates only the
       // ~1-chrom-slice window (the chr17:41.1M-41.3M access pattern,
       // no .tbi); its pair vrgx1 answers the identical query by
-      // scanning every member. The ratio is the pruning win — and it
+      // scanning every member (its chrom filter is unpushed). The ratio is the pruning win — and it
       // GROWS with file size (vrgx is O(slice + log n), vrgx1 is
       // O(file)).
       "vrgx_region_read_scale" -> (() => {
@@ -964,8 +977,8 @@ object Bench {
       "vrgx1_region_fullscan_scale" -> (() => {
         val path = ensureSortedVcfGz((nDocs * 60).toInt)
         val hi = (nDocs * 60 / 22).toInt * 40 / 4
-        graft.sources.Vcf.readBgzf(spark, path, splitSize = 1L << 20)
-          .where(col("chrom") === "c11" && col("pos").between(10L, hi))
+        graft.sources.Vcf.readTable(spark, path, splitSize = 1L << 20)
+          .where(chromUnpushed("c11") && col("pos").between(10L, hi))
           .agg(count(lit(1)), sum(col("pos"))).head.getLong(0)
       }),
       // The vrgx query over an INDEXED copy of the same file: a `.tbi`
@@ -997,7 +1010,8 @@ object Bench {
       // regions per chromosome on 10 chroms, so merged windows halve
       // the window count) vs the identical OR-filter full scan. The
       // pair ratio is the panel pruning win at O(regions · log n)
-      // driver probes.
+      // driver probes. The twin's chrom conjuncts are unpushed, so it
+      // scans every byte.
       "vpnx_region_panel_scale" -> (() => {
         val path = ensureSortedVcfGz((nDocs * 60).toInt)
         graft.sources.Vcf.readRegions(spark, path,
@@ -1008,16 +1022,16 @@ object Bench {
         val path = ensureSortedVcfGz((nDocs * 60).toInt)
         val pred = panelRegions((nDocs * 60).toInt).map {
           case (c, a, b) =>
-            col("chrom") === c && col("pos").between(a, b)
+            chromUnpushed(c) && col("pos").between(a, b)
         }.reduce(_ || _)
-        graft.sources.Vcf.readBgzf(spark, path, splitSize = 1L << 20)
+        graft.sources.Vcf.readTable(spark, path, splitSize = 1L << 20)
           .where(pred)
           .agg(count(lit(1)), sum(col("pos"))).head.getLong(0)
       }),
       // Region read over a 22-shard per-chromosome DIRECTORY (the
       // layout cohorts ship in): 21 no-hit shards prune to search
       // floors, the hit shard prunes to the slice — vs the full
-      // directory scan answering the same query.
+      // directory scan (unpushed chrom filter) answering the same query.
       "vrdx_region_dir_scale" -> (() => {
         val dir = ensureSortedVcfGzSharded((nDocs * 60).toInt)
         val hi = (nDocs * 60 / 22).toInt * 40 / 4
@@ -1028,8 +1042,8 @@ object Bench {
       "vrdx1_region_dir_fullscan_scale" -> (() => {
         val dir = ensureSortedVcfGzSharded((nDocs * 60).toInt)
         val hi = (nDocs * 60 / 22).toInt * 40 / 4
-        graft.sources.Vcf.readBgzf(spark, dir, splitSize = 1L << 20)
-          .where(col("chrom") === "c11" && col("pos").between(10L, hi))
+        graft.sources.Vcf.readTable(spark, dir, splitSize = 1L << 20)
+          .where(chromUnpushed("c11") && col("pos").between(10L, hi))
           .agg(count(lit(1)), sum(col("pos"))).head.getLong(0)
       }),
       // The vpnx 20-region panel as PLAIN SQL — an OR of per-region
@@ -1111,7 +1125,7 @@ object Bench {
       // codec (wxgz, one task), per-record gz splittable (wxr).
       "bcfxs_bcf_split_scale" -> (() => {
         val path = ensureSyntheticBcf(spark, nDocs * 20)
-        graft.sources.Bcf.readSplit(spark, path, splitSize = 256L << 10)
+        graft.sources.Bcf.readTable(spark, path, splitSize = 256L << 10)
           .agg(count(lit(1)), sum(size(col("genotypes"))))
           .head.getLong(0)
       }),

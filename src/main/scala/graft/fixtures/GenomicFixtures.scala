@@ -21,6 +21,15 @@ object GenomicFixtures {
   val rawDir = "/root/repo/fixtures"
   val dir = "/root/repo/target/fixtures"
 
+  /** A splitSize the local file at `path` does not exceed: a DSv2
+    * relation then plans one range at offset 0, which decodes straight
+    * from the header with no alignment scan — the whole-file read on
+    * one task that the bcf1/bam1 gates and the per-file bench entries
+    * pin next to their split twins.
+    */
+  def wholeFile(path: String): Long =
+    math.max(1L, new java.io.File(path).length())
+
   /** PAR bounds for the fixture X chromosome — tools/gen_fixtures.py. */
   val par1To = 15L
   val par2From = 100L

@@ -21,9 +21,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * collect.
   *
   * Decode failures (corrupt/unsupported payloads) yield NULL, never an
-  * exception: at corpus scale a poison blob must not kill the stage.
+  * exception: at corpus scale a poison blob must not kill the stage. An
+  * out-of-range integer argument is a query error, not a data error: it
+  * fails typed, naming the function (the [[NativeHashOps]] rule).
   */
 object NativeMediaOps {
+
+  private def atLeast1(fn: String, arg: String, v: Int): Unit =
+    if (v < 1) throw new IllegalArgumentException(
+      s"graft_$fn: $arg must be >= 1, got $v")
 
   private def decode(bytes: Array[Byte]): BufferedImage =
     // explicit memory-backed stream: ImageIO.read(InputStream) defaults
@@ -98,6 +104,7 @@ object NativeMediaOps {
     * the resample actually ran. NULL on decode failure.
     */
   def imgResize(payload: Array[Byte], maxSide: Int): InternalRow = {
+    atLeast1("img_resize", "maxSide", maxSide)
     val img = decode(payload)
     if (img == null) return null
     val (w, h) = (img.getWidth, img.getHeight)
@@ -132,6 +139,8 @@ object NativeMediaOps {
     * decode failure.
     */
   def imgGrid(payload: Array[Byte], gx: Int, gy: Int): ArrayData = {
+    atLeast1("img_grid", "gx", gx)
+    atLeast1("img_grid", "gy", gy)
     val img = decode(payload)
     if (img == null) return null
     val (w, h) = (img.getWidth, img.getHeight)

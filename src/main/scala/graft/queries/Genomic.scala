@@ -76,23 +76,26 @@ object Genomic {
 
     "v10_vcf_bgzf" -> ((s, _) => {
       // the SAME bgzf fixture as v9, through the byte-range SPLITTABLE
-      // reader instead of the one-task Hadoop codec: a 1 KiB splitSize
-      // forces many ranges over the 512-byte members, so every
-      // boundary rule (member scan, skip-first, newline-at-boundary,
-      // tail completion) executes inside the gate itself.
+      // DSv2 relation instead of the one-task Hadoop codec: a 1 KiB
+      // splitSize forces many ranges over the 512-byte members, so
+      // every boundary rule (member scan, skip-first, newline-at-
+      // boundary, tail completion) executes inside the gate itself.
       prep(s)
-      Vcf.readBgzf(s, GenomicFixtures.vcfGzPath, splitSize = 1024L)
+      Vcf.readTable(s, GenomicFixtures.vcfGzPath, splitSize = 1024L)
         .withColumn("genotypes", array_join(col("genotypes"), ","))
     }),
 
     "bcf1_read" -> ((s, _) => {
       // BCF2.2 binary source: the VCF fixture re-encoded by the repo's
       // own BCF writer, decoded back through the BGZF chain + typed-
-      // value walk. The oracle parses the TEXT fixture independently
+      // value walk — read whole (one range from offset 0, no alignment
+      // scan). The oracle parses the TEXT fixture independently
       // with AF re-rendered through float32 shortest-round-trip (the
       // one text difference binary typing forces: "0.10" -> 0.1).
       prep(s)
-      graft.sources.Bcf.read(s, GenomicFixtures.bcfPath(s))
+      val bcf = GenomicFixtures.bcfPath(s)
+      graft.sources.Bcf.readTable(s, bcf,
+        splitSize = GenomicFixtures.wholeFile(bcf))
         .withColumn("genotypes", array_join(col("genotypes"), ","))
     }),
 
@@ -102,7 +105,7 @@ object Genomic {
       // alignment per range in-gate; one mis-aligned record fails the
       // hash against the independent float-normalized TEXT parse.
       prep(s)
-      graft.sources.Bcf.readSplit(s, GenomicFixtures.bcfPath(s),
+      graft.sources.Bcf.readTable(s, GenomicFixtures.bcfPath(s),
         splitSize = 256L)
         .withColumn("genotypes", array_join(col("genotypes"), ","))
     }),
@@ -122,7 +125,7 @@ object Genomic {
         ProcessHandle.current.pid
       graft.sources.Bcf.writeSharded(parsed.repartition(3), contigs,
         Vcf.sampleNames(s, GenomicFixtures.vcfPath), out)
-      graft.sources.Bcf.readSplit(s, out, splitSize = 256L)
+      graft.sources.Bcf.readTable(s, out, splitSize = 256L)
         .withColumn("genotypes", array_join(col("genotypes"), ","))
     }),
 
@@ -143,7 +146,7 @@ object Genomic {
 
     "g50b_region_bcf" -> ((s, _) => {
       // the same index-free region pushdown on the BINARY container:
-      // probes align records via the readSplit plausible-chain
+      // probes align records via the readTable plausible-chain
       // machinery and rank on the record's native contig index; same
       // overlap region as g50 (the spanning pos-39 record must
       // survive). Oracle = the float-normalized independent TEXT
@@ -199,8 +202,8 @@ object Genomic {
     }),
 
     "g59_filter_route" -> ((s, _) => {
-      // AUTOMATIC region pruning for SQL users: readAuto (forced onto
-      // its splittable-BGZF DSv2 branch) + a plain WHERE — no
+      // AUTOMATIC region pruning for SQL users: readAuto (BGZF text
+      // routes to the DSv2 relation) + a plain WHERE — no
       // readRegion call anywhere — must route the chrom/pos conjuncts
       // through SupportsPushDownFilters into the bisected byte window
       // and still return exactly the filter's rows (every filter
@@ -208,8 +211,7 @@ object Genomic {
       // invisible). Oracle = the TEXT parse under the identical
       // containment predicate; VcfV2Spec pins the pruned byte counts.
       prep(s)
-      Vcf.readAuto(s, GenomicFixtures.regionVcfGzPath,
-        bgzfSplitThreshold = 0L)
+      Vcf.readAuto(s, GenomicFixtures.regionVcfGzPath)
         .where(col("chrom") === "1" && col("pos").between(20L, 60L))
         .withColumn("genotypes", array_join(col("genotypes"), ","))
     }),
@@ -479,11 +481,14 @@ object Genomic {
 
     "bam1_read" -> ((s, _) => {
       // BGZF/BAM binary source: the SAM fixture re-encoded by the repo's
-      // own BAM writer, decoded back through the streaming BGZF member
-      // chain + little-endian record walk; field parity with sam1 is the
-      // gate (the oracle parses the TEXT file independently). Flag/CIGAR
-      // decoration is Sam.decorate — byte decode is the only new code.
-      graft.sources.Bam.read(s, GenomicFixtures.bamPath(s))
+      // own BAM writer, decoded back whole (one range from offset 0, no
+      // alignment scan) through the BGZF member chain + little-endian
+      // record walk; field parity with sam1 is the gate (the oracle
+      // parses the TEXT file independently). Flag/CIGAR decoration is
+      // Sam.decorate — byte decode is the only new code.
+      val bam = GenomicFixtures.bamPath(s)
+      graft.sources.Bam.readTable(s, bam,
+        splitSize = GenomicFixtures.wholeFile(bam))
     }),
 
     "bam2_split" -> ((s, _) => {
@@ -493,7 +498,7 @@ object Genomic {
       // range inside the gate; oracle = the identical independent TEXT
       // parse, so heuristic mis-alignment of even one record fails the
       // hash.
-      graft.sources.Bam.readSplit(s, GenomicFixtures.bamPath(s),
+      graft.sources.Bam.readTable(s, GenomicFixtures.bamPath(s),
         splitSize = 256L)
     }),
 
@@ -511,7 +516,7 @@ object Genomic {
         graft.sources.Sam.read(s, sam).repartition(3),
         graft.sources.Sam.sqHeaders(s, sam).collect()
           .map(r => (r.getString(0), r.getLong(1))).toSeq, out)
-      graft.sources.Bam.readSplit(s, out, splitSize = 256L)
+      graft.sources.Bam.readTable(s, out, splitSize = 256L)
     }),
 
     "g8_reads_coverage" -> ((s, _) => {

@@ -1,9 +1,7 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, DataInputStream, EOFException,
-  InputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.GZIPInputStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col}
@@ -28,20 +26,19 @@ private[graft] case class BamRec(
   * Layout handled natively, no external libs:
   *  - BGZF: concatenated RFC-1952 gzip members, each carrying the BC
   *    extra subfield (SI 66,67; BSIZE = member length - 1) and capped at
-  *    64 KiB; a fixed 28-byte empty member marks EOF. Multi-member gzip
-  *    is exactly what the JDK's GZIPInputStream already decodes (it
-  *    skips FEXTRA and chains members, verifying each CRC32), so the
-  *    read side needs zero custom inflate code.
+  *    64 KiB; a fixed 28-byte empty member marks EOF. Records decode
+  *    through the member cursor ([[Bgzf.MemberCursor]]), which inflates
+  *    one CRC-verified member at a time.
   *  - BAM stream: "BAM\1", SAM-header text, reference dictionary, then
   *    little-endian records: fixed 32-byte prologue, NUL-terminated
   *    name, packed uint32 CIGAR ops ("MIDNSHP=X"), 4-bit nucleotides
   *    ("=ACMGRSVTWYHKDBN"), raw Phred quals (0xFF = absent), typed aux
   *    tags (A c C s S i I f Z H B).
   *
-  * Scale model, read side: one task per FILE ([[read]]: `binaryFiles`
-  * + a constant-memory streaming record iterator; real fleets arrive
-  * as one BAM per sample) OR byte-range in-file splits with no index
-  * ([[readSplit]], for the single-huge-file layout). Write side:
+  * Scale model, read side: one DSv2 relation ([[readTable]]) — byte-
+  * range in-file splits with no index, so both a fleet of per-sample
+  * BAMs and one huge BAM parallelize, with pushed region filters.
+  * Write side:
   * [[writeSharded]] — one valid BAM per partition, executor-side,
   * O(blockSize) task memory; [[write]] is the fixture-scale
   * single-file variant (driver collect, documented).
@@ -59,80 +56,32 @@ object Bam {
   private val CigarOps = "MIDNSHP=X"
 
   // -------------------------------------------------------------- read
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val recs = spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, pds) => records(pds.open()) }
-    Sam.decorate(recs.toDS().toDF())
-  }
-
-  // ---------------------------------------------------- splittable read
-  /** Byte-range splittable BAM read — one huge BAM parallelizes across
-    * tasks WITHOUT a .bai/splitting index. Two-layer alignment (the
-    * spark-bam / Hadoop-BAM idea, rebuilt on this repo's BGZF
-    * machinery):
+  /** The BAM read: a DSv2 relation ([[BamBgzfSource]]) over files,
+    * directories and globs, wrapped in [[Sam.decorate]], one partition
+    * per `splitSize` byte range per file — one huge BAM parallelizes
+    * WITHOUT a .bai/splitting index. Two-layer alignment (the spark-bam
+    * / Hadoop-BAM idea, rebuilt on this repo's BGZF machinery):
     *
     *  1. container: anchor each range at its first signature-verified
     *     BGZF member start (18 fixed-layout bytes, BSIZE-chained —
     *     [[Bgzf]]);
     *  2. records: BAM records carry no sync marker and legally span
     *     members, so the range scans its inflated stream byte-by-byte
-    *     for a PLAUSIBLE record start — block_size bounds, refID/
-    *     next_refID within the reference dictionary, positions sane,
-    *     read-name length/printability/NUL placement, fixed-section
-    *     arithmetic fitting block_size — and requires a CHAIN of 3
-    *     further plausible records before accepting. Each check is
-    *     ~30 bits of constraint, so a payload byte pattern surviving a
-    *     4-record chain is ~2^-100 per offset — practically impossible
-    *     to mis-anchor; the per-file [[read]] stays available where
-    *     even that is unacceptable.
+    *     for a PLAUSIBLE record start ([[plausibleChain]]) and requires
+    *     a CHAIN of 3 further plausible records before accepting — a
+    *     payload byte pattern surviving it is ~2^-100 per offset.
     *
     * Ownership: a record belongs to the range in whose byte span its
     * first byte's MEMBER starts; the last owned record completes by
-    * inflating into the next range's members, and the next range's
-    * scan lands on the following record start. The reference
-    * dictionary is re-read from the file head by every task (one or
-    * two members — negligible against a multi-GB scan).
-    */
-  def readSplit(spark: SparkSession, path: String,
-                splitSize: Long = 32L << 20): DataFrame =
-    readSplitGuarded(spark, path, splitSize)._1
-
-  /** [[readSplit]] plus its alignment accumulator ([[Bgzf.AlignGuard]]):
-    * after the read's first action the accumulator holds the number of
-    * ranges that anchored members but aligned no owned record —
-    * nonzero on a corrupt payload (or records larger than splitSize).
-    */
-  private[graft] def readSplitGuarded(spark: SparkSession, path: String,
-      splitSize: Long = 32L << 20)
-    : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val guard = Bgzf.alignGuard(spark, "graft.bam.unaligned.ranges")
-    case class R(path: String, start: Long, end: Long, len: Long)
-    val ranges = Bgzf.resolveFiles(spark, path).flatMap { case (fp, len) =>
-      val n = math.max(1L, (len + splitSize - 1) / splitSize)
-      (0L until n).map(i => R(fp, i * splitSize,
-        math.min((i + 1) * splitSize, len), len))
-    }
-    val hconf = new org.apache.spark.SerializableWritable(
-      new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration))
-    val recs = sc.parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { r =>
-        val rp = new org.apache.hadoop.fs.Path(r.path)
-        val in = rp.getFileSystem(hconf.value).open(rp)
-        Bgzf.closeOnTaskEnd(in)
-        splitRangeRecords(in, r.path, r.start, r.end, r.len, guard)
-      }
-    (Sam.decorate(recs.toDS().toDF()), guard.acc)
-  }
-
-  /** The DSv2 relation over sorted BAM ([[BamBgzfSource]]) wrapped in
-    * [[Sam.decorate]]: same rows as [[readSplit]], plus automatic
-    * region pruning — a `WHERE rname = '17' AND pos BETWEEN a AND b`
-    * pushes through the decoration projection into the scan and routes
-    * to the same per-file record-alignment bisection [[readRegion]]
-    * plans.
+    * inflating into the next range's members. A range at offset 0
+    * reads straight after the reference dictionary with no scan, so
+    * `splitSize` >= the file length reads each file whole on one task.
+    * Every task re-reads the dictionary from the file head.
+    *
+    * Region pruning is automatic: a `WHERE rname = '17' AND pos BETWEEN
+    * a AND b` pushes through the decoration projection into the scan
+    * and routes to the same per-file record-alignment bisection
+    * [[readRegion]] plans.
     */
   def readTable(spark: SparkSession, path: String,
                 splitSize: Long = 32L << 20): DataFrame =
@@ -219,7 +168,7 @@ object Bam {
     * file.bam chr:start-end` semantics (reads OVERLAPPING the region)
     * without a .bai and without scanning the file: [[Bgzf.searchWindow]]
     * bisects the member chain with probes that align the first record
-    * OWNED by a member via the [[readSplit]] plausible-chain machinery
+    * OWNED by a member via the [[readTable]] plausible-chain machinery
     * and read its (refID, pos) prologue — the dictionary index is the
     * sort rank natively. Overlap (not containment) means a read can
     * START before the region and span into it, so the lower search
@@ -273,38 +222,17 @@ object Bam {
       .where(inAny)
   }
 
-  /** [[readRegions]] with the panel carried as an interval FRAME (the
-    * [[Bed.toIntervals]] shape) — the [[Vcf.readPanel]] contract under
-    * samtools overlap semantics.
-    */
-  def readPanel(spark: SparkSession, path: String, panel: DataFrame,
-                maxSpan: Long = 1L << 20, splitSize: Long = 32L << 20,
-                maxRegions: Int = 100000): DataFrame =
-    readRegions(spark, path, Vcf.collectPanel(panel, maxRegions),
-      maxSpan, splitSize)
-
-  /** Driver-side byte plan of [[readRegions]]: per (file, region)
-    * bisected windows, merged per file. Package-visible for the probe-
-    * count/window-size spec pins.
+  /** Driver-side byte plan of [[readRegions]] ([[Bgzf.binaryRegionPlan]]
+    * over [[planFile]]). Package-visible for the probe-count/window-size
+    * spec pins.
     */
   private[graft] def regionPlan(spark: SparkSession, path: String,
                                 regions: Seq[(String, Long, Long)],
-                                maxSpan: Long): Vcf.RegionPlan = {
-    val files = Bgzf.resolveFiles(spark, path)
-    val useIndex =
-      spark.conf.get("spark.graft.useIndex", "true").toBoolean
-    // per-file planning (header decode + bisections) is independent —
-    // Bgzf.planFiles fans out across bounded driver threads, or as a
-    // small Spark job past the distribute threshold, recombined in
-    // file order for a deterministic plan
-    val perFile = Bgzf.planFiles(spark, files, regions.size) {
-      (conf, fp, len, _) =>
+                                maxSpan: Long): Vcf.RegionPlan =
+    Bgzf.binaryRegionPlan(spark, path, regions.size) {
+      (conf, fp, len, useIndex) =>
         planFile(conf, fp, len, regions, maxSpan, useIndex)
     }
-    val windows = perFile.flatten
-    Vcf.RegionPlan(Bgzf.mergeWindows(windows), Seq.empty,
-      windows.map(_.probes).sum)
-  }
 
   /** Build `path.bai` (SAM spec §5.2) in one streaming pass over the
     * record wire — the `samtools index` operation for the repo's own
@@ -565,48 +493,6 @@ object Bam {
   }
 
 
-  /** Streaming record iterator over one BAM file's bytes. Package-
-    * visible for byte-level spec tests.
-    */
-  private[graft] def records(raw: InputStream): Iterator[BamRec] = {
-    val in = new DataInputStream(new GZIPInputStream(raw, 65536))
-    def bytes(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n); in.readFully(b); b
-    }
-    def le(n: Int): ByteBuffer =
-      ByteBuffer.wrap(bytes(n)).order(ByteOrder.LITTLE_ENDIAN)
-    val magic = bytes(4)
-    require(magic(0) == 'B' && magic(1) == 'A' && magic(2) == 'M' &&
-      magic(3) == 1, "not a BAM stream (bad magic)")
-    val lText = le(4).getInt
-    bytes(lText) // SAM header text: the dictionary below is authoritative
-    val nRef = le(4).getInt
-    val refs = Array.tabulate(nRef) { _ =>
-      val lName = le(4).getInt
-      val name = new String(bytes(lName), 0, lName - 1, "US-ASCII")
-      le(4).getInt // l_ref, unused on read
-      name
-    }
-    new Iterator[BamRec] {
-      private var nextRec: BamRec = _
-      private var done = false
-      advance()
-      private def advance(): Unit = {
-        // block_size or clean EOF (the BGZF EOF member yields 0 bytes)
-        val b0 = in.read()
-        if (b0 < 0) { nextRec = null; done = true; in.close(); return }
-        val rest = bytes(3)
-        val blockSize = (b0 & 0xff) | ((rest(0) & 0xff) << 8) |
-          ((rest(1) & 0xff) << 16) | ((rest(2) & 0xff) << 24)
-        nextRec = decodeRecord(le(blockSize), refs)
-      }
-      override def hasNext: Boolean = !done
-      override def next(): BamRec = {
-        val r = nextRec; advance(); r
-      }
-    }
-  }
-
   private def decodeRecord(b: ByteBuffer, refs: Array[String]): BamRec = {
     val refId = b.getInt
     val pos0 = b.getInt
@@ -781,8 +667,8 @@ object Bam {
     * partitioning (repartition by sample, sortWithinPartitions by
     * coordinate, ...) — the [[Vcf.writeVariants]] contract applied to
     * the binary container. Every shard carries the same header and its
-    * own EOF member, so the directory reads back through [[read]] /
-    * [[readSplit]] unchanged, and shards also concatenate into one
+    * own EOF member, so the directory reads back through [[readTable]]
+    * unchanged, and shards also concatenate into one
     * legal BGZF stream. Shards commit by atomic rename from
     * attempt-scoped temps ([[Bgzf.writeShards]]), so task retries AND
     * concurrent attempts (speculation, zombies after a stage retry)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, DataInputStream, InputStream}
+import java.io.{ByteArrayOutputStream, DataInputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.GZIPInputStream
 
@@ -22,8 +22,9 @@ private[graft] case class BcfRec(
   * text, so this row is an extension like src_bam). No external libs.
   *
   * Layout handled natively:
-  *  - container: BGZF (see [[Bgzf]]/[[Bam]]) — the JDK's multi-member
-  *    GZIPInputStream chains the members on read;
+  *  - container: BGZF (see [[Bgzf]]/[[Bam]]) — records decode through
+  *    the member cursor ([[Bgzf.MemberCursor]]) and legally span
+  *    members;
   *  - "BCF\2\2", uint32 header length, VCF-text header whose ##contig /
   *    ##FILTER/##INFO/##FORMAT lines ARE the binary dictionaries
   *    (implicit IDX = order of first appearance; "PASS" always 0);
@@ -49,11 +50,11 @@ private[graft] case class BcfRec(
   * FORMAT values with ':' (GT decoded to `a|b`/`a/b`, '.' for missing,
   * vector-end trimming for mixed ploidy).
   *
-  * Scale model: identical to [[Bam]] — per-file tasks ([[read]]) or
-  * index-free byte-range in-file splits ([[readSplit]]) on the read
-  * side; executor-side per-partition shards ([[writeSharded]], shared
-  * distributed-pass dictionary) or the fixture-scale single file
-  * ([[write]]) on the write side.
+  * Scale model: identical to [[Bam]] — one DSv2 relation
+  * ([[readTable]]: index-free byte-range splits, pushed region filters)
+  * on the read side; executor-side per-partition shards
+  * ([[writeSharded]], shared distributed-pass dictionary) or the
+  * fixture-scale single file ([[write]]) on the write side.
   */
 object Bcf {
 
@@ -61,72 +62,22 @@ object Bcf {
   private val FloatEnd = 0x7f800002
 
   // -------------------------------------------------------------- read
-  def read(spark: SparkSession, path: String,
-           afFields: Seq[String] = Vcf.defaultAfFields): DataFrame = {
-    import spark.implicits._
-    val recs = spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, pds) => records(pds.open()) }
-    recs.toDS().toDF()
-      .withColumn("af",
-        coalesce(afFields.map(k => Vcf.infoField(col("info"), k)): _*))
-  }
-
-  // ---------------------------------------------------- splittable read
-  /** Byte-range splittable BCF read — the [[Bam.readSplit]] two-layer
-    * alignment applied to BCF2 records: ranges anchor at a signature-
-    * verified BGZF member start, then scan the inflated stream for a
-    * plausible record start. BCF validation is even stronger than
-    * BAM's: besides l_shared/l_indiv bounds, contig-index and position
-    * sanity and allele/INFO/FORMAT count bounds, the record's 24-bit
-    * n_sample must EQUAL the header's sample count exactly — with a
-    * 4-record chain a payload collision surviving is ~2^-120 per
-    * offset. Ownership/tail rules identical to BAM's; every task
-    * re-reads the header members (metadata-scale).
-    */
-  def readSplit(spark: SparkSession, path: String,
-                splitSize: Long = 32L << 20,
-                afFields: Seq[String] = Vcf.defaultAfFields): DataFrame =
-    readSplitGuarded(spark, path, splitSize, afFields)._1
-
-  /** [[readSplit]] plus its alignment accumulator ([[Bgzf.AlignGuard]]):
-    * after the read's first action the accumulator holds the number of
-    * ranges that anchored members but aligned no owned record —
-    * nonzero on a corrupt payload (or records larger than splitSize).
-    */
-  private[graft] def readSplitGuarded(spark: SparkSession, path: String,
-      splitSize: Long = 32L << 20,
-      afFields: Seq[String] = Vcf.defaultAfFields)
-    : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val guard = Bgzf.alignGuard(spark, "graft.bcf.unaligned.ranges")
-    case class R(path: String, start: Long, end: Long, len: Long)
-    val ranges = Bgzf.resolveFiles(spark, path).flatMap { case (fp, len) =>
-      val n = math.max(1L, (len + splitSize - 1) / splitSize)
-      (0L until n).map(i => R(fp, i * splitSize,
-        math.min((i + 1) * splitSize, len), len))
-    }
-    val hconf = new org.apache.spark.SerializableWritable(
-      new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration))
-    val recs = sc.parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { r =>
-        val rp = new org.apache.hadoop.fs.Path(r.path)
-        val in = rp.getFileSystem(hconf.value).open(rp)
-        Bgzf.closeOnTaskEnd(in)
-        splitRangeRecords(in, r.path, r.start, r.end, r.len, guard)
-      }
-    (recs.toDS().toDF()
-      .withColumn("af",
-        coalesce(afFields.map(k => Vcf.infoField(col("info"), k)): _*)),
-      guard.acc)
-  }
-
-  /** The DSv2 relation over sorted BCF ([[BcfBgzfSource]]): same rows
-    * as [[readSplit]], plus automatic region pruning — a `WHERE chrom
-    * = '17' AND pos BETWEEN a AND b` routes through
-    * `SupportsPushDownFilters` into the same per-file record-alignment
-    * bisection [[readRegion]] plans. [[Vcf.readAuto]] returns this for
-    * `.bcf` paths.
+  /** The BCF read: a DSv2 relation ([[BcfBgzfSource]]) over files,
+    * directories and globs, one partition per `splitSize` byte range
+    * per file. A range anchors at its first signature-verified BGZF
+    * member start, then scans the inflated stream for a plausible record
+    * start — l_shared/l_indiv bounds, contig-index and position sanity,
+    * allele count, and the record's 24-bit n_sample EQUAL to the
+    * header's sample count, over a 4-record chain (a payload collision
+    * survives at ~2^-120 per offset). A range at offset 0 reads straight
+    * from the header with no alignment scan, so `splitSize` >= the file
+    * length reads each file whole on one task. Every task re-reads the
+    * metadata-scale header members.
+    *
+    * Region pruning is automatic: a `WHERE chrom = '17' AND pos BETWEEN
+    * a AND b` routes through `SupportsPushDownFilters` into the same
+    * per-file record-alignment bisection [[readRegion]] plans.
+    * [[Vcf.readAuto]] returns this for BCF input.
     */
   def readTable(spark: SparkSession, path: String,
                 afFields: Seq[String] = Vcf.defaultAfFields,
@@ -164,15 +115,15 @@ object Bcf {
     *   dropped from the cursor, no typed-vector decode, no per-sample
     *   string assembly — the dominant per-record cost on cohort BCFs)
     *   and the record carries an empty genotype seq the caller never
-    *   reads. The DSv2 scan route ([[BcfBgzfReaderFactory]]) is the
-    *   only caller that passes false; the full-row readers keep the
-    *   default.
+    *   reads. The one caller is the DSv2 partition reader
+    *   ([[BcfBgzfReaderFactory]]), which passes its pruned schema's
+    *   answer.
     */
   private[sources] def splitRangeRecords(
       in: org.apache.hadoop.fs.FSDataInputStream, path: String,
       start: Long, end: Long, len: Long,
       guard: Bgzf.AlignGuard,
-      needGenotypes: Boolean = true): Iterator[BcfRec] = {
+      needGenotypes: Boolean): Iterator[BcfRec] = {
     val (head, contigs, strings, nSamples) = headerCursor(in, len)
     if (start == 0L)
       return recordIterator(head, end, contigs, strings, needGenotypes)
@@ -196,7 +147,7 @@ object Bcf {
   private def recordIterator(cur: Bgzf.MemberCursor, end: Long,
                              contigs: Array[String],
                              strings: Array[String],
-                             needGenotypes: Boolean = true)
+                             needGenotypes: Boolean)
     : Iterator[BcfRec] =
     new Iterator[BcfRec] {
       private var nextRec: BcfRec = _
@@ -223,7 +174,7 @@ object Bcf {
     }
 
   /** `depth` chained plausible BCF record starts at the cursor head.
-    * Bounds sit at spec maxima (the [[Bam.readSplit]] rationale):
+    * Bounds sit at spec maxima (the [[Bam.plausibleChain]] rationale):
     * positions/rlen are legal to 2^31-1 and block sizes to uint32, so
     * magnitude caps tighter than the spec would silently drop a range
     * whose true anchor they reject; the plausibility bits come from the
@@ -261,7 +212,7 @@ object Bcf {
   /** Region read of a coordinate-sorted BCF — [[Vcf.readRegion]]'s
     * contract on the binary container: a driver-side binary search over
     * the BGZF member chain ([[Bgzf.searchWindow]]) whose probes align
-    * the first record OWNED by a member via the [[readSplit]]
+    * the first record OWNED by a member via the [[readTable]]
     * plausible-chain machinery and read its (contig-index, pos) —
     * records carry the dictionary index natively, so the sort rank
     * needs no header convention. Only the matched byte window decodes;
@@ -320,39 +271,17 @@ object Bcf {
       .where(inAny)
   }
 
-  /** [[readRegions]] with the panel carried as an interval FRAME (the
-    * [[Bed.toIntervals]] shape) — the [[Vcf.readPanel]] contract on the
-    * binary container.
-    */
-  def readPanel(spark: SparkSession, path: String, panel: DataFrame,
-                afFields: Seq[String] = Vcf.defaultAfFields,
-                splitSize: Long = 32L << 20, maxSpan: Long = 10000L,
-                maxRegions: Int = 100000): DataFrame =
-    readRegions(spark, path, Vcf.collectPanel(panel, maxRegions),
-      afFields, splitSize, maxSpan)
-
-  /** Driver-side byte plan of [[readRegions]]: per (file, region)
-    * bisected windows, merged per file. Package-visible for the probe-
-    * count/window-size spec pins.
+  /** Driver-side byte plan of [[readRegions]] ([[Bgzf.binaryRegionPlan]]
+    * over [[planFile]]). Package-visible for the probe-count/window-size
+    * spec pins.
     */
   private[graft] def regionPlan(spark: SparkSession, path: String,
                                 regions: Seq[(String, Long, Long)],
-                                maxSpan: Long): Vcf.RegionPlan = {
-    val files = Bgzf.resolveFiles(spark, path)
-    val useIndex =
-      spark.conf.get("spark.graft.useIndex", "true").toBoolean
-    // per-file planning (header decode + bisections) is independent —
-    // Bgzf.planFiles fans out across bounded driver threads, or as a
-    // small Spark job past the distribute threshold, recombined in
-    // file order for a deterministic plan
-    val perFile = Bgzf.planFiles(spark, files, regions.size) {
-      (conf, fp, len, _) =>
+                                maxSpan: Long): Vcf.RegionPlan =
+    Bgzf.binaryRegionPlan(spark, path, regions.size) {
+      (conf, fp, len, useIndex) =>
         planFile(conf, fp, len, regions, maxSpan, useIndex)
     }
-    val windows = perFile.flatten
-    Vcf.RegionPlan(Bgzf.mergeWindows(windows), Seq.empty,
-      windows.map(_.probes).sum)
-  }
 
   /** Build `path.csi` (the CSI spec, min_shift 14 / depth 5 — what
     * `bcftools index` writes for BCF) in one streaming pass over the
@@ -431,8 +360,8 @@ object Bcf {
       val sin = fs.open(p)
       try {
         // first owned record key at member `m`: byte-scan alignment
-        // from the member's first byte (the readSplit ownership
-        // rule), then the record prologue's (chrom-index, 1-based
+        // from the member's first byte (the partition readers'
+        // ownership rule), then the record prologue's (chrom-index, 1-based
         // pos). Memoized per member — a panel's searches all start
         // at the same midpoint members.
         val probeMemo =
@@ -515,43 +444,6 @@ object Bcf {
         .map(_.stripSuffix("\r").split("\t").drop(9).toSeq)
         .getOrElse(Seq.empty)
     } finally in.close()
-  }
-
-  /** Streaming record iterator over one BCF file's bytes. Package-
-    * visible for byte-level spec tests.
-    */
-  private[graft] def records(raw: InputStream): Iterator[BcfRec] = {
-    val in = new DataInputStream(new GZIPInputStream(raw, 65536))
-    def bytes(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n); in.readFully(b); b
-    }
-    def le(n: Int): ByteBuffer =
-      ByteBuffer.wrap(bytes(n)).order(ByteOrder.LITTLE_ENDIAN)
-    val magic = bytes(5)
-    require(magic(0) == 'B' && magic(1) == 'C' && magic(2) == 'F' &&
-      magic(3) == 2, "not a BCF2 stream (bad magic)")
-    val lText = le(4).getInt
-    val headerText = new String(bytes(lText), "US-ASCII")
-    val (contigs, strings) = parseHeaderDicts(headerText)
-    new Iterator[BcfRec] {
-      private var nextRec: BcfRec = _
-      private var done = false
-      advance()
-      private def advance(): Unit = {
-        val b0 = in.read()
-        if (b0 < 0) { nextRec = null; done = true; in.close(); return }
-        val rest = bytes(7)
-        val lShared = (b0 & 0xff) | ((rest(0) & 0xff) << 8) |
-          ((rest(1) & 0xff) << 16) | ((rest(2) & 0xff) << 24)
-        val lIndiv = (rest(3) & 0xff) | ((rest(4) & 0xff) << 8) |
-          ((rest(5) & 0xff) << 16) | ((rest(6) & 0xff) << 24)
-        nextRec = decodeRecord(le(lShared), le(lIndiv), contigs, strings)
-      }
-      override def hasNext: Boolean = !done
-      override def next(): BcfRec = {
-        val r = nextRec; advance(); r
-      }
-    }
   }
 
   /** The implicit-IDX dictionaries from the embedded VCF-text header:

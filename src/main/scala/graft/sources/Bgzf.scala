@@ -11,15 +11,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * member length − 1) and capped at 64 KiB, terminated by a fixed
   * 28-byte empty member. Because every member is a complete gzip
   * stream, BGZF files read through ANY spec-complete multi-member gzip
-  * inflater — the JDK's GZIPInputStream ([[Bam.records]]) and Hadoop's
-  * gzip codec (so `spark.read.text("x.vcf.gz")` just works; BamSpec
-  * pins a 943-member file chaining correctly through both).
+  * inflater — the JDK's GZIPInputStream and Hadoop's gzip codec (so
+  * `spark.read.text("x.vcf.gz")` just works; BamSpec pins a 943-member
+  * file chaining correctly through both).
   *
-  * [[readLines]] goes further: BGZF was DESIGNED for random access, so
-  * unlike plain gzip a single huge `.vcf.gz` need not read on one task
-  * — byte-range splits each scan forward to a verified member
-  * signature and inflate only their own members (the Hadoop-BAM /
-  * spark-bam splitting idea, rebuilt Spark-first for text payloads).
+  * The DSv2 relations ([[VcfBgzfSource]], [[BcfBgzfSource]],
+  * [[BamBgzfSource]]) go further: BGZF was DESIGNED for random access,
+  * so unlike plain gzip a single huge `.vcf.gz` need not read on one
+  * task — byte-range partitions each scan forward to a verified member
+  * signature and inflate only their own members ([[rangeLines]] for
+  * text, [[MemberCursor]] for the binary records; the Hadoop-BAM /
+  * spark-bam splitting idea, rebuilt Spark-first).
   */
 object Bgzf {
 
@@ -92,11 +94,11 @@ object Bgzf {
     ((b(i + 16) & 0xff) | ((b(i + 17) & 0xff) << 8)) + 1
 
   /** One task's byte range of one file. */
-  private[sources] case class Range(path: String, start: Long, end: Long,
-                                    len: Long)
+  private[graft] case class Range(path: String, start: Long, end: Long,
+                                  len: Long)
 
-  /** [[rangeLines]] for sibling sources ([[Vcf.readRegions]]). */
-  private[sources] def rangeLinesOf(
+  /** [[rangeLines]] for the VCF relation's partition reader. */
+  private[graft] def rangeLinesOf(
       in: org.apache.hadoop.fs.FSDataInputStream,
       r: Range): Iterator[String] = rangeLines(in, r)
 
@@ -150,46 +152,8 @@ object Bgzf {
     out
   }
 
-  /** Line-splittable read of BGZF text files: one task per `splitSize`
-    * byte range per file (vs Hadoop's one-task-per-gzip-file), each
-    * scanning forward to a signature-verified member start and
-    * inflating only members that START inside the range. Standard text
-    * split semantics on the inflated stream: every range but a file's
-    * first skips through its first newline and the last owned line
-    * completes by reading into the next range's members; the
-    * owned-bytes-end-exactly-at-'\n' boundary (where naive skipping
-    * loses a line) is resolved LOCALLY by back-scanning the member
-    * chain preceding the range's first member and checking whether its
-    * final inflated byte is the newline. Member-start detection double-
-    * verifies each signature by chaining BSIZE to the next header, so
-    * a payload byte-pattern collision cannot mis-anchor a split.
-    *
-    * Returns one `value` column of lines — `spark.read.text` shape, so
-    * [[Vcf.parseLines]] (or any text consumer) runs unchanged.
-    * BGZF only: plain single-member gzip fails the header check loudly
-    * rather than mis-splitting.
-    */
-  def readLines(spark: SparkSession, path: String,
-                splitSize: Long = 32L << 20): DataFrame = {
-    val sc = spark.sparkContext
-    val ranges = resolveFiles(spark, path).flatMap { case (fp, len) =>
-      val n = math.max(1L, (len + splitSize - 1) / splitSize)
-      (0L until n).map(i => Range(fp, i * splitSize,
-        math.min((i + 1) * splitSize, len), len))
-    }
-    val hconf = new org.apache.spark.SerializableWritable(
-      new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration))
-    linesDf(spark, sc.parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { r =>
-        val rp = new org.apache.hadoop.fs.Path(r.path)
-        val in = rp.getFileSystem(hconf.value).open(rp)
-        closeOnTaskEnd(in)
-        rangeLines(in, r)
-      })
-  }
-
   /** Expand a path/glob/directory into its member FILES (one level —
-    * the [[readLines]]/[[Bcf.readSplit]]/[[Bam.readSplit]] rule) as
+    * the rule every DSv2 relation and region planner lists by) as
     * (path, length) pairs, sorted by path for deterministic planning.
     * A single-file path resolves to itself; a missing path throws.
     * Directory LISTINGS skip hidden files (`_`/`.` prefixes — the
@@ -252,24 +216,17 @@ object Bgzf {
     b
   }
 
-  /** True when `path` resolves to a single file that starts with a
-    * BGZF member signature AND exceeds `minBytes` — the driver-side
-    * peek [[Vcf.readAuto]] uses to pick the splittable path. Globs/
-    * directories answer false (a sharded layout already parallelizes
-    * per file).
+  /** True when `path` is a single file that starts with a BGZF member
+    * signature — the driver-side peek the VCF relation and region
+    * planner use to tell BGZF from plain text. Globs/directories answer
+    * false.
     */
-  private[sources] def isBgzfOver(spark: SparkSession, path: String,
-                                  minBytes: Long): Boolean =
-    isBgzfOver(spark.sparkContext.hadoopConfiguration, path, minBytes)
-
-  private[sources] def isBgzfOver(
-      conf: org.apache.hadoop.conf.Configuration, path: String,
-      minBytes: Long): Boolean =
+  private[sources] def isBgzf(conf: org.apache.hadoop.conf.Configuration,
+                              path: String): Boolean =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      if (!st.isFile || st.getLen <= minBytes) return false
+      if (!fs.getFileStatus(p).isFile) return false
       val in = fs.open(p)
       try {
         val hdr = new Array[Byte](18)
@@ -399,17 +356,18 @@ object Bgzf {
     }
   }
 
-  /** Alignment honesty channel for the splittable binary readers: a
-    * byte range that anchors a verified BGZF member chain but aligns NO
-    * owned record emits nothing — legal when the range's members hold
-    * only the interior of a record that started earlier (common at
-    * test-sized splits, vanishing at the 32 MiB default), but on a
-    * corrupt payload it is silent per-range data loss. Every such range
-    * counts into a named accumulator (visible in the Spark UI / fetched
-    * by [[Bam.readSplitGuarded]]-style internals after the first
-    * action); with `spark.graft.strictAlign=true` the task THROWS
-    * instead — opt-in, because legal spanning records trigger it when
-    * records approach splitSize.
+  /** Alignment honesty channel for the binary relations' partition
+    * readers: a byte range that anchors a verified BGZF member chain but
+    * aligns NO owned record emits nothing — legal when the range's
+    * members hold only the interior of a record that started earlier
+    * (common at test-sized splits, vanishing at the 32 MiB default), but
+    * on a corrupt payload it is silent per-range data loss. Every such
+    * range counts into a named accumulator (`graft.bcf.unaligned.ranges`
+    * / `graft.bam.unaligned.ranges`, one per scan — visible in the Spark
+    * UI and in each stage's accumulables); with
+    * `spark.graft.strictAlign=true` the task THROWS instead — opt-in,
+    * because legal spanning records trigger it when records approach
+    * splitSize.
     */
   private[sources] case class AlignGuard(
       acc: org.apache.spark.util.LongAccumulator,
@@ -428,7 +386,7 @@ object Bgzf {
     AlignGuard(spark.sparkContext.longAccumulator(name),
       spark.conf.get("spark.graft.strictAlign", "false").toBoolean)
 
-  /** [[scanMember]] for sibling container readers ([[Bam.readSplit]]). */
+  /** [[scanMember]] for the sibling container decoders and planners. */
   private[sources] def firstMemberIn(
       in: org.apache.hadoop.fs.FSDataInputStream, from: Long, to: Long,
       len: Long): Long = scanMember(in, from, to, len)
@@ -736,6 +694,27 @@ object Bgzf {
     }
   }
 
+  /** Driver-side byte plan of a BINARY container's region read (BCF,
+    * BAM): `planFile(conf, path, len, useIndex)` plans one file — its
+    * header decode plus a sidecar lookup or per-region bisections —
+    * fanned out by [[planFiles]] and recombined in file order, so the
+    * plan is deterministic; the windows merge per file. Binary contig
+    * dictionaries are closed, so no file ever falls back to a full
+    * scan.
+    */
+  private[sources] def binaryRegionPlan(spark: SparkSession, path: String,
+      nRegions: Int)(
+      planFile: (org.apache.hadoop.conf.Configuration, String, Long,
+        Boolean) => Seq[FileWindow]): Vcf.RegionPlan = {
+    val useIndex =
+      spark.conf.get("spark.graft.useIndex", "true").toBoolean
+    val windows = planFiles(spark, resolveFiles(spark, path), nRegions) {
+      (conf, fp, len, _) => planFile(conf, fp, len, useIndex)
+    }.flatten
+    Vcf.RegionPlan(mergeWindows(windows), Seq.empty,
+      windows.map(_.probes).sum)
+  }
+
   /** [[regionWindow]] for a LIST of key ranges over one file — the
     * multi-region planner's driver-side hot path, three levers:
     * per-member MEMOIZATION of both probe kinds (a panel's searches
@@ -924,36 +903,6 @@ object Bgzf {
         }.reverse
     }
 
-  /** Tile each window's `[fromByte, toByte)` of its file into
-    * `splitSize` ranges and run `f(in, start, end, fileLen)` per range
-    * on the executors, the stream closed at task completion regardless
-    * of consumption — the shared emission scaffold of
-    * [[readLinesRegion]] and the Bam/Bcf region reads. Zero-span
-    * windows are skipped.
-    */
-  private[graft] def scanWindows[T](spark: SparkSession,
-      windows: Seq[FileWindow], splitSize: Long)(
-      f: (org.apache.hadoop.fs.FSDataInputStream, Range) =>
-        Iterator[T])(implicit ct: scala.reflect.ClassTag[T])
-    : org.apache.spark.rdd.RDD[T] = {
-    val sc = spark.sparkContext
-    val ranges = windows.filter(w => w.toByte > w.fromByte).flatMap { w =>
-      val span = w.toByte - w.fromByte
-      val n = math.max(1L, (span + splitSize - 1) / splitSize)
-      (0L until n).map(i => Range(w.path,
-        w.fromByte + i * splitSize,
-        math.min(w.fromByte + (i + 1) * splitSize, w.toByte), w.fileLen))
-    }
-    val hconf = new org.apache.spark.SerializableWritable(
-      new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration))
-    sc.parallelize(ranges, math.max(1, ranges.size)).flatMap { r =>
-      val rp = new org.apache.hadoop.fs.Path(r.path)
-      val in = rp.getFileSystem(hconf.value).open(rp)
-      closeOnTaskEnd(in)
-      f(in, r)
-    }
-  }
-
   /** The [[regionWindow]] bisection, generic over the record grammar:
     * `nextMember(mid)` = first verified member start at or after `mid`
     * (or -1), `firstOwnedKey(m)` = sort key of the first record OWNED
@@ -990,26 +939,6 @@ object Bgzf {
     val (fromByte, _, p1) = search(fromKey)
     val (_, toByte, p2) = search(toKey + 1)
     RegionWindow(fromByte, math.max(toByte, fromByte), p1 + p2)
-  }
-
-  /** [[readLines]] restricted to the [[regionWindow]] byte window for
-    * key range [fromKey, toKey]: only members inside the window (plus
-    * the O(log n) probe members) are ever inflated, so a
-    * chr17:41.1M-41.3M slice of a 100 GB cohort `.vcf.gz` costs the
-    * slice, not the file. The window still yields a bounded overhang of
-    * out-of-range lines — callers re-filter on the parsed columns.
-    */
-  def readLinesRegion(spark: SparkSession, path: String,
-                      keyOf: String => Option[Long],
-                      fromKey: Long, toKey: Long,
-                      splitSize: Long = 32L << 20): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val len = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getLen
-    val w = regionWindow(spark, path, keyOf, fromKey, toKey)
-    linesDf(spark, scanWindows(spark,
-      Seq(FileWindow(path, len, w.fromByte, w.toByte, w.probes)),
-      splitSize)((in, r) => rangeLines(in, r)))
   }
 
   /** Wrap an RDD of raw lines in the `spark.read.text` single-`value`

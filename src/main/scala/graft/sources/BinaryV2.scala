@@ -26,12 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * deterministic projection, so Catalyst pushes rname/pos filters
   * straight through it into the scan.
   *
-  * The partition readers decode through the exact splitRangeRecords
-  * machinery the splittable readers use (same alignment guard), then
-  * convert records to InternalRows under
-  * `SupportsPushDownRequiredColumns` pruning. Row parity with
-  * readSplit is spec-pinned (BinaryV2Spec) and gate-pinned against the
-  * independent DuckDB text parses (g59b/g59c).
+  * These relations are the only scan engine of the binary containers:
+  * their partition readers are the one place the record decoders
+  * (`Bcf.splitRangeRecords`/`Bam.splitRangeRecords`, with the
+  * unaligned-range guard) run, converting records to InternalRows under
+  * `SupportsPushDownRequiredColumns` pruning. Split-size parity with
+  * the whole-file read is spec-pinned (BcfSpec, BamSpec, BinaryV2Spec)
+  * and gate-pinned against the independent DuckDB text parses
+  * (bcf1/bcf2, bam1/bam2, g59b/g59c).
   */
 private[sources] object BgzfPush {
 
@@ -255,17 +257,21 @@ private[sources] object BgzfPush {
       }
     }
 
-  /** Tile planned windows into byte-range partitions. */
+  /** Tile planned windows into byte-range partitions of at most
+    * `splitSize` bytes. Bounds step by the remaining span, so a
+    * `splitSize` up to Long.MaxValue (the one-range-per-file idiom)
+    * cannot overflow an offset.
+    */
   def tile(windows: Seq[Bgzf.FileWindow],
-           splitSize: Long): Array[InputPartition] =
+           splitSize: Long): Array[InputPartition] = {
+    require(splitSize > 0, s"splitSize must be > 0, got $splitSize")
     windows.filter(w => w.toByte > w.fromByte).flatMap { w =>
-      val span = w.toByte - w.fromByte
-      val n = math.max(1L, (span + splitSize - 1) / splitSize)
-      (0L until n).map(i => BgzfScanPartition(w.path,
-        w.fromByte + i * splitSize,
-        math.min(w.fromByte + (i + 1) * splitSize, w.toByte),
-        w.fileLen))
+      def endOf(start: Long) =
+        if (w.toByte - start <= splitSize) w.toByte else start + splitSize
+      Iterator.iterate(w.fromByte)(endOf).takeWhile(_ < w.toByte)
+        .map(s => BgzfScanPartition(w.path, s, endOf(s), w.fileLen))
     }.toArray
+  }
 
   /** Windows (or whole files when no disjunct is usable) tiled into
     * partitions — the shared planInputPartitions body of the binary

@@ -31,34 +31,20 @@ object Vcf {
            afFields: Seq[String] = defaultAfFields): DataFrame =
     parseLines(spark.read.text(path), "value", afFields)
 
-  /** Read a bgzipped VCF through [[Bgzf.readLines]] — byte-range
-    * SPLITTABLE, unlike the Hadoop-codec path that gives a `.vcf.gz`
-    * file one task no matter its size. The codec path stays the
-    * default ([[readAuto]]): sharded fleets parallelize per file
-    * anyway; this is the scale path for the single-huge-file layout
-    * cohort VCFs commonly ship in (one 100 GB+ `.vcf.gz`).
-    */
-  def readBgzf(spark: SparkSession, path: String,
-               afFields: Seq[String] = defaultAfFields,
-               splitSize: Long = 32L << 20): DataFrame =
-    parseLines(Bgzf.readLines(spark, path, splitSize), "value", afFields)
-
   /** Format-dispatching read, routed on CONTENT ([[Bgzf.sniff]] — the
     * path suffix lies: a bare directory of BCF shards, e.g. the repo's
     * own `Bcf.writeSharded` output, has no extension, and suffix
     * dispatch silently text-parsed its binary bytes to a near-empty
-    * frame). BCF magic → the DSv2 [[Bcf.readTable]] relation (single
-    * files, directories and globs alike); BGZF text that is a sharded
-    * layout OR a single file over `bgzfSplitThreshold` → the
-    * byte-range splittable DSv2 relation [[readTable]] (a single huge
-    * cohort VCF must not read on one task, and SQL-shaped chrom/pos
-    * filters prune to the bisected byte windows automatically — per
-    * shard in a directory); BAM magic → a loud error (alignment rows
-    * are not VCF-shaped); anything else → the text parse (Hadoop's
-    * codec inflates small/plain gzip fine). Every VCF branch emits the
-    * identical row shape, so callers (the CLIs) take any of them
-    * transparently. Genuinely mixed directories error loudly in the
-    * sniff.
+    * frame). BCF magic → the DSv2 [[Bcf.readTable]] relation; BGZF text
+    * → the DSv2 [[readTable]] relation (byte-range splittable, so a
+    * single huge cohort VCF does not read on one task, and SQL-shaped
+    * chrom/pos filters prune to the bisected byte windows automatically
+    * — per shard in a directory); BAM magic → a loud error (alignment
+    * rows are not VCF-shaped); plain gzip and raw text → the text
+    * parse. Single files, directories and globs route alike. Every VCF
+    * branch emits the identical row shape, so callers (the CLIs) take
+    * any of them transparently. Genuinely mixed directories error
+    * loudly in the sniff.
     *
     * Sortedness: the DSv2 branch's filter pushdown bisects assuming
     * coordinate-sorted shards (the tabix contract), but it does not
@@ -69,23 +55,22 @@ object Vcf {
     * rows.
     */
   def readAuto(spark: SparkSession, path: String,
-               afFields: Seq[String] = defaultAfFields,
-               bgzfSplitThreshold: Long = 128L << 20): DataFrame = {
-    val sn = Bgzf.sniff(spark, path)
-    sn.format match {
+               afFields: Seq[String] = defaultAfFields): DataFrame =
+    Bgzf.sniff(spark, path).format match {
       case Bgzf.Format.Bcf => Bcf.readTable(spark, path, afFields)
       case Bgzf.Format.Bam => throw new IllegalArgumentException(
         s"$path sniffs as BAM — alignment rows are not VCF-shaped; " +
           "read it through Bam.readTable")
-      case Bgzf.Format.BgzfText
-        if sn.files.size > 1 || sn.files.head._2 > bgzfSplitThreshold =>
-        readTable(spark, path, afFields)
+      case Bgzf.Format.BgzfText => readTable(spark, path, afFields)
       case _ => read(spark, path, afFields)
     }
-  }
 
-  /** The DSv2 relation over sorted BGZF VCF ([[VcfBgzfSource]]): same
-    * rows as [[readBgzf]], plus automatic region pruning — a
+  /** The DSv2 relation over BGZF VCF ([[VcfBgzfSource]]): the
+    * [[read]] rows, byte-range splittable — one partition per
+    * `splitSize` range per file, each scanning forward to a
+    * signature-verified member start and inflating only the members
+    * that start inside it (so `splitSize` >= the file length reads each
+    * file whole on one task). Region pruning is automatic: a
     * `WHERE chrom = '17' AND pos BETWEEN a AND b` on this frame routes
     * through `SupportsPushDownFilters` into the same per-file bisected
     * byte windows [[readRegion]] plans, with every filter re-applied
@@ -295,7 +280,7 @@ object Vcf {
     def key(rank: Int, pos: Long) = (rank.toLong << 32) | pos
     // plain .vcf / non-BGZF gzip have no member chain to bisect, and
     // an unranked chrom can't be ordered against the data
-    val isBgzf = Bgzf.isBgzfOver(conf, fp, 0L)
+    val isBgzf = Bgzf.isBgzf(conf, fp)
     // a usable sidecar `.tbi` replaces the bisection outright: zero
     // probe reads, spans exact past the maxSpan back-off, and a chrom
     // absent from the index's name table prunes to nothing (indexed
@@ -370,10 +355,6 @@ object Vcf {
     * (the reader stops at the first non-header line, so a 100 GB file
     * costs a few KB).
     */
-  private[sources] def contigRanks(spark: SparkSession,
-                                   path: String): Map[String, Int] =
-    contigRanks(spark.sparkContext.hadoopConfiguration, path)
-
   private[sources] def contigRanks(
       conf: org.apache.hadoop.conf.Configuration,
       path: String): Map[String, Int] = {

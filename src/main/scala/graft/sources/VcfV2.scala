@@ -264,7 +264,7 @@ private[sources] class VcfBgzfScan(path: String, afFields: Seq[String],
         // read time ("not a BGZF member"), without an N-open planning
         // pass here
         files.headOption.foreach { case (fp, _) =>
-          require(Bgzf.isBgzfOver(spark, fp, 0L),
+          require(Bgzf.isBgzf(spark.sparkContext.hadoopConfiguration, fp),
             s"graft.sources.VcfBgzfSource wants BGZF files; $fp is " +
               "not (read plain text through Vcf.read)")
         }

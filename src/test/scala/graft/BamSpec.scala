@@ -48,7 +48,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = Sam.read(spark, samPath)
     Bam.write(src, refs, p)
     val a = src.collect().map(rowKey).sortBy(_.toString)
-    val b = Bam.read(spark, p).collect().map(rowKey).sortBy(_.toString)
+    val b = WholeFile.bam(spark, p).collect().map(rowKey).sortBy(_.toString)
     assert(a.length == b.length && a.length > 0)
     a.zip(b).foreach { case (x, y) => assert(x == y) }
   }
@@ -58,7 +58,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = s"$tmp/tiny.bam"
     val src = Sam.read(spark, samPath)
     Bam.write(src, refs, p, blockSize = 64)
-    assert(Bam.read(spark, p).count() == src.count())
+    assert(WholeFile.bam(spark, p).count() == src.count())
   }
 
   test("BGZF container grammar: BC extra subfield with correct BSIZE " +
@@ -121,7 +121,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = s"$tmp/conv.bam"
     val src = Sam.read(spark, sp)
     Bam.write(src, Seq(("cA", 1000L), ("cB", 500L)), p)
-    val rows = Bam.read(spark, p).collect()
+    val rows = WholeFile.bam(spark, p).collect()
       .map(r => r.getString(0) -> r).toMap
     val q1 = rows("q1")
     assert(q1.getString(q1.fieldIndex("rnext")) == "=")
@@ -162,9 +162,13 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = s"$tmp/split.bam"
     val src = Sam.read(spark, samPath)
     Bam.write(src, refs, p, blockSize = 64)
+    // oracle: the independent text parse, and the whole-file read
+    // agrees with it
     val want = src.collect().map(rowKey).sortBy(_.toString).toSeq
+    assert(WholeFile.bam(spark, p).collect().map(rowKey)
+      .sortBy(_.toString).toSeq == want, "whole-file read")
     Seq(100L, 333L, 1000L, 1L << 20).foreach { s =>
-      val got = Bam.readSplit(spark, p, splitSize = s)
+      val got = Bam.readTable(spark, p, splitSize = s)
         .collect().map(rowKey).sortBy(_.toString).toSeq
       assert(got == want, s"splitSize=$s: ${got.length} rows")
     }
@@ -191,7 +195,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bam.write(reads, Seq(("cA", 100000L)), p)
     val n = reads.count()
     Seq(777L, 4096L, 1L << 14).foreach { sz =>
-      val got = Bam.readSplit(spark, p, splitSize = sz)
+      val got = Bam.readTable(spark, p, splitSize = sz)
       assert(got.count() == n, s"splitSize=$sz")
       assert(got.agg(sum(col("pos"))).head.getLong(0) ==
         reads.agg(sum(col("pos"))).head.getLong(0), s"splitSize=$sz sum")
@@ -209,22 +213,22 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shards.length == 5, shards.mkString(","))
     assert(shards.forall(_.matches("part-\\d{5}\\.bam")))
     val want = src.collect().map(rowKey).sortBy(_.toString).toSeq
-    val viaRead = Bam.read(spark, dir)
+    val viaRead = WholeFile.bam(spark, dir)
       .collect().map(rowKey).sortBy(_.toString).toSeq
-    assert(viaRead == want, s"read: ${viaRead.length} vs ${want.length}")
-    val viaSplit = Bam.readSplit(spark, dir, splitSize = 512L)
+    assert(viaRead == want, s"whole: ${viaRead.length} vs ${want.length}")
+    val viaSplit = Bam.readTable(spark, dir, splitSize = 512L)
       .collect().map(rowKey).sortBy(_.toString).toSeq
-    assert(viaSplit == want, "readSplit")
+    assert(viaSplit == want, "split")
     // each shard is a complete BAM on its own (header + records + EOF)
     val perShard = shards.map(sh =>
-      Bam.read(spark, s"$dir/$sh").collect().map(rowKey).toSeq)
+      WholeFile.bam(spark, s"$dir/$sh").collect().map(rowKey).toSeq)
     assert(perShard.flatten.sortBy(_.toString).toSeq == want)
     // empty partitions still write a valid header+EOF shard
     val emptyDir = s"$tmp/sharded-empty"
     Bam.writeSharded(src.limit(1).repartition(3), refs, emptyDir)
     assert(new java.io.File(emptyDir).listFiles()
       .map(_.getName).count(!_.startsWith(".")) == 3)
-    assert(Bam.read(spark, emptyDir).count() == 1)
+    assert(WholeFile.bam(spark, emptyDir).count() == 1)
   }
 
   test("writeSharded into an existing directory OVERWRITES: prior-job " +
@@ -233,7 +237,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = Sam.read(spark, samPath)
     val dir = s"$tmp/sharded-rerun"
     Bam.writeSharded(src.repartition(5), refs, dir)
-    assert(Bam.read(spark, dir).count() == src.count())
+    assert(WholeFile.bam(spark, dir).count() == src.count())
     // re-run with FEWER rows and FEWER shards: both the changed bytes
     // of part-00000/1 and the stale part-00002..4 must go
     val subset = src.limit(2)
@@ -242,7 +246,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filterNot(_.startsWith(".")).sorted
     assert(shards.toSeq == Seq("part-00000.bam", "part-00001.bam"),
       shards.mkString(","))
-    assert(Bam.read(spark, dir).count() == 2)
+    assert(WholeFile.bam(spark, dir).count() == 2)
   }
 
   test("corrupt mid-file members are LOUD: the unaligned-range " +
@@ -266,24 +270,26 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(Paths.get(corrupt),
       bytes.dropRight(Bgzf.Eof.length) ++
         Bgzf.compress(garbage, blockSize = 64))
-    val cleanRows = Bam.read(spark, clean).count()
-    val (df, acc) = Bam.readSplitGuarded(spark, corrupt,
-      splitSize = validLen)
-    // the valid prefix still reads; the garbage ranges emit nothing
-    assert(df.count() == cleanRows)
-    assert(acc.value > 0,
-      "garbage ranges must surface in the accumulator")
+    val cleanRows = WholeFile.bam(spark, clean).count()
+    // the valid prefix still reads; the garbage ranges emit nothing and
+    // count into the scan's named accumulator
+    val unaligned = UnalignedRanges.during(spark,
+      "graft.bam.unaligned.ranges") {
+      assert(Bam.readTable(spark, corrupt, splitSize = validLen).count() ==
+        cleanRows)
+    }
+    assert(unaligned > 0, "garbage ranges must surface in the accumulator")
     // strict mode: the same read THROWS instead
     spark.conf.set("spark.graft.strictAlign", "true")
     try {
       val ex = intercept[org.apache.spark.SparkException] {
-        Bam.readSplit(spark, corrupt, splitSize = validLen).count()
+        Bam.readTable(spark, corrupt, splitSize = validLen).count()
       }
       assert(ex.getMessage.contains("no record chain aligned") ||
         Option(ex.getCause).exists(
           _.getMessage.contains("no record chain aligned")))
       // a clean file never trips strict mode at a records-sized split
-      assert(Bam.readSplit(spark, clean).count() == cleanRows)
+      assert(Bam.readTable(spark, clean).count() == cleanRows)
     } finally spark.conf.set("spark.graft.strictAlign", "false")
   }
 
@@ -308,7 +314,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bam.write(reads, Seq(("cBig", (1L << 31) - 1)), p, blockSize = 256)
     val want = reads.collect().map(rowKey).sortBy(_.toString).toSeq
     Seq(512L, 4096L, 1L << 20).foreach { sz =>
-      val got = Bam.readSplit(spark, p, splitSize = sz)
+      val got = Bam.readTable(spark, p, splitSize = sz)
         .select(reads.columns.map(col): _*)
         .collect().map(rowKey).sortBy(_.toString).toSeq
       assert(got == want, s"splitSize=$sz: ${got.length} rows")

@@ -42,6 +42,27 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"GT\">",
     "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2")
 
+  /** A row keyed for text-vs-binary comparison: the text parse's AF
+    * re-renders through float32 (`normAf`), the one text difference
+    * binary typing forces ("0.10" -> "0.1").
+    */
+  private def key(r: org.apache.spark.sql.Row, normAf: Boolean) = {
+    val af = Option(r.getString(r.fieldIndex("af")))
+    val afN = af.map(_.split(",").map(x =>
+      if (normAf) x.toFloat.toString else x).mkString(","))
+    (r.getString(0), r.getLong(1), r.getString(2), r.getString(3),
+      r.getString(4), r.getString(5), r.getString(6),
+      afN.map("AF=" + _).getOrElse(r.getString(7)),
+      r.getSeq[String](8).mkString(","), afN)
+  }
+
+  /** The fixture's independent text parse, keyed like a BCF read. */
+  private def textKeys(parsed: org.apache.spark.sql.DataFrame) =
+    parsed.collect().map(key(_, normAf = true)).sortBy(_.toString).toSeq
+
+  private def bcfKeys(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(key(_, normAf = false)).sortBy(_.toString).toSeq
+
   test("fixture round-trip: Vcf.read -> Bcf.write -> Bcf.read matches " +
     "the text parse row-for-row after AF float normalization") {
     val src = s"${graft.fixtures.GenomicFixtures.rawDir}/sample.vcf"
@@ -52,18 +73,8 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getString(0), r.getLong(1) + 10L)).toSeq
     val p = s"$tmp/rt.bcf"
     Bcf.write(parsed, contigs, Vcf.sampleNames(spark, src), p)
-    def key(r: org.apache.spark.sql.Row, normAf: Boolean) = {
-      val af = Option(r.getString(r.fieldIndex("af")))
-      val afN = af.map(_.split(",").map(x =>
-        if (normAf) x.toFloat.toString else x).mkString(","))
-      (r.getString(0), r.getLong(1), r.getString(2), r.getString(3),
-        r.getString(4), r.getString(5), r.getString(6),
-        afN.map("AF=" + _).getOrElse(r.getString(7)),
-        r.getSeq[String](8).mkString(","), afN)
-    }
-    val a = parsed.collect().map(key(_, normAf = true)).sortBy(_.toString)
-    val b = Bcf.read(spark, p).collect()
-      .map(key(_, normAf = false)).sortBy(_.toString)
+    val a = textKeys(parsed)
+    val b = bcfKeys(WholeFile.bcf(spark, p))
     assert(a.length == b.length && a.length > 0)
     a.zip(b).foreach { case (x, y) => assert(x == y) }
   }
@@ -87,7 +98,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
       "1\t20\trs2\tC\tG\t.\tPASS\tAF=0.2\tGT\t.|.\t./1",
       "1\t30\trs3\tC\tG\t.\tPASS\tAF=0.2\tGT\t1\t0|1"))
     Bcf.write(Vcf.read(spark, v), Seq(("1", 100L)), Seq("S1", "S2"), p)
-    val rows = Bcf.read(spark, p).collect()
+    val rows = WholeFile.bcf(spark, p).collect()
       .map(r => r.getString(2) -> r.getSeq[String](8)).toMap
     assert(rows("rs1") == Seq("2|1", "0/2"))
     assert(rows("rs2") == Seq(".|.", "./1"))
@@ -123,7 +134,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bcf.write(Vcf.read(spark, v), Seq(("1", 100L)), Seq("S1"), p,
       infoTypes = Map("AF" -> "Float", "DP" -> "Integer",
         "AC" -> "Integer", "DB" -> "Flag", "CSQ" -> "String"))
-    val rows = Bcf.read(spark, p).collect()
+    val rows = WholeFile.bcf(spark, p).collect()
       .map(r => r.getLong(1) -> r).toMap
     val r10 = rows(10L)
     assert(r10.getString(r10.fieldIndex("filter")) == "q10;s50")
@@ -145,7 +156,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(_ => "0.01").mkString(",")}\tGT\t16|0\t0|0"))
     val p = s"$tmp/wide.bcf"
     Bcf.write(Vcf.read(spark, v), Seq(("1", 100L)), Seq("S1", "S2"), p)
-    val r = Bcf.read(spark, p).collect().head
+    val r = WholeFile.bcf(spark, p).collect().head
     assert(r.getString(4).split(",").length == 16)
     assert(r.getSeq[String](8) == Seq("16|0", "0|0"))
     // 16 AF values round-trip through the float vector
@@ -160,7 +171,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bcf.write(parsed,
       Seq(("1", 1000L), ("2", 1000L), ("X", 1000L)),
       Vcf.sampleNames(spark, src), p, blockSize = 64)
-    assert(Bcf.read(spark, p).count() == parsed.count())
+    assert(WholeFile.bcf(spark, p).count() == parsed.count())
   }
 
   test("readSplit == read across split sizes on a BCF whose records " +
@@ -170,10 +181,13 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = s"$tmp/split.bcf"
     Bcf.write(parsed, Seq(("1", 1000L), ("2", 1000L), ("X", 1000L)),
       Vcf.sampleNames(spark, src), p, blockSize = 64)
-    val want = Bcf.read(spark, p).collect()
+    // oracle: the whole-file read, itself held to the text parse
+    val whole = WholeFile.bcf(spark, p)
+    assert(bcfKeys(whole) == textKeys(parsed))
+    val want = whole.collect()
       .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     Seq(100L, 333L, 1000L, 1L << 20).foreach { s =>
-      val got = Bcf.readSplit(spark, p, splitSize = s).collect()
+      val got = Bcf.readTable(spark, p, splitSize = s).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
       assert(got == want, s"splitSize=$s: ${got.length} rows")
     }
@@ -194,7 +208,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bcf.write(variants, Seq(("c1", 100000L)),
       Seq("S1", "S2", "S3"), p)
     Seq(777L, 4096L, 1L << 14).foreach { sz =>
-      val got = Bcf.readSplit(spark, p, splitSize = sz)
+      val got = Bcf.readTable(spark, p, splitSize = sz)
       assert(got.count() == 2000, s"splitSize=$sz")
       assert(got.agg(sum(col("pos"))).head.getLong(0) ==
         variants.agg(sum(col("pos"))).head.getLong(0), s"splitSize=$sz")
@@ -225,14 +239,14 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     // re-render), so shard parity isolates the SHARDING not the codec
     val one = s"$tmp/sharded-ref.bcf"
     Bcf.write(parsed, contigs, Vcf.sampleNames(spark, src), one)
-    val want = Bcf.read(spark, one).collect().map(key).sortBy(_.toString)
-      .toSeq
-    val viaRead = Bcf.read(spark, dir).collect().map(key)
+    val want = WholeFile.bcf(spark, one).collect().map(key)
       .sortBy(_.toString).toSeq
-    assert(viaRead == want, s"read: ${viaRead.length} vs ${want.length}")
-    val viaSplit = Bcf.readSplit(spark, dir, splitSize = 512L)
+    val viaRead = WholeFile.bcf(spark, dir).collect().map(key)
+      .sortBy(_.toString).toSeq
+    assert(viaRead == want, s"whole: ${viaRead.length} vs ${want.length}")
+    val viaSplit = Bcf.readTable(spark, dir, splitSize = 512L)
       .collect().map(key).sortBy(_.toString).toSeq
-    assert(viaSplit == want, "readSplit")
+    assert(viaSplit == want, "split")
     // all shards carry the identical header (shared dictionary), and
     // sampleNames resolves on the directory
     val heads = shards.map { sh =>
@@ -256,7 +270,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
       Vcf.sampleNames(spark, src), emptyDir)
     assert(new java.io.File(emptyDir).listFiles()
       .map(_.getName).count(!_.startsWith(".")) == 3)
-    assert(Bcf.read(spark, emptyDir).count() == 1)
+    assert(WholeFile.bcf(spark, emptyDir).count() == 1)
   }
 
   test("malformed interior ''/'.' FILTER tokens are dropped " +
@@ -281,12 +295,12 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the bug: this round trip crashed decoding out-of-dict indices
     Bcf.writeSharded(variants.repartition(2), contigs,
       Seq("S1", "S2"), dir)
-    val back = Bcf.read(spark, dir).orderBy("pos").collect()
+    val back = WholeFile.bcf(spark, dir).orderBy("pos").collect()
     assert(back.length == 3)
     // both writers agree on the CLEANED round-tripped FILTER cells
     val one = s"$tmp/sharded-bcf-interior-ref.bcf"
     Bcf.write(variants, contigs, Seq("S1", "S2"), one)
-    val ref = Bcf.read(spark, one).orderBy("pos").collect()
+    val ref = WholeFile.bcf(spark, one).orderBy("pos").collect()
     assert(back.map(_.getString(6)).toSeq ==
       ref.map(_.getString(6)).toSeq)
     assert(back.map(_.getString(6)).toSeq == Seq("q10", "q10;q20", "."))
@@ -308,7 +322,7 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bcf.write(variants, Seq(("cBig", (1L << 31) - 1)),
       Seq("S1", "S2"), p, blockSize = 256)
     Seq(512L, 4096L, 1L << 20).foreach { sz =>
-      val got = Bcf.readSplit(spark, p, splitSize = sz)
+      val got = Bcf.readTable(spark, p, splitSize = sz)
       assert(got.count() == 600, s"splitSize=$sz")
       assert(got.agg(sum(col("pos"))).head.getLong(0) ==
         variants.agg(sum(col("pos"))).head.getLong(0), s"splitSize=$sz")
@@ -335,21 +349,25 @@ class BcfSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(Paths.get(corrupt),
       bytes.dropRight(Bgzf.Eof.length) ++
         Bgzf.compress(garbage, blockSize = 64))
-    val cleanRows = Bcf.read(spark, clean).count()
-    val (df, acc) = Bcf.readSplitGuarded(spark, corrupt,
-      splitSize = validLen)
-    assert(df.count() == cleanRows)
-    assert(acc.value > 0,
-      "garbage ranges must surface in the accumulator")
+    val cleanRows = WholeFile.bcf(spark, clean).count()
+    // splitSize = the valid prefix, so the garbage occupies a range of
+    // its own: the valid rows still read, the garbage range emits
+    // nothing and counts into the scan's named accumulator
+    val unaligned = UnalignedRanges.during(spark,
+      "graft.bcf.unaligned.ranges") {
+      assert(Bcf.readTable(spark, corrupt, splitSize = validLen).count() ==
+        cleanRows)
+    }
+    assert(unaligned > 0, "garbage ranges must surface in the accumulator")
     spark.conf.set("spark.graft.strictAlign", "true")
     try {
       val ex = intercept[org.apache.spark.SparkException] {
-        Bcf.readSplit(spark, corrupt, splitSize = validLen).count()
+        Bcf.readTable(spark, corrupt, splitSize = validLen).count()
       }
       assert(ex.getMessage.contains("no record chain aligned") ||
         Option(ex.getCause).exists(
           _.getMessage.contains("no record chain aligned")))
-      assert(Bcf.readSplit(spark, clean).count() == cleanRows)
+      assert(Bcf.readTable(spark, clean).count() == cleanRows)
     } finally spark.conf.set("spark.graft.strictAlign", "false")
   }
 

@@ -3,12 +3,14 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.{Bgzf, Vcf}
 
-/** Adversarial pins for the splittable BGZF line reader: split
+/** Adversarial pins for the splittable BGZF line reader
+  * ([[Bgzf.rangeLinesOf]], the VCF relation's partition reader): split
   * boundaries landing on every dangerous spot — mid-member, mid-line,
   * exactly at a member start, exactly after a '\n' (the case where
   * naive skip-one-line loses a record), lines spanning many members,
@@ -31,8 +33,28 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def linesOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.getString(0)).toSeq
+  /** Every line of `p`, read range by range over `splitSize` tiles —
+    * the byte ranges the VCF relation plans for one file.
+    */
+  private def linesOf(p: String, splitSize: Long): Seq[String] = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val len = fs.getFileStatus(path).getLen
+    val n = math.max(1L, (len + splitSize - 1) / splitSize)
+    (0L until n).flatMap { i =>
+      val in = fs.open(path)
+      try Bgzf.rangeLinesOf(in, Bgzf.Range(p, i * splitSize,
+        math.min((i + 1) * splitSize, len), len)).toList
+      finally in.close()
+    }
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+
+  private def scansDsv2(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .nonEmpty
 
   private def write(name: String, text: String, blockSize: Int): String = {
     val p = s"$tmp/$name"
@@ -50,10 +72,10 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val text = lines.mkString("", "\n", "\n")
     for (blockSize <- Seq(64, 256, 0xff00)) {
       val p = write(s"zoo-$blockSize.gz", text, blockSize)
-      val whole = linesOf(Bgzf.readLines(spark, p, splitSize = 1L << 30))
+      val whole = linesOf(p, splitSize = 1L << 30)
       assert(whole == lines, s"whole-file read, blockSize=$blockSize")
       for (splitSize <- Seq(333L, 1024L, 7777L)) {
-        val got = linesOf(Bgzf.readLines(spark, p, splitSize = splitSize))
+        val got = linesOf(p, splitSize = splitSize)
         assert(got.sorted == lines.sorted,
           s"blockSize=$blockSize splitSize=$splitSize: " +
             s"${got.length} vs ${lines.length} lines")
@@ -72,13 +94,12 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
     // member size is constant: measure it from the file
     val bytes = Files.readAllBytes(Paths.get(p))
     val memberSize = ((bytes(16) & 0xff) | ((bytes(17) & 0xff) << 8)) + 1
-    val got = linesOf(
-      Bgzf.readLines(spark, p, splitSize = memberSize.toLong))
+    val got = linesOf(p, splitSize = memberSize.toLong)
     assert(got.sorted == lines.sorted,
       s"${got.length} vs ${lines.length}")
     // and misaligned by one byte in each direction
     Seq(memberSize - 1L, memberSize + 1L).foreach { s =>
-      assert(linesOf(Bgzf.readLines(spark, p, splitSize = s)).sorted
+      assert(linesOf(p, splitSize = s).sorted
         == lines.sorted, s"splitSize=$s")
     }
   }
@@ -88,7 +109,7 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val big = "B" * 5000
     val lines = Seq("head") ++ Seq(big) ++ (0 until 50).map("tail" + _)
     val p = write("big.gz", lines.mkString("", "\n", "\n"), 128)
-    val got = linesOf(Bgzf.readLines(spark, p, splitSize = 512L))
+    val got = linesOf(p, splitSize = 512L)
     assert(got.sorted == lines.sorted)
     assert(got.count(_ == big) == 1)
   }
@@ -97,7 +118,7 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
     "preserved as data") {
     val text = "a\r\nb\rc\r\nlast\r\n"
     val p = write("crlf.gz", text, 4)
-    val got = linesOf(Bgzf.readLines(spark, p, splitSize = 8L))
+    val got = linesOf(p, splitSize = 8L)
     assert(got.sorted == Seq("a", "b\rc", "last").sorted)
   }
 
@@ -111,7 +132,7 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
       Bgzf.compress(text.getBytes("UTF-8"), 16))
     // across splits, and against Hadoop's own gzip-codec text decode
     for (splitSize <- Seq(8L, 64L, 1L << 20)) {
-      val got = linesOf(Bgzf.readLines(spark, p, splitSize = splitSize))
+      val got = linesOf(p, splitSize = splitSize)
       assert(got.sorted == lines.sorted, s"splitSize=$splitSize")
     }
     val viaText = spark.read.text(p).collect().map(_.getString(0)).toSeq
@@ -120,48 +141,43 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("no trailing newline: the final partial line still surfaces") {
     val p = write("tail.gz", "one\ntwo\nthree-no-nl", 6)
-    val got = linesOf(Bgzf.readLines(spark, p, splitSize = 10L))
+    val got = linesOf(p, splitSize = 10L)
     assert(got.sorted == Seq("one", "two", "three-no-nl").sorted)
   }
 
   test("Vcf.readBgzf == Vcf.read on the fixture, any split size") {
+    // the splittable read is the DSv2 relation; the oracle is the
+    // independent text parse of the uncompressed fixture
     val src = s"${graft.fixtures.GenomicFixtures.rawDir}/sample.vcf"
     val text = Files.readString(Paths.get(src))
     val p = write("sample.vcf.bgz", text, 100)
-    val want = Vcf.read(spark, src).collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    val want = rowsOf(Vcf.read(spark, src))
     Seq(64L, 300L, 1L << 20).foreach { s =>
-      val got = Vcf.readBgzf(spark, p, splitSize = s).collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-      assert(got.toSeq == want.toSeq, s"splitSize=$s")
+      assert(rowsOf(Vcf.readTable(spark, p, splitSize = s)) == want,
+        s"splitSize=$s")
     }
   }
 
-  test("Vcf.readAuto picks the splittable path for a large BGZF " +
-    ".vcf.gz (threshold-gated signature peek), the codec path below " +
-    "threshold and for plain gzip") {
+  test("Vcf.readAuto routes every BGZF .vcf.gz to the DSv2 relation, " +
+    "small single files included, and plain gzip to the codec path") {
     val src = s"${graft.fixtures.GenomicFixtures.rawDir}/sample.vcf"
     val text = Files.readString(Paths.get(src))
     val p = s"$tmp/auto.vcf.gz"
     Files.write(Paths.get(p),
       Bgzf.compress(text.getBytes("US-ASCII"), 100))
-    val want = Vcf.read(spark, src).collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    def rowsVia(threshold: Long) =
-      Vcf.readAuto(spark, p, bgzfSplitThreshold = threshold).collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    // above threshold: splittable; below: codec — identical rows both
-    assert(rowsVia(0L) == want)
-    assert(rowsVia(1L << 30) == want)
-    // plain single-member gzip never routes to the splittable path
+    val want = rowsOf(Vcf.read(spark, src))
+    val viaAuto = Vcf.readAuto(spark, p)
+    assert(rowsOf(viaAuto) == want)
+    assert(scansDsv2(viaAuto), "a BGZF file must read through readTable")
+    // plain single-member gzip is not BGZF: the text codec reads it
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)
     gz.write(text.getBytes("US-ASCII")); gz.close()
     val pp = s"$tmp/plainauto.vcf.gz"
     Files.write(Paths.get(pp), bos.toByteArray)
-    val got = Vcf.readAuto(spark, pp, bgzfSplitThreshold = 0L).collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(got == want)
+    val plain = Vcf.readAuto(spark, pp)
+    assert(rowsOf(plain) == want)
+    assert(!scansDsv2(plain), "plain gzip must keep the codec path")
   }
 
   test("plain single-member gzip fails loudly instead of mis-splitting") {
@@ -171,10 +187,14 @@ class BgzfSpec extends AnyFunSuite with BeforeAndAfterAll {
     gz.close()
     val p = s"$tmp/plain.gz"
     Files.write(Paths.get(p), bos.toByteArray)
-    val ex = intercept[org.apache.spark.SparkException] {
-      Bgzf.readLines(spark, p).collect()
+    val ex = intercept[IllegalArgumentException] {
+      linesOf(p, splitSize = 32L << 20)
     }
-    assert(ex.getMessage.contains("BGZF") ||
-      Option(ex.getCause).exists(_.getMessage.contains("BGZF")))
+    assert(ex.getMessage.contains("not a BGZF member"), ex.getMessage)
+    // and the relation refuses it at planning time
+    val planned = intercept[IllegalArgumentException] {
+      Vcf.readTable(spark, p).collect()
+    }
+    assert(planned.getMessage.contains("wants BGZF"), planned.getMessage)
   }
 }

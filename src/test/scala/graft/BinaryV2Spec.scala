@@ -11,10 +11,11 @@ import org.scalatest.BeforeAndAfterAll
 import graft.sources.{Bam, Bcf, BgzfScanPartition, Vcf}
 
 /** Pins for the DSv2 relations over the BINARY containers
-  * (BcfBgzfSource / BamBgzfSource): row parity with the splittable
-  * readers, and that plain SQL chrom/rname + pos filters prune the
-  * scan to bisected byte windows — for BAM, THROUGH the Sam.decorate
-  * projection — without changing results.
+  * (BcfBgzfSource / BamBgzfSource): row parity with the whole-file read
+  * and the source rows, that plain SQL chrom/rname + pos filters prune
+  * the scan to bisected byte windows — for BAM, THROUGH the
+  * Sam.decorate projection — without changing results, and that these
+  * relations stay the containers' only scan engine.
   */
 class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -69,10 +70,15 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val fileLen = Files.size(Paths.get(p))
     assert(fileLen > 0x40000, s"fixture too small: $fileLen")
     val table = Bcf.readTable(spark, p, splitSize = 1L << 20)
-    val split = Bcf.readSplit(spark, p, splitSize = 1L << 20)
-    assert(rows(table) == rows(split))
+    // oracle: the whole-file read (materialized, so the filter below
+    // cannot prune it), whose sites match the written rows
+    val whole = WholeFile.bcf(spark, p)
+    val site = Seq("chrom", "pos", "id", "ref", "alt", "genotypes")
+    assert(rows(whole.select(site.map(col): _*)) ==
+      rows(variants.select(site.map(col): _*)))
+    assert(rows(table) == rows(whole))
     val pred = col("chrom") === "c2" && col("pos").between(1005, 2995)
-    assert(rows(table.where(pred)) == rows(split.where(pred)))
+    assert(rows(table.where(pred)) == rows(whole.where(pred)))
     assert(table.where(pred).count() ==
       (1005L to 2995L).count(x => x % 10 == 5))
     val pruned = scannedBytes(table.where(pred))
@@ -104,7 +110,7 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     Bcf.write(variants, contigs, Seq("S1", "S2", "S3"), p,
       blockSize = 512)
     val table = Bcf.readTable(spark, p, splitSize = 64L << 10)
-    val full = Bcf.readSplit(spark, p, splitSize = 64L << 10)
+    val full = WholeFile.bcf(spark, p)
     // every genotype-free projection shape the query family uses: the
     // pruned scan must emit rows identical to projecting the full read
     for (cols <- Seq(
@@ -148,12 +154,15 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val fileLen = Files.size(Paths.get(p))
     assert(fileLen > 0x40000, s"fixture too small: $fileLen")
     val table = Bam.readTable(spark, p, splitSize = 1L << 20)
-    val split = Bam.readSplit(spark, p, splitSize = 1L << 20)
-    assert(rows(table) == rows(split))
+    // oracle: the whole-file read (materialized, so the filter below
+    // cannot prune it), itself equal to the written reads decorated
+    val whole = WholeFile.bam(spark, p)
+    assert(rows(whole) == rows(graft.sources.Sam.decorate(reads)))
+    assert(rows(table) == rows(whole))
     // the filter sits ABOVE the decorate projection; Catalyst must
     // push it through into the DSv2 scan
     val pred = col("rname") === "c2" && col("pos").between(101, 3001)
-    assert(rows(table.where(pred)) == rows(split.where(pred)))
+    assert(rows(table.where(pred)) == rows(whole.where(pred)))
     assert(table.where(pred).count() ==
       (101L to 3001L).count(x => x % 10 == 1))
     val pruned = scannedBytes(table.where(pred))
@@ -171,7 +180,7 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     graft.fixtures.GenomicFixtures.ensure(spark)
     val bcf = graft.fixtures.GenomicFixtures.bcfPath(spark)
     val viaAuto = Vcf.readAuto(spark, bcf)
-    val viaRead = Bcf.read(spark, bcf)
+    val viaRead = WholeFile.bcf(spark, bcf)
     assert(rows(viaAuto) == rows(viaRead))
     assert(viaAuto.where(col("af").isNotNull).count() ==
       viaRead.where(col("af").isNotNull).count())
@@ -201,7 +210,7 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val noext = s"$tmp/cohort-noext"
     Files.copy(Paths.get(fx.bcfPath(spark)), Paths.get(noext))
     assert(rows(Vcf.readAuto(spark, noext)) ==
-      rows(Bcf.read(spark, fx.bcfPath(spark))))
+      rows(WholeFile.bcf(spark, fx.bcfPath(spark))))
     assert(Vcf.sampleNamesAuto(spark, noext) ==
       Bcf.sampleNames(spark, fx.bcfPath(spark)))
     // BAM bytes are not VCF-shaped: loud, with a pointer
@@ -230,5 +239,35 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(viaAuto) == rows(Vcf.read(spark, d)))
     // routed to the DSv2 relation: the plan carries BgzfScanPartitions
     assert(scannedBytes(viaAuto) > 0L)
+  }
+
+  test("one scan engine per container: no RDD file reader under " +
+    "graft/sources, and the record/line decoders are called only by " +
+    "the DSv2 partition readers") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src", "main")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val sources = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => (p.toString.replace(java.io.File.separatorChar, '/'),
+        new String(Files.readAllBytes(p), "UTF-8")))
+      .toSeq.sortBy(_._1)
+    // a call site, not the definition
+    def calls(text: String, fn: String) =
+      s"(?<!def )\\b$fn\\s*\\(".r.findFirstIn(text).isDefined
+    val offenders =
+      sources.collect {
+        case (f, t) if f.contains("/graft/sources/") &&
+          t.contains("binaryFiles(") => s"$f: binaryFiles"
+      } ++ sources.collect {
+        case (f, t) if !f.endsWith("/BinaryV2.scala") &&
+          calls(t, "splitRangeRecords") => s"$f: splitRangeRecords"
+      } ++ sources.collect {
+        case (f, t) if !f.endsWith("/VcfV2.scala") &&
+          calls(t, "rangeLinesOf") => s"$f: rangeLinesOf"
+      }
+    assert(offenders.isEmpty,
+      "a second scan engine beside the DSv2 relations — read through " +
+        s"readTable instead: ${offenders.mkString(", ")}")
   }
 }

@@ -260,7 +260,11 @@ class GraftFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "graft_md5_char_ngrams(s, -1)" -> atLeast1("md5_char_ngrams", "n", -1),
       "graft_md5_char_ngrams(s, 0)" -> atLeast1("md5_char_ngrams", "n", 0),
       "graft_md5_buckets(toks, 0)" ->
-        "graft_md5_buckets: dim must be > 0, got 0")
+        "graft_md5_buckets: dim must be > 0, got 0",
+      "graft_img_grid(img, -1, 2)" -> atLeast1("img_grid", "gx", -1),
+      "graft_img_grid(img, 2, 0)" -> atLeast1("img_grid", "gy", 0),
+      "graft_img_resize(img, 0)" -> atLeast1("img_resize", "maxSide", 0),
+      "graft_img_resize(img, -3)" -> atLeast1("img_resize", "maxSide", -3))
     for ((expr, msg) <- cases; codegen <- Seq(true, false)) {
       val e = intercept[Exception](run(expr, codegen))
       assert(messages(e).exists(_.contains(msg)),

@@ -69,7 +69,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("region read == full scan + filter for every region shape") {
     val p = writeGz("multi.vcf.gz", vcfText(500, contigHeaders = true),
       blockSize = 512)
-    val full = Vcf.readBgzf(spark, p, splitSize = 4096L)
+    val full = Vcf.read(spark, p)
     // bcftools -r overlap semantics (all REFs here are 1 bp, so this
     // equals containment — the multi-bp spanning case is pinned by the
     // fixture-shape test below and the g50/g50b gates)
@@ -133,7 +133,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("no ##contig header -> full-scan fallback, still correct") {
     val p = writeGz("nocontig.vcf.gz",
       vcfText(200, contigHeaders = false), blockSize = 512)
-    val full = Vcf.readBgzf(spark, p, splitSize = 4096L)
+    val full = Vcf.read(spark, p)
     val got = rows(Vcf.readRegion(spark, p, "chr2", 500L, 900L))
     assert(got == rows(full.where(col("chrom") === "chr2" &&
       col("pos").between(500, 900))))
@@ -151,7 +151,8 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     "undeclared chrom short-circuits to empty") {
     graft.fixtures.GenomicFixtures.ensure(spark)
     val bcf = graft.fixtures.GenomicFixtures.regionBcfPath(spark)
-    val full = graft.sources.Bcf.readSplit(spark, bcf, splitSize = 256L)
+    // oracle: the independent text parse of the VCF the fixture encodes
+    val full = Vcf.read(spark, graft.fixtures.GenomicFixtures.vcfPath)
     // overlap semantics: ("1", 45, 55) must include the 24-bp-REF
     // record at pos 39 that a pos-BETWEEN filter would lose
     for ((c, a, b) <- Seq(("1", 20L, 50L), ("1", 45L, 55L),
@@ -176,7 +177,9 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     "spanning reads included, unmapped reads never returned") {
     graft.fixtures.GenomicFixtures.ensure(spark)
     val bam = graft.fixtures.GenomicFixtures.regionBamPath(spark)
-    val full = graft.sources.Bam.readSplit(spark, bam, splitSize = 256L)
+    // oracle: the independent text parse of the SAM the fixture encodes
+    val full = graft.sources.Sam.read(spark,
+      s"${graft.fixtures.GenomicFixtures.rawDir}/aligned.sam")
     def expectOverlap(c: String, a: Long, b: Long) =
       full.where(col("rname") === c && col("pos") <= b &&
         coalesce(col("ref_end"), col("pos")) >= a)
@@ -229,7 +232,8 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.size(Paths.get(p)) > 0x40000,
       s"file must exceed the 128 KiB search floor twice over " +
         s"(got ${Files.size(Paths.get(p))}) or bisection never runs")
-    val full = graft.sources.Bam.readSplit(spark, p, splitSize = 65536L)
+    // oracle: the written reads themselves, decorated like a BAM read
+    val full = graft.sources.Sam.decorate(df)
     for ((c, a, b) <- Seq(("c1", 50000L, 60000L),
       ("c2", 100000L, 150000L), ("c2", 1L, 200L))) {
       val want = full.where(col("rname") === c && col("pos") <= b &&
@@ -288,7 +292,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(distPlan.probes == driverPlan.probes)
       // end-to-end rows under the forced-distributed path
       val got = rows(Vcf.readRegions(spark, d, regions))
-      val want = rows(Vcf.readBgzf(spark, d, splitSize = 1L << 20)
+      val want = rows(Vcf.read(spark, d)
         .where(regions.map { case (c, a, b) =>
           col("chrom") === c && col("pos") <= b &&
             col("pos") + length(col("ref")) - 1 >= a
@@ -301,7 +305,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     "dir), including shards with no hits; per-shard bisection PRUNES " +
     "the no-hit shards instead of full-scanning them") {
     val d = writeShardedVcf("sharded-big", 30000, blockSize = 256)
-    val full = Vcf.readBgzf(spark, d, splitSize = 1L << 20)
+    val full = Vcf.read(spark, d)
     def expect(c: String, a: Long, b: Long): Seq[String] =
       rows(full.where(col("chrom") === c && col("pos") <= b &&
         col("pos") + length(col("ref")) - 1 >= a))
@@ -368,7 +372,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("chrX", 200000L, 210000L), ("chr1", 999999999L, 1999999999L),
       ("chr2", 1L, 9L), ("chr1", 250000L, 251000L),
       ("chrX", 290000L, 299999L), ("chr2", 200000L, 201000L))
-    val full = Vcf.readBgzf(spark, p, splitSize = 1L << 20)
+    val full = Vcf.read(spark, p)
     val want = rows(full.where(regions.map { case (c, a, b) =>
       col("chrom") === c && col("pos") <= b &&
         col("pos") + length(col("ref")) - 1 >= a
@@ -396,7 +400,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
       contigHeaders = true), blockSize = 512)
     val panel = Seq(("chr1", 1010L, 1990L), ("chrX", 10L, 200L))
       .toDF("chrom", "start", "end")
-    val full = Vcf.readBgzf(spark, p, splitSize = 4096L)
+    val full = Vcf.read(spark, p)
     val want = rows(full.where(
       (col("chrom") === "chr1" && col("pos").between(1010, 1990)) ||
         (col("chrom") === "chrX" && col("pos").between(10, 200))))
@@ -413,7 +417,8 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     "multi-region panel") {
     graft.fixtures.GenomicFixtures.ensure(spark)
     val d = graft.fixtures.GenomicFixtures.regionBcfShardedDir(spark)
-    val full = graft.sources.Bcf.readSplit(spark, d, splitSize = 256L)
+    // oracle: the independent text parse of the VCF the shards encode
+    val full = Vcf.read(spark, graft.fixtures.GenomicFixtures.vcfPath)
     def expect(c: String, a: Long, b: Long) =
       rows(full.where(col("chrom") === c && col("pos") <= b &&
         col("pos") + length(col("ref")) - 1 >= a))
@@ -438,7 +443,9 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     "overlap filter, spanning reads included") {
     graft.fixtures.GenomicFixtures.ensure(spark)
     val d = graft.fixtures.GenomicFixtures.regionBamShardedDir(spark)
-    val full = graft.sources.Bam.readSplit(spark, d, splitSize = 256L)
+    // oracle: the independent text parse of the SAM the shards encode
+    val full = graft.sources.Sam.read(spark,
+      s"${graft.fixtures.GenomicFixtures.rawDir}/aligned.sam")
     def expect(c: String, a: Long, b: Long) =
       full.where(col("rname") === c && col("pos") <= b &&
         coalesce(col("ref_end"), col("pos")) >= a)
@@ -481,7 +488,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val total = shardBytes.sum
     // row parity: region read over the bare directory == the full
     // splittable scan + overlap filter (all REFs 1 bp)
-    val full = Vcf.readBgzf(spark, d, splitSize = 1L << 20)
+    val full = Vcf.read(spark, d)
     def expect(c: String, a: Long, b: Long) =
       rows(full.where(col("chrom") === c && col("pos") <= b &&
         col("pos") + length(col("ref")) - 1 >= a))
@@ -554,7 +561,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
       (hdr ++ body).mkString("", "\n", "\n").getBytes("US-ASCII"),
       blockSize = 512))
     val fileLen = Files.size(Paths.get(p))
-    val full = Vcf.readBgzf(spark, p, splitSize = 4096L)
+    val full = Vcf.read(spark, p)
     def expect(chrom: String, a: Long, b: Long): Seq[String] =
       rows(full.where(col("chrom") === chrom && col("pos") <= b &&
         col("pos") + length(col("ref")) - 1 >= a))
@@ -589,7 +596,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (region and full) see only the data file
     assert(rows(Vcf.readRegion(spark, d, "chr2", 1010L, 1990L)) ==
       expect("chr2", 1010L, 1990L), "directory region read with sidecar")
-    assert(Vcf.readBgzf(spark, d, splitSize = 4096L).count() ==
+    assert(Vcf.readTable(spark, d, splitSize = 4096L).count() ==
       full.count(), "directory full read with sidecar")
     // spark.graft.useIndex=false forces the probe path
     spark.conf.set("spark.graft.useIndex", "false")
@@ -621,8 +628,7 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.copy(Paths.get(bcfSrc), Paths.get(bcf),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     graft.sources.Bcf.writeIndex(conf, bcf)
-    val bcfFull = graft.sources.Bcf.readSplit(spark, bcf,
-      splitSize = 256L)
+    val bcfFull = Vcf.read(spark, graft.fixtures.GenomicFixtures.vcfPath)
     def bcfExpect(c: String, a: Long, b: Long) =
       rows(bcfFull.where(col("chrom") === c && col("pos") <= b &&
         col("pos") + length(col("ref")) - 1 >= a))
@@ -647,8 +653,8 @@ class RegionSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.copy(Paths.get(bamSrc), Paths.get(bam),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     graft.sources.Bam.writeIndex(conf, bam)
-    val bamFull = graft.sources.Sam.decorate(
-      graft.sources.Bam.readSplit(spark, bam, splitSize = 256L))
+    val bamFull = graft.sources.Sam.read(spark,
+      s"${graft.fixtures.GenomicFixtures.rawDir}/aligned.sam")
     def bamRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(concat_ws(":", col("rname"), col("pos"), col("qname")))
         .collect().map(_.getString(0)).toSeq.sorted

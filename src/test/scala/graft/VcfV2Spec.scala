@@ -69,6 +69,22 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     (parts.sum, parts.length)
   }
 
+  test("the bench's full-scan twins: a chrom filter under an " +
+    "expression stays above the scan — every byte reads, rows equal the " +
+    "pruned route's") {
+    val p = writeGz("twin.vcf.gz", vcfText(30000), blockSize = 256)
+    val fileLen = Files.size(Paths.get(p))
+    val table = Vcf.readTable(spark, p, splitSize = 1L << 20)
+    val span = col("pos").between(1010, 1990)
+    val twin = table.where(Bench.chromUnpushed("chr2") && span)
+    val pruned = table.where(col("chrom") === "chr2" && span)
+    assert(scannedBytes(twin)._1 == fileLen)
+    assert(scannedBytes(pruned)._1 < fileLen / 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("chrom", "pos", "id").collect().map(_.toString).toSeq.sorted
+    assert(rows(twin) == rows(pruned) && rows(twin).size == 99)
+  }
+
   test("DSv2 read == Vcf.read row-for-row (CRLF, missing fields, " +
     "multi-allelic AF, UTF-8 sample content, tabs-only line)") {
     // hand-built oddity file: CRLF terminators, a short line, MAF
@@ -135,7 +151,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val table = Vcf.readTable(spark, p, splitSize = 1L << 20)
     val pred = col("chrom") === "chr2" && col("pos").between(1010, 1990)
     val pruned = table.where(pred)
-    val want = Vcf.readBgzf(spark, p, splitSize = 1L << 20).where(pred)
+    val want = Vcf.read(spark, p).where(pred)
       .select("chrom", "pos", "id").collect()
       .map(_.toString).toSeq.sorted
     assert(pruned.select("chrom", "pos", "id").collect()
@@ -147,6 +163,13 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select("chrom", "pos", "id").collect()
       .map(_.toString).toSeq.sorted
     assert(viaRegion == want)
+    // a splitSize past every file length reads the pruned window as one
+    // range; no partition bound may overflow
+    val oneRange = Vcf.readTable(spark, p, splitSize = Long.MaxValue)
+      .where(pred)
+    assert(oneRange.select("chrom", "pos", "id").collect()
+      .map(_.toString).toSeq.sorted == want)
+    assert(scannedBytes(oneRange)._2 == 1)
     // the plan reads a window, not the file
     val (prunedBytes, _) = scannedBytes(pruned)
     assert(prunedBytes > 0 && prunedBytes < fileLen / 4,
@@ -273,7 +296,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
       col("chrom") === c && col("pos").between(a, b)
     }.reduce(_ || _)
     val pruned = table.where(pred)
-    val want = Vcf.readBgzf(spark, p, splitSize = 1L << 20).where(pred)
+    val want = Vcf.read(spark, p).where(pred)
       .select("chrom", "pos", "id").collect()
       .map(_.toString).toSeq.sorted
     val got = pruned.select("chrom", "pos", "id").collect()
@@ -288,7 +311,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scannedBytes(table.where(leaky))._1 == fileLen)
     // mixing a panel OR with an outer conjunct intersects per disjunct
     val mixed = table.where(pred && col("pos") <= 5100L)
-    assert(mixed.count() == Vcf.readBgzf(spark, p, splitSize = 1L << 20)
+    assert(mixed.count() == Vcf.read(spark, p)
       .where(pred && col("pos") <= 5100L).count())
     assert(scannedBytes(mixed)._1 <= bytes)
   }
@@ -305,7 +328,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val pred = col("chrom") === "chr2" && col("pos").isin(hits: _*)
     val got = table.where(pred).select("chrom", "pos", "id").collect()
       .map(_.toString).toSeq.sorted
-    val want = Vcf.readBgzf(spark, p, splitSize = 1L << 20).where(pred)
+    val want = Vcf.read(spark, p).where(pred)
       .select("chrom", "pos", "id").collect()
       .map(_.toString).toSeq.sorted
     assert(got == want && got.size == 3, s"got=$got")
@@ -367,7 +390,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val pred = col("chrom") === "chr2" && col("pos").between(100, 900)
     val got = table.where(pred).select("pos", "id").collect()
       .map(_.toString).toSeq.sorted
-    val want = Vcf.readBgzf(spark, d).where(pred)
+    val want = Vcf.read(spark, d).where(pred)
       .select("pos", "id").collect().map(_.toString).toSeq.sorted
     assert(got == want && got.nonEmpty)
     val (bytes, _) = scannedBytes(table.where(pred))
@@ -405,7 +428,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val got = Vcf.readRegion(spark, p, "chr2", 1010L, 1990L)
       .select("chrom", "pos", "id").collect()
       .map(_.toString).toSeq.sorted
-    val want = Vcf.readBgzf(spark, p)
+    val want = Vcf.read(spark, p)
       .where(col("chrom") === "chr2" && col("pos") <= 1990L &&
         col("pos") + length(col("ref")) - 1 >= 1010L)
       .select("chrom", "pos", "id").collect()
@@ -460,7 +483,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     def key(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(concat_ws("§", VcfBgzfSourceColumns.all: _*))
         .collect().map(_.getString(0)).toSeq.sorted
-    val want = key(Vcf.readBgzf(spark, p, splitSize = 1L << 20)
+    val want = key(Vcf.read(spark, p)
       .where(col("chrom") === "chr2" && col("pos") <= 1990L &&
         col("pos") + length(col("ref")) - 1 >= 1010L))
     assert(key(rr) == want, "routed readRegion rows diverged")
@@ -497,7 +520,7 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val joined = table.join(broadcast(panel), Seq("chrom"))
       .select(col("chrom"), col("pos"), col("id"))
     val got = joined.collect().map(_.mkString("§")).sorted.toSeq
-    val want = Vcf.readBgzf(spark, p, splitSize = 1L << 20)
+    val want = Vcf.read(spark, p)
       .join(broadcast(panel), Seq("chrom"))
       .select(col("chrom"), col("pos"), col("id"))
       .collect().map(_.mkString("§")).sorted.toSeq
