@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native sequence kernels (bound to Catalyst as graft_translate_dna by
+/** Native sequence and genotype kernels (bound to Catalyst as
+  * graft_translate_dna and graft_rewrite_gts by
   * [[graft.plans.GraftFunctions]]).
   *
   * The original `dna.translateDna` walked a 64-entry codon map *literal*
@@ -51,4 +53,63 @@ object NativeSeqOps {
     }
     UTF8String.fromBytes(out)
   }
+
+  /** Rewrite every genotype call of a VCF row for its `allele`-th
+    * (1-based) split ALT, per vcf_filter_fix.py:93-109: the FORMAT
+    * suffix from the first ':' on is dropped, a haploid call "x" pads to
+    * "x|0", an allele equal to `allele` becomes 1, "." stays ".", every
+    * other allele becomes 0, and the alleles are rejoined with '|' ("0/2"
+    * for allele 2 gives "0|1"). One byte scan per call, no regex; NULL
+    * calls stay NULL.
+    */
+  def rewriteGts(gts: ArrayData, allele: Int): ArrayData = {
+    val idx = UTF8String.fromString(Integer.toString(allele))
+    val n = gts.numElements()
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      out(i) =
+        if (gts.isNullAt(i)) null else rewriteGt(gts.getUTF8String(i), idx)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private val Dot = UTF8String.fromString(".")
+  private val Zero = UTF8String.fromString("0")
+
+  private def rewriteGt(gt: UTF8String, idx: UTF8String): UTF8String = {
+    val len = gt.numBytes()
+    var end = 0
+    var seps = 0
+    while (end < len && gt.getByte(end) != ':') {
+      val c = gt.getByte(end)
+      if (c == '|' || c == '/') seps += 1
+      end += 1
+    }
+    val haploid = seps == 0
+    val out = new Array[Byte](if (haploid) 3 else 2 * seps + 1)
+    var field = 0
+    var from = 0
+    var j = 0
+    while (j <= end) {
+      if (j == end || gt.getByte(j) == '|' || gt.getByte(j) == '/') {
+        if (field > 0) out(2 * field - 1) = '|'
+        out(2 * field) = code(UTF8String.fromAddress(gt.getBaseObject,
+          gt.getBaseOffset + from, j - from), idx)
+        field += 1
+        from = j + 1
+      }
+      j += 1
+    }
+    if (haploid) {
+      out(1) = '|'
+      out(2) = code(Zero, idx)
+    }
+    UTF8String.fromBytes(out)
+  }
+
+  /** The rewritten code of one allele. */
+  private def code(allele: UTF8String, idx: UTF8String): Byte =
+    if (allele == idx) '1' else if (allele == Dot) '.' else '0'
 }

@@ -233,13 +233,36 @@ object HaploProteins {
     // ---- 6) apply variants to the cDNA (sequential concat fold) --------
     val applied = folds.applyVars(col("vars"), col("cdna"))
 
+    // the translations of the mutated cDNA and its first stop, here: once
+    // per haplotype inside a compiled stage. After step 8 they would share
+    // a Project with step 9's UTR-filter lambda, which keeps that Project
+    // out of whole-stage codegen, and the optimizer inlines the
+    // translation into the lambda, to run once per variant.
+    val protFull = dna.translateDna(col("_mutated"),
+      when(col("_rf") > -1, col("_rf")).otherwise(lit(0)))
+    val firstStop0 = instr(col("_protFull").substr(
+      (col("_pstart") + 1).cast("int"), length(col("_protFull"))), "*")
+      .cast("long")
+    val firstStop = when(firstStop0 === 0,
+      length(col("_protFull")).cast("long"))
+      .otherwise(col("_pstart") + firstStop0 - 1)
+    // unknown frame -> reference emits the frame-1/2 translations too
+    // (process_haplotypes.py:456-470); ';'-joined here, '-' when rf known
+    val altFrameSeqs = when(col("_rf") === -1,
+      concat(dna.translateDna(col("_mutated"), lit(1)), lit(";"),
+        dna.translateDna(col("_mutated"), lit(2)))).otherwise(lit("-"))
+
     val withCdna = withStart.withColumn("_ap", applied)
       .where(col("_ap").getField("ok"))
       .withColumn("_mutated", col("_ap").getField("s"))
+      .withColumn("_protFull", protFull)
+      .withColumn("_firstStop", firstStop)
+      .withColumn("_altFrames", altFrameSeqs)
       .select("transcript", "signature", "vars", "chrom", "biotype", "cdna",
-        "_mutated", "_rf", "_rfRef", "_pstart", "_pstartRef", "_hasStart",
-        "_startLost", "_lostOrd", "hap_count", "frequency", "samples",
-        "freq_population", "freq_superpopulation")
+        "_mutated", "_protFull", "_firstStop", "_altFrames", "_rf", "_rfRef",
+        "_pstart", "_pstartRef", "_hasStart", "_startLost", "_lostOrd",
+        "hap_count", "frequency", "samples", "freq_population",
+        "freq_superpopulation")
 
     // ---- 7) re-explode the collected vars (NOT a join back to `staged` —
     // that would recompute steps 1-3): per-variant protein consequence.
@@ -296,9 +319,10 @@ object HaploProteins {
 
     // ---- 8) back to one row per haplotype; haplotype-level columns ride
     // along via first() — no join back to withCdna
-    val hapCols = Seq("chrom", "biotype", "_mutated", "_rf", "_pstart",
-      "_hasStart", "_startLost", "hap_count", "frequency", "samples",
-      "freq_population", "freq_superpopulation")
+    val hapCols = Seq("chrom", "biotype", "_mutated", "_protFull",
+      "_firstStop", "_altFrames", "_rf", "_pstart", "_hasStart", "_startLost",
+      "hap_count", "frequency", "samples", "freq_population",
+      "freq_superpopulation")
     val collected = conseqDone
       .groupBy("transcript", "signature")
       .agg(array_sort(collect_list(struct(
@@ -308,18 +332,8 @@ object HaploProteins {
         col("keepLoc"), col("keepLen")))).as("cq"),
         hapCols.map(c => first(col(c)).as(c)): _*)
 
-    // ---- 9) translate, UTR trim, UTR-variant filter --------------------
-    val protFull = dna.translateDna(col("_mutated"),
-      when(col("_rf") > -1, col("_rf")).otherwise(lit(0)))
-    val firstStop0 = instr(
-      protFull.substr((col("_pstart") + 1).cast("int"), length(protFull)),
-      "*").cast("long")
-    val firstStop = when(firstStop0 === 0, length(protFull).cast("long"))
-      .otherwise(col("_pstart") + firstStop0 - 1)
-
+    // ---- 9) UTR trim, UTR-variant filter --------------------------------
     val trimmed = collected
-      .withColumn("_protFull", protFull)
-      .withColumn("_firstStop", firstStop)
       .withColumn("_kept",
         if (!ignoreUtr) col("cq")
         else filter(col("cq"), c =>
@@ -355,11 +369,6 @@ object HaploProteins {
               (a, e) => a + substring_index(e, ":", -1).cast("double"))))),
           ";"))
     }
-    // unknown frame -> reference emits the frame-1/2 translations too
-    // (process_haplotypes.py:456-470); ';'-joined here, '-' when rf known
-    val altFrameSeqs = when(col("_rf") === -1,
-      concat(dna.translateDna(col("_mutated"), lit(1)), lit(";"),
-        dna.translateDna(col("_mutated"), lit(2)))).otherwise(lit("-"))
     // mutated-cDNA carry (keepCdna): CDS-trimmed under ignoreUtr (start
     // 0), else full sequence with the start-codon offset; -1 marks an
     // unknown frame. Dropped below when keepCdna is off — Catalyst prunes
@@ -374,7 +383,6 @@ object HaploProteins {
     val cdnaStart = when(col("_rf") > -1,
       if (ignoreUtr) lit(0L) else cdnaStartFull).otherwise(lit(-1L))
     val out = trimmed
-      .withColumn("_altFrames", altFrameSeqs)
       .withColumn("_cdnaSeq", cdnaSeq)
       .withColumn("_cdnaStart", cdnaStart)
       .withColumn("vcf_ids", array_join(transform(col("_kept"),

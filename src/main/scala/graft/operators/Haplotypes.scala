@@ -68,6 +68,36 @@ object Haplotypes {
       x => x)
   }
 
+  /** The genotype matrix aggregated ONCE per phased copy: one row per
+    * (transcript, sample, phase) in `gts`, REF copies included, with
+    *  - `changes`: the copy's ALT variants sorted by pos, struct(pos,
+    *    varId, ref) plus alt and af (from allele_af) when `gts` has those
+    *    columns; NULL for a REF copy;
+    *  - `conflict`: [[hasConflict]] over those variants;
+    *  - `signature`: their ';'-joined varIds, or "REF".
+    * The haplotype groups, their denominators and the population rollups
+    * all read this table, so the matrix is scanned and shuffled once.
+    */
+  def perCopy(gts: DataFrame): DataFrame = {
+    def opt(c: String, as: String) =
+      if (gts.columns.contains(c)) Seq(col(c).as(as)) else Nil
+    val detail = Seq(col("pos"), col("varId"), col("ref")) ++
+      opt("alt", "alt") ++ opt("allele_af", "af")
+    phased(gts)
+      .groupBy("transcript", "sample", "phase")
+      .agg(collect_list(when(col("has_alt"), struct(detail: _*)))
+        .as("_alts"))
+      .select(col("transcript"), col("sample"), col("phase"),
+        when(size(col("_alts")) > 0, array_sort(col("_alts")))
+          .as("changes"),
+        hasConflict(transform(col("_alts"), v => struct(
+          v.getField("pos").as("pos"),
+          length(v.getField("ref")).as("refLen")))).as("conflict"))
+      .withColumn("signature", coalesce(array_join(
+        transform(col("changes"), v => v.getField("varId")), ";"),
+        lit("REF")))
+  }
+
   /** Haplotype table. Input gts columns: transcript, sample, varId, pos,
     * ref, gt; optionally autosomal + sex (see [[phased]]). One row per
     * (transcript, signature): signature is the ';'-joined variant list
@@ -77,38 +107,23 @@ object Haplotypes {
     * (get_haplotypes.py:221-230). Conflicted signatures (overlapping
     * variants) are dropped, as the reference drops their carrier samples.
     */
-  def haplotypes(gts: DataFrame): DataFrame = {
-    val ph = phased(gts)
+  def haplotypes(gts: DataFrame): DataFrame =
+    haplotypesOf(perCopy(gts)).drop("changes")
 
-    // every phased copy in the data (carriers of REF included)
-    val universe = ph.select("transcript", "sample", "phase").distinct()
-
-    val sigs = ph.where(col("has_alt"))
-      .groupBy("transcript", "sample", "phase")
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("varId")))),
-            v => v.getField("varId")),
-          ";").as("signature"),
-        hasConflict(collect_list(struct(col("pos"),
-          length(col("ref")).as("refLen")))).as("conflict"))
-
-    val perCopy = universe.join(sigs,
-      Seq("transcript", "sample", "phase"), "left")
-      .withColumn("signature", coalesce(col("signature"), lit("REF")))
-      .withColumn("conflict", coalesce(col("conflict"), lit(false)))
-
+  /** [[haplotypes]] of a [[perCopy]] table, plus `changes` (the first
+    * copy's variant list; NULL for the REF group).
+    */
+  def haplotypesOf(copies: DataFrame): DataFrame = {
     // denominator: total phased copies per transcript (2 per sample, 1 for
-    // male X non-PAR copies — already reflected in the universe ploidy)
-    val copyCounts = universe
+    // male X non-PAR copies — already reflected in the per-copy ploidy)
+    val copyCounts = copies
       .groupBy("transcript")
       .agg(count(lit(1)).as("total_copies"))
-
-    perCopy
+    copies
       .where(!col("conflict"))
       .groupBy("transcript", "signature")
       .agg(
+        first(col("changes")).as("changes"),
         count(lit(1)).as("hap_count"),
         array_join(
           transform(
@@ -128,27 +143,21 @@ object Haplotypes {
     * (pop_male + 2*(pop_n - pop_male)).
     * samplePops columns: sample, population (+ sex when ploidy-aware).
     */
-  def populationFrequencies(gts: DataFrame, samplePops: DataFrame): DataFrame = {
-    val ph = phased(gts)
-    val universe = ph.select("transcript", "sample", "phase").distinct()
+  def populationFrequencies(gts: DataFrame, samplePops: DataFrame): DataFrame =
+    populationFrequenciesOf(perCopy(gts), samplePops)
 
-    // per-transcript population copy counts from the universe's own ploidy
-    val popCopies = universe
-      .join(samplePops.select("sample", "population"), Seq("sample"))
+  /** [[populationFrequencies]] of a [[perCopy]] table. Conflicted and REF
+    * copies count, in the rollup and in the denominators.
+    */
+  def populationFrequenciesOf(copies: DataFrame,
+                              samplePops: DataFrame): DataFrame = {
+    val pops = copies.join(samplePops.select("sample", "population"),
+      Seq("sample"))
+    // per-transcript population copy counts from the copies' own ploidy
+    val popCopies = pops
       .groupBy("transcript", "population")
       .agg(count(lit(1)).as("pop_copies"))
-
-    val sigs = ph.where(col("has_alt"))
-      .groupBy("transcript", "sample", "phase")
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col("pos"), col("varId")))),
-          v => v.getField("varId")),
-        ";").as("signature"))
-
-    universe.join(sigs, Seq("transcript", "sample", "phase"), "left")
-      .withColumn("signature", coalesce(col("signature"), lit("REF")))
-      .join(samplePops.select("sample", "population"), Seq("sample"))
+    pops
       .groupBy("transcript", "signature", "population")
       .agg(count(lit(1)).as("pop_count"))
       .join(popCopies, Seq("transcript", "population"))

@@ -86,8 +86,8 @@ case class GraftCall(fn: Kernel, children: Seq[Expression])
 
 /** The kernel table: every `graft_*` function and how it binds to
   * Catalyst. [[register]] and [[GraftExtensions]] expose the SQL
-  * functions; [[call]] builds any kernel, the protein folds included,
-  * as a Column.
+  * functions; [[call]] builds any kernel, the Column-only pipeline
+  * kernels included, as a Column.
   */
 object GraftFunctions {
   import ArgType._
@@ -171,8 +171,12 @@ object GraftFunctions {
       OneOf(BinaryType, StringType))
   )
 
-  /** The HaploProteins per-row folds; Column-only, not SQL functions. */
-  private val proteinFolds: Seq[Kernel] = Seq(
+  /** The VCF genotype rewrite and the HaploProteins per-row folds;
+    * Column-only, not SQL functions.
+    */
+  private val pipelineKernels: Seq[Kernel] = Seq(
+    Kernel("graft_rewrite_gts", NativeSeqOps.getClass, "rewriteGts",
+      Seq(strs, int), ArrayType(StringType), nullable = false),
     protein("graft_rna_allele", "rnaAllele", struct("rna" -> LongType,
       "ref" -> StringType, "alt" -> StringType, "intersect" -> IntegerType),
       OneOf(ArrayType(struct("start" -> LongType, "end" -> LongType))),
@@ -190,7 +194,7 @@ object GraftFunctions {
       OneOf(frames), OneOf(frames), str, bool, bool)
   )
 
-  private val byName = (all ++ proteinFolds).map(k => k.name -> k).toMap
+  private val byName = (all ++ pipelineKernels).map(k => k.name -> k).toMap
 
   /** Function-registry entries for [[all]]. */
   def descriptions

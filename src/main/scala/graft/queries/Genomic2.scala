@@ -86,11 +86,7 @@ object Genomic2 {
 
     "h3_conflicts" -> ((s, _) => {
       prep(s)
-      val ph = Haplotypes.phased(s.read.parquet(s"$fx/gts_long.parquet"))
-      ph.where(col("has_alt"))
-        .groupBy("transcript", "sample", "phase")
-        .agg(Haplotypes.hasConflict(collect_list(struct(col("pos"),
-          length(col("ref")).as("refLen")))).as("conflict"))
+      Haplotypes.perCopy(s.read.parquet(s"$fx/gts_long.parquet"))
         .where(col("conflict"))
         .select("transcript", "sample", "phase")
     }),

@@ -68,47 +68,16 @@ object GenomicPipeline {
     */
   def haploInputFrom(gts: DataFrame, metaOpt: Option[DataFrame],
                      tinfo: DataFrame): DataFrame = {
-    val ph = Haplotypes.phased(gts)
-    val universe = ph.select("transcript", "sample", "phase").distinct()
-    val copyCounts = universe.groupBy("transcript")
-      .agg(count(lit(1)).as("total_copies"))
-
-    // one heavy shuffle of the genotype matrix: per-copy variant lists.
-    // Both the haplotype grouping and the population rollup derive from
-    // this shared table (it previously ran twice — once here, once inside
-    // populationFrequencies). Persisted because two branches consume it;
-    // it is per-copy pre-aggregated, i.e. far smaller than the matrix.
-    val sigDetail = ph.where(col("has_alt"))
-      .groupBy("transcript", "sample", "phase")
-      .agg(
-        array_sort(collect_list(struct(col("pos"), col("varId"),
-          col("ref"), col("alt"), col("allele_af").as("af"))))
-          .as("changes"),
-        Haplotypes.hasConflict(collect_list(struct(col("pos"),
-          length(col("ref")).as("refLen")))).as("conflict"))
-    val perCopy = universe.join(sigDetail,
-        Seq("transcript", "sample", "phase"), "left")
-      .withColumn("conflict", coalesce(col("conflict"), lit(false)))
-      .withColumn("signature", when(col("changes").isNull, lit("REF"))
-        .otherwise(array_join(transform(col("changes"),
-          v => v.getField("varId")), ";")))
-      .persist()
+    // the one aggregation of the genotype matrix: one row per phased
+    // copy. The haplotype groups, the copy denominators and the
+    // population rollup all read it, so the matrix is scanned and
+    // shuffled once. Persisted because those branches share it; it is far
+    // smaller than the matrix.
+    val perCopy = Haplotypes.perCopy(gts).persist()
     pendingCaches.add(perCopy)
 
-    val haplos = perCopy
-      .where(col("changes").isNotNull && !col("conflict"))
-      .groupBy("transcript", "signature")
-      .agg(
-        first(col("changes")).as("changes"),
-        count(lit(1)).as("hap_count"),
-        array_join(
-          transform(array_sort(collect_list(struct(col("sample"),
-            col("phase")))), s0 => concat(s0.getField("sample"), lit(":"),
-            s0.getField("phase").cast("string"))), ";").as("samples"))
-      .join(copyCounts, Seq("transcript"))
-      .withColumn("frequency",
-        round(col("hap_count") / col("total_copies"), 6))
-      .drop("total_copies")
+    val haplos = Haplotypes.haplotypesOf(perCopy)
+      .where(col("changes").isNotNull)
 
     // population + superpopulation frequency strings "POP:0.00123;..."
     // (get_haplotypes.count_freq_pop format, 5 decimals, codes sorted) in
@@ -122,19 +91,11 @@ object GenomicPipeline {
           concat(lit("p|"), col("population")).as("population"))
           .unionByName(meta.select(col("sample"),
             concat(lit("s|"), col("superpopulation")).as("population")))
-        val popCopies = universe.join(stacked, Seq("sample"))
-          .groupBy("transcript", "population")
-          .agg(count(lit(1)).as("pop_copies"))
         def strOf(lvl: String) = array_join(array_sort(collect_list(
           when(substring_index(col("population"), "|", 1) === lvl,
             concat(substring_index(col("population"), "|", -1), lit(":"),
               format_string("%.5f", col("pop_frequency")))))), ";")
-        val popStrings = perCopy.join(stacked, Seq("sample"))
-          .groupBy("transcript", "signature", "population")
-          .agg(count(lit(1)).as("pop_count"))
-          .join(popCopies, Seq("transcript", "population"))
-          .withColumn("pop_frequency",
-            round(col("pop_count") / col("pop_copies"), 6))
+        val popStrings = Haplotypes.populationFrequenciesOf(perCopy, stacked)
           .groupBy("transcript", "signature")
           .agg(strOf("p").as("freq_population"),
             strOf("s").as("freq_superpopulation"))

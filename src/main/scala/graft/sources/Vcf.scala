@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions
 
 /** VCF source.
   *
@@ -447,26 +448,16 @@ object Vcf {
     */
   def validAllele(a: Column): Column = a.rlike("^([ACGT]+|-)$")
 
-  /** Rewrite one genotype string for the `alleleIdx`-th (1-based) split
-    * allele, per vcf_filter_fix.py:93-109: haploid "x" pads to "x|0", the
-    * chosen allele index becomes 1, every other non-missing allele 0.
-    */
-  private def rewriteGt(gt: Column, alleleIdx: Column): Column = {
-    val padded = when(!gt.contains("|") && !gt.contains("/"),
-      concat(gt, lit("|0"))).otherwise(gt)
-    array_join(
-      transform(split(padded, "[|/]"), a =>
-        when(a === alleleIdx.cast("string"), "1")
-          .when(a === ".", ".")
-          .otherwise("0")),
-      "|")
-  }
-
   /** Normalize: split multi-allelic rows into one row per ALT (pairing each
     * allele with ITS OWN AF from the comma-separated AF string, per
     * vcf_filter_fix.py:84-92), rewrite genotypes against the chosen allele,
     * drop invalid alleles, and filter by AF threshold (rows without a
     * parseable AF pass only when minAf <= 0).
+    * The genotype rewrite is one compiled kernel call per row,
+    * `graft_rewrite_gts(genotypes, allele)`
+    * ([[graft.functions.NativeSeqOps.rewriteGts]]): per call it drops the
+    * FORMAT suffix, pads a haploid "x" to "x|0", and maps the chosen
+    * allele to 1, "." to "." and every other allele to 0, '|'-joined.
     * Adds: alt (single allele), allele_af (double), genotypes (rewritten).
     */
   def normalize(parsed: DataFrame, minAf: Double = 0.0): DataFrame = {
@@ -476,9 +467,8 @@ object Vcf {
       .withColumn("allele_af",
         Casts.tryDouble(
           element_at(split(col("af"), ","), col("_ai") + 1)))
-      .withColumn("genotypes",
-        transform(col("genotypes"), g =>
-          rewriteGt(substring_index(g, ":", 1), col("_ai") + 1)))
+      .withColumn("genotypes", GraftFunctions.call("graft_rewrite_gts",
+        col("genotypes"), col("_ai") + 1))
       .drop("alt").withColumnRenamed("_alt", "alt")
       .drop("_ai")
       .where(validAllele(col("ref")) && validAllele(col("alt")))
@@ -609,12 +599,7 @@ object Vcf {
                    samples: Seq[String], dir: String,
                    blockSize: Int = 0xff00,
                    index: Boolean = false): Unit = {
-    val rank = array_position(
-      array(contigs.map(lit): _*), col("chrom"))
-    val sorted = variants
-      .withColumn("_rank",
-        when(rank > 0, rank).otherwise(lit(Long.MaxValue)))
-      .sortWithinPartitions(col("_rank"), col("pos"))
+    val sorted = sortedForShards(variants, contigs)
     val hdr = headerLines(samples, contigs)
       .mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -629,11 +614,29 @@ object Vcf {
     if (index) Tabix.indexAll(variants.sparkSession, dir)
   }
 
+  /** [[writeSharded]]'s row order: by rank in `contigs` (chroms not in
+    * it last), then pos. The contig list is ONE array literal, so the
+    * plan has the same size for 3 contigs as for the thousands of a
+    * GRCh38 build with ALT and decoy contigs.
+    */
+  private[graft] def sortedForShards(variants: DataFrame,
+                                     contigs: Seq[String]): DataFrame = {
+    val rank = array_position(typedLit(contigs), col("chrom"))
+    variants
+      .withColumn("_rank",
+        when(rank > 0, rank).otherwise(lit(Long.MaxValue)))
+      .sortWithinPartitions(col("_rank"), col("pos"))
+  }
+
   /** Long genotype matrix: one row per (variant, sample) with the sample
-    * name resolved from the #CHROM header — requires `sampleNames`.
+    * name resolved from the #CHROM header — requires `sampleNames`. The
+    * names are ONE array literal (`typedLit(samples)`), not an array of
+    * per-sample literals: a 2,504-sample cohort would otherwise add a
+    * 2,504-child expression that every later `withColumn`/`select`
+    * re-analyses. The optimized plan is the same either way.
     */
   def genotypesLong(parsed: DataFrame, samples: Seq[String]): DataFrame = {
-    val names = array(samples.map(lit): _*)
+    val names = typedLit(samples)
     parsed
       .select(col("*"),
         posexplode(col("genotypes")).as(Seq("_si", "gt")))
