@@ -203,22 +203,17 @@ object Bam {
                   regions: Seq[(String, Long, Long)],
                   maxSpan: Long = 1L << 20,
                   splitSize: Long = 32L << 20): DataFrame = {
-    import spark.implicits._
     require(regions.nonEmpty, "readRegions wants at least one region")
     val plan = regionPlan(spark, path, regions, maxSpan)
-    if (!plan.windows.exists(w => w.toByte > w.fromByte))
-      return Sam.decorate(spark.emptyDataset[BamRec].toDF())
     val inAny = regions.map { case (chrom, start, end) =>
       col("rname") === chrom && col("pos") <= end &&
         coalesce(col("ref_end"), col("pos")) >= start
     }.reduce(_ || _)
     // the merged windows read through the DSv2 relation with the plan
-    // attached, so column pruning pushes through the decorate
+    // as a field, so column pruning pushes through the decorate
     // projection into the record decode — see Vcf.readRegions
-    Sam.decorate(spark.read.format(classOf[BamBgzfSource].getName)
-      .option("splitSize", splitSize.toString)
-      .option("windowPlan", BgzfPush.registerWindows(plan.windows))
-      .load(path))
+    Sam.decorate(BgzfTable.planned(spark, BamBgzfSource.container, path,
+      splitSize, plan.windows))
       .where(inAny)
   }
 

@@ -249,25 +249,18 @@ object Bcf {
                   afFields: Seq[String] = Vcf.defaultAfFields,
                   splitSize: Long = 32L << 20,
                   maxSpan: Long = 10000L): DataFrame = {
-    import spark.implicits._
     require(regions.nonEmpty, "readRegions wants at least one region")
     val plan = regionPlan(spark, path, regions, maxSpan)
-    if (!plan.windows.exists(w => w.toByte > w.fromByte))
-      return spark.emptyDataset[BcfRec].toDF()
-        .withColumn("af", lit(null).cast("string"))
     val inAny = regions.map { case (chrom, start, end) =>
       col("chrom") === chrom && col("pos") <= end &&
         col("pos") + length(col("ref")) - 1 >= start
     }.reduce(_ || _)
     // the merged windows read through the DSv2 relation with the plan
-    // attached, so column pruning reaches the record decode (a panel
+    // as a field, so column pruning reaches the record decode (a panel
     // read aggregating pos never renders genotype strings) — see
-    // Vcf.readRegions
-    spark.read.format(classOf[BcfBgzfSource].getName)
-      .option("afFields", afFields.mkString(","))
-      .option("splitSize", splitSize.toString)
-      .option("windowPlan", BgzfPush.registerWindows(plan.windows))
-      .load(path)
+    // Vcf.readRegions; no windows tile to zero partitions
+    BgzfTable.planned(spark, BcfBgzfSource.container(afFields), path,
+      splitSize, plan.windows)
       .where(inAny)
   }
 

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.util.zip.{CRC32, Deflater, GZIPInputStream}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** BGZF block-gzip reader + writer (SAM spec §4.1) — the container
   * htslib wraps BAM/BCF/bgzipped-VCF/tabix data in: concatenated
@@ -15,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.read.text("x.vcf.gz")` just works; BamSpec pins a 943-member
   * file chaining correctly through both).
   *
-  * The DSv2 relations ([[VcfBgzfSource]], [[BcfBgzfSource]],
-  * [[BamBgzfSource]]) go further: BGZF was DESIGNED for random access,
+  * The one DSv2 relation ([[BgzfTable]], read through
+  * [[VcfBgzfSource]], [[BcfBgzfSource]] and [[BamBgzfSource]]) goes
+  * further: BGZF was DESIGNED for random access,
   * so unlike plain gzip a single huge `.vcf.gz` need not read on one
   * task — byte-range partitions each scan forward to a verified member
   * signature and inflate only their own members ([[rangeLines]] for
@@ -940,16 +941,6 @@ object Bgzf {
     val (_, toByte, p2) = search(toKey + 1)
     RegionWindow(fromByte, math.max(toByte, fromByte), p1 + p2)
   }
-
-  /** Wrap an RDD of raw lines in the `spark.read.text` single-`value`
-    * shape every text parser here consumes.
-    */
-  private[sources] def linesDf(spark: SparkSession,
-      lines: org.apache.spark.rdd.RDD[String]): DataFrame =
-    spark.createDataFrame(lines.map(org.apache.spark.sql.Row(_)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType, nullable = false))))
 
   /** Executor-side sharded-sink scaffold shared by [[Bam.writeSharded]]
     * and [[Bcf.writeSharded]]: one complete file per input partition

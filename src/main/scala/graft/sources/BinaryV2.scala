@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -12,14 +13,19 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The [[VcfBgzfSource]] pushdown contract applied to the BINARY
-  * containers: DSv2 relations over sorted BCF ([[BcfBgzfSource]],
-  * `Bcf.readTable`) and BAM ([[BamBgzfSource]], `Bam.readTable`) whose
-  * `SupportsPushDownFilters` routes a chrom/rname equality (or IN)
-  * plus pos bounds into the SAME per-file record-alignment bisection
-  * `readRegion` plans ([[Bcf.regionPlan]]/[[Bam.regionPlan]], maxSpan
+/** The one DSv2 relation over the BGZF containers ([[BgzfTable]] /
+  * [[BgzfScan]]) and the BINARY containers' sources: sorted BCF
+  * ([[BcfBgzfSource]], `Bcf.readTable`) and BAM ([[BamBgzfSource]],
+  * `Bam.readTable`). The VCF source ([[VcfBgzfSource]]) shares the same
+  * relation; a [[BgzfContainer]] value carries what differs between the
+  * three (name, schema, chrom column, region planner, reader factory).
+  * `SupportsPushDownFilters` routes a chrom/rname equality (or IN) plus
+  * pos bounds into the SAME per-file bisection `readRegion` plans
+  * ([[Vcf.regionPlan]]/[[Bcf.regionPlan]]/[[Bam.regionPlan]], maxSpan
   * 0 — the predicate is on pos itself). Every filter is retained for
-  * Spark to re-apply above the scan, so pruning only skips bytes.
+  * Spark to re-apply above the scan, so pruning only skips bytes. The
+  * region reads (`readRegion`/`readRegions`/`readPanel`) build the
+  * same table with their finished window plan as a field.
   * [[Vcf.readAuto]]'s `.bcf` branch returns the BCF relation, so the
   * CLI's SQL-shaped access prunes with no API change; `Bam.readTable`
   * wraps the base relation in [[Sam.decorate]] — the decoration is a
@@ -164,48 +170,6 @@ private[sources] object BgzfPush {
       else Array.empty)
   }
 
-  /** Driver-side registry carrying a PRE-PLANNED window list into a
-    * DSv2 scan — the piece that lets `readRegion`/`readRegions`/
-    * `readPanel` route through the relations (and so through
-    * `SupportsPushDownRequiredColumns`: a panel read that only
-    * aggregates `pos` must not split 20 genotype columns per line —
-    * the r16 bench's 20× vsqx-vs-vpnx gap). The region APIs already
-    * run the bisection themselves (any region count, maxSpan overlap
-    * back-off, mixed-layout fallback — none of which the pushed-filter
-    * DNF route can express), so they register the finished plan here
-    * and hand the scan only the key via the `windowPlan` option:
-    * windows are metadata-scale but can number files×regions, too big
-    * for an option string, and `planInputPartitions` runs on the
-    * driver anyway. Access-ordered LRU bounded at 1024 live plans — a
-    * plan is re-touched on every re-plan of its DataFrame, so eviction
-    * hits abandoned frames first; touching an EVICTED plan (>1024
-    * region frames later) is a loud error, never a silent full scan.
-    */
-  private val MaxWindowPlans = 1024
-  private val windowPlans = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Seq[Bgzf.FileWindow]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[Bgzf.FileWindow]]): Boolean =
-        size > MaxWindowPlans
-    })
-
-  def registerWindows(windows: Seq[Bgzf.FileWindow]): String = {
-    val id = java.util.UUID.randomUUID().toString
-    windowPlans.put(id, windows)
-    id
-  }
-
-  def windowPlan(id: String): Seq[Bgzf.FileWindow] = {
-    val ws = windowPlans.get(id)
-    require(ws != null,
-      s"window plan $id is gone — region-read plans are driver-session" +
-        s"-scoped (LRU, $MaxWindowPlans live); re-run the readRegion/" +
-        "readRegions/readPanel call instead of reusing its DataFrame " +
-        "across sessions")
-    ws
-  }
-
   /** Extract the chrom value set from RUNTIME filter predicates (the
     * `SupportsRuntimeV2Filtering.filter` input): a broadcast join
     * `containerRelation ⋈ small panel ON chrom` hands the scan the
@@ -273,88 +237,216 @@ private[sources] object BgzfPush {
     }.toArray
   }
 
-  /** Windows (or whole files when no disjunct is usable) tiled into
-    * partitions — the shared planInputPartitions body of the binary
-    * relations (the VCF relation adds its BGZF-only require on the
-    * full-scan-fallback class in [[VcfBgzfScan]]). A planner that
-    * emits fullScan files (the Bcf/Bam planners never do — their
-    * contig dictionaries are closed) gets them tiled WHOLE-FILE here,
-    * so no future caller can silently lose their rows through this
-    * shared helper.
-    */
-  def plan(spark: SparkSession, path: String, splitSize: Long,
-           e: Extracted,
-           regionPlan: Seq[(String, Long, Long)] => Vcf.RegionPlan)
-    : Array[InputPartition] = {
-    val windows = e.regions match {
-      case Some(rs) if rs.isEmpty =>
-        Seq.empty // statically contradictory filters
-      case Some(rs) =>
-        val p = regionPlan(rs)
-        p.windows ++ p.fullScan.map(f =>
-          Bgzf.FileWindow(f.path, f.len, 0L, f.len, 0))
-      case None => Bgzf.resolveFiles(spark, path).map { case (fp, len) =>
-        Bgzf.FileWindow(fp, len, 0L, len, 0)
-      }
-    }
-    tile(windows, splitSize)
-  }
-
-  def describe(name: String, path: String, e: Extracted,
-               windowPlanId: Option[String] = None): String =
-    windowPlanId match {
-      case Some(id) =>
-        s"$name $path (pre-planned windows: " +
-          s"${windowPlans.get(id) match {
-            case null => "expired"
-            case ws => s"${ws.count(w => w.toByte > w.fromByte)}"
-          }})"
-      case None if e.used.isEmpty => s"$name $path (full scan)"
-      case None =>
-        s"$name $path (PushedFilters: [${e.used.mkString(", ")}], " +
-          s"regions=${e.regions.map(_.map { case (c, l, h) =>
-            s"$c:[$l,$h]" }.mkString("|")).getOrElse("*")})"
-    }
-
-  /** Deflate-ratio guess for [[stats]], configurable via
-    * `spark.graft.statsInflation`: BGZF text payloads inflate ~3-6×,
-    * but genotype-dense cohort VCF/BCF commonly bgzips 10×+ — an
-    * understated sizeInBytes can flip a sort-merge join into
-    * broadcasting an over-threshold frame, so raise the conf for
-    * genotype-dense layouts (or lower it for sparse site-only data).
-    */
-  private val DefaultInflation = 6L
-
-  private[sources] def inflationFactor(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.statsInflation",
-      DefaultInflation.toString).toLong
-
-  /** `SupportsReportStatistics` body shared by the three scans: planned
-    * (compressed) bytes × the inflation factor — PRUNED and full-scan
-    * cases alike (both report compressed window bytes; the full scan's
-    * windows simply tile whole files) — so Catalyst can see that a
-    * pruned region slice of a 100 GB cohort is broadcast-small, where
-    * the DSv2 default (spark.sql.defaultSizeInBytes = Long.Max) would
-    * sort-merge every join against it.
-    */
-  def stats(parts: Array[InputPartition], factor: Long): Statistics = {
-    val bytes = parts.collect {
-      case p: BgzfScanPartition => p.end - p.start
-    }.sum
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(1L, bytes * factor))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
-    }
-  }
-
   def hadoopConf(spark: SparkSession)
     : org.apache.spark.SerializableWritable[
       org.apache.hadoop.conf.Configuration] =
     new org.apache.spark.SerializableWritable(
       new org.apache.hadoop.conf.Configuration(
         spark.sparkContext.hadoopConfiguration))
+}
+
+// ------------------------------------------------------------- relation
+
+/** What sets one BGZF container's relation apart: the name its plans
+  * print, its row shape, the column region filters key on (`chrom` or
+  * `rname`), its region planner (called with maxSpan 0 — a pushed
+  * predicate is on pos itself), its partition-reader factory (built per
+  * scan from the session and the pruned column names) and whether a
+  * full scan must first check that the files are BGZF (VCF: plain text
+  * has its own reader; BCF/BAM readers fail loudly on their own).
+  */
+private[sources] case class BgzfContainer(
+    provider: String, name: String, schema: StructType, chromCol: String,
+    regionPlan: (SparkSession, String, Seq[(String, Long, Long)]) =>
+      Vcf.RegionPlan,
+    readers: (SparkSession, Array[String]) => PartitionReaderFactory,
+    wantsBgzf: Boolean = false)
+
+/** The one DSv2 relation over the BGZF containers (VCF, BCF, BAM).
+  * `planned` is the region-read route: [[Vcf.readRegions]] and its
+  * BCF/BAM twins run the bisection themselves (any region count, the
+  * maxSpan overlap back-off, the mixed-layout fallback — none of which
+  * the pushed-filter route can express) and hand the finished windows
+  * here, so the region frame still gets column pruning (a panel read
+  * that only aggregates `pos` never splits genotype columns). Without
+  * it, the scan plans from pushed filters.
+  */
+private[sources] class BgzfTable(c: BgzfContainer, path: String,
+    splitSize: Long, planned: Option[Seq[Bgzf.FileWindow]] = None)
+  extends Table with SupportsRead {
+  require(path != null, s"${c.provider} needs a path")
+
+  override def name(): String = s"${c.name}($path)"
+  override def schema(): StructType = c.schema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+
+  /** Extract the prunable predicates ([[BgzfPush.extract]]). EVERY
+    * filter is returned as residual (Spark re-applies all of them above
+    * the scan), so extraction can only skip bytes, never rows: the
+    * window contract guarantees every row matching the extracted
+    * predicates lies inside the planned windows.
+    */
+  override def newScanBuilder(
+      options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownFilters
+      with SupportsPushDownRequiredColumns {
+      private var required: StructType = c.schema
+      private var e = BgzfPush.Unextracted
+      override def pushFilters(fs: Array[Filter]): Array[Filter] = {
+        e = BgzfPush.extract(fs, c.chromCol, "pos"); fs
+      }
+      override def pushedFilters(): Array[Filter] = e.used
+      override def pruneColumns(s: StructType): Unit = required = s
+      override def build(): Scan =
+        new BgzfScan(c, path, splitSize, planned, required, e)
+    }
+}
+
+private[sources] object BgzfTable {
+  /** The table `spark.read.format(provider).load(path)` reads. Spark
+    * hands getTable the ORIGINAL-case option map (asCaseSensitiveMap)
+    * — re-wrapped so `afFields`/`splitSize` resolve regardless of
+    * caller casing.
+    */
+  def fromOptions(properties: java.util.Map[String, String],
+                  container: Seq[String] => BgzfContainer): BgzfTable = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    new BgzfTable(
+      container(Option(opts.get("affields")).map(_.split(",").toSeq)
+        .getOrElse(Vcf.defaultAfFields)),
+      opts.get("path"),
+      Option(opts.get("splitsize")).map(_.toLong).getOrElse(32L << 20))
+  }
+
+  /** A region read's frame: the relation over `path` carrying its
+    * finished window plan — built here, as `DataFrameReader.load`
+    * builds it, so the plan travels as a field rather than an option.
+    */
+  def planned(spark: SparkSession, c: BgzfContainer, path: String,
+              splitSize: Long, windows: Seq[Bgzf.FileWindow]): DataFrame =
+    GraftColumnBridge.tableFrame(spark,
+      new BgzfTable(c, path, splitSize, Some(windows)))
+}
+
+/** One byte range of one file — the DSv2 partition (package-visible so
+  * the specs can pin scanned-byte totals off the physical plan).
+  */
+private[graft] case class BgzfScanPartition(path: String, start: Long,
+                                           end: Long, len: Long)
+  extends InputPartition
+
+private[sources] class BgzfScan(c: BgzfContainer, path: String,
+    splitSize: Long, planned: Option[Seq[Bgzf.FileWindow]],
+    required: StructType, e: BgzfPush.Extracted)
+  extends Scan with Batch with SupportsReportStatistics
+  with SupportsRuntimeV2Filtering {
+
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+
+  override def description(): String = planned match {
+    case Some(ws) =>
+      s"${c.name} $path (pre-planned windows: " +
+        s"${ws.count(w => w.toByte > w.fromByte)})"
+    case None if e.used.isEmpty => s"${c.name} $path (full scan)"
+    case None =>
+      s"${c.name} $path (PushedFilters: [${e.used.mkString(", ")}], " +
+        s"regions=${e.regions.map(_.map { case (ch, l, h) =>
+          s"$ch:[$l,$h]" }.mkString("|")).getOrElse("*")})"
+  }
+
+  /** Runtime join pruning ([[BgzfPush.runtimeChromSet]]): a broadcast
+    * join `relation ⋈ small panel ON chrom` re-plans the scan to the
+    * build side's chromosomes — the join-shaped twin of a literal
+    * `WHERE chrom IN (…)`. A pre-planned region read opts out (its
+    * windows are already bisected, opaque bytes).
+    */
+  override def filterAttributes(): Array[NamedReference] =
+    if (planned.isDefined) Array.empty
+    else Array(Expressions.column(c.chromCol))
+  override def filter(predicates: Array[Predicate]): Unit =
+    BgzfPush.runtimeChromSet(predicates, c.chromCol)
+      .foreach(s => runtimeChroms = Some(s))
+
+  @volatile private var runtimeChroms: Option[Set[String]] = None
+  private var cachedChroms: Option[Set[String]] = None
+  private var cachedParts: Array[InputPartition] = null
+
+  /** One shared lazy byte plan: estimateStatistics (optimizer time) and
+    * planInputPartitions (physical planning) see the same windows; the
+    * cache re-keys when a runtime filter lands between the two.
+    */
+  private def parts: Array[InputPartition] = synchronized {
+    if (cachedParts == null || cachedChroms != runtimeChroms) {
+      cachedChroms = runtimeChroms
+      cachedParts = BgzfPush.tile(planned.getOrElse(
+        windows(BgzfPush.applyRuntime(e, runtimeChroms))), splitSize)
+    }
+    cachedParts
+  }
+
+  /** Pushed-filter byte plan: with usable chrom disjuncts, the
+    * container's exact region bisection; otherwise, or for files the
+    * plan can't rank, whole files.
+    */
+  private def windows(e: BgzfPush.Extracted): Seq[Bgzf.FileWindow] = {
+    val spark = SparkSession.active
+    def wantBgzf(fp: String, isBgzf: => Boolean): Unit =
+      if (c.wantsBgzf) require(isBgzf, s"${c.provider} wants BGZF " +
+        s"files; $fp is not (read plain text through Vcf.read)")
+    e.regions match {
+      case Some(rs) if rs.isEmpty =>
+        Seq.empty // statically contradictory filters
+      case Some(rs) =>
+        val plan = c.regionPlan(spark, path, rs)
+        plan.fullScan.foreach(f => wantBgzf(f.path, f.isBgzf))
+        plan.windows ++ plan.fullScan.map(f =>
+          Bgzf.FileWindow(f.path, f.len, 0L, f.len, 0))
+      case None =>
+        val files = Bgzf.resolveFiles(spark, path)
+        // one 18-byte signature peek, first file only — a non-BGZF
+        // file elsewhere in the directory fails loudly per range at
+        // read time ("not a BGZF member"), without an N-open planning
+        // pass here
+        files.headOption.foreach { case (fp, _) => wantBgzf(fp,
+          Bgzf.isBgzf(spark.sparkContext.hadoopConfiguration, fp)) }
+        files.map { case (fp, len) => Bgzf.FileWindow(fp, len, 0L, len, 0) }
+    }
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = parts
+
+  /** Planned (compressed) bytes × [[BgzfScan.StatsInflation]], pruned
+    * and full scans alike, so Catalyst can see that a pruned region
+    * slice of a 100 GB cohort is broadcast-small, where the DSv2
+    * default (spark.sql.defaultSizeInBytes = Long.Max) would sort-merge
+    * every join against it.
+    */
+  override def estimateStatistics(): Statistics = {
+    val bytes = parts.collect {
+      case p: BgzfScanPartition => p.end - p.start
+    }.sum
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(
+          math.max(1L, bytes * BgzfScan.StatsInflation))
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.empty()
+    }
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    c.readers(SparkSession.active, required.fieldNames)
+}
+
+private[graft] object BgzfScan {
+  /** Deflate-ratio guess behind the reported size: BGZF text payloads
+    * inflate ~3-6×. Genotype-dense cohort VCF/BCF commonly bgzips 10×+,
+    * so the estimate errs small there — an over-threshold frame can
+    * broadcast.
+    */
+  val StatsInflation = 6L
 }
 
 // ------------------------------------------------------------------ BCF
@@ -364,104 +456,19 @@ class BcfBgzfSource extends TableProvider {
     VcfBgzfSource.schema
   override def getTable(schema: StructType,
                         partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table = {
-    // original-case map (asCaseSensitiveMap) — re-wrap, see
-    // [[VcfBgzfSource.getTable]]
-    val opts = new CaseInsensitiveStringMap(properties)
-    new BcfBgzfTable(opts.get("path"),
-      Option(opts.get("affields")).map(_.split(",").toSeq)
-        .getOrElse(Vcf.defaultAfFields),
-      Option(opts.get("splitsize")).map(_.toLong)
-        .getOrElse(32L << 20),
-      Option(opts.get("windowplan")))
-  }
+                        properties: java.util.Map[String, String]): Table =
+    BgzfTable.fromOptions(properties, BcfBgzfSource.container)
   // supportsExternalMetadata stays false (the default): the row shape
   // is fixed by the container, so a user-supplied schema is a clear
   // AnalysisException, not a silent override
 }
 
-private[sources] class BcfBgzfTable(path: String, afFields: Seq[String],
-                                    splitSize: Long,
-                                    windowPlanId: Option[String] = None)
-  extends Table with SupportsRead {
-  require(path != null, "graft.sources.BcfBgzfSource needs a path")
-  override def name(): String = s"graft_bcf($path)"
-  override def schema(): StructType = VcfBgzfSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-      with SupportsPushDownRequiredColumns {
-      private var required: StructType = VcfBgzfSource.schema
-      private var e = BgzfPush.Unextracted
-      override def pushFilters(fs: Array[Filter]): Array[Filter] = {
-        e = BgzfPush.extract(fs, "chrom", "pos"); fs
-      }
-      override def pushedFilters(): Array[Filter] = e.used
-      override def pruneColumns(s: StructType): Unit = required = s
-      override def build(): Scan =
-        new BcfBgzfScan(path, afFields, splitSize, required, e,
-          windowPlanId)
-    }
-}
-
-private[sources] class BcfBgzfScan(path: String, afFields: Seq[String],
-    splitSize: Long, required: StructType, e: BgzfPush.Extracted,
-    windowPlanId: Option[String] = None)
-  extends Scan with Batch with SupportsReportStatistics
-  with SupportsRuntimeV2Filtering {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    BgzfPush.describe("graft_bcf", path, e, windowPlanId)
-
-  // runtime join pruning: a broadcast join against a small panel on
-  // chrom hands the build side's key set here, and the scan re-plans
-  // to those chromosomes' windows (the windowPlan route already
-  // bisected — its windows are opaque bytes, so it opts out)
-  override def filterAttributes(): Array[NamedReference] =
-    if (windowPlanId.isDefined) Array.empty
-    else Array(Expressions.column("chrom"))
-  override def filter(predicates: Array[Predicate]): Unit =
-    BgzfPush.runtimeChromSet(predicates, "chrom")
-      .foreach(s => runtimeChroms = Some(s))
-
-  @volatile private var runtimeChroms: Option[Set[String]] = None
-  private var cachedChroms: Option[Set[String]] = None
-  private var cachedParts: Array[InputPartition] = null
-
-  // one shared byte plan: estimateStatistics (optimizer-time) and
-  // planInputPartitions (physical planning) see the same windows — the
-  // cache re-keys when a runtime filter lands between the two; a
-  // registered windowPlan (the region-API route) tiles verbatim
-  private def parts: Array[InputPartition] = synchronized {
-    if (cachedParts == null || cachedChroms != runtimeChroms) {
-      cachedChroms = runtimeChroms
-      cachedParts = windowPlanId match {
-        case Some(id) =>
-          BgzfPush.tile(BgzfPush.windowPlan(id), splitSize)
-        case None =>
-          val spark = SparkSession.active
-          BgzfPush.plan(spark, path, splitSize,
-            BgzfPush.applyRuntime(e, runtimeChroms),
-            rs => Bcf.regionPlan(spark, path, rs, maxSpan = 0L))
-      }
-    }
-    cachedParts
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = parts
-
-  override def estimateStatistics(): Statistics =
-    BgzfPush.stats(parts, BgzfPush.inflationFactor(SparkSession.active))
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    new BcfBgzfReaderFactory(BgzfPush.hadoopConf(spark),
-      required.fieldNames, afFields,
-      Bgzf.alignGuard(spark, "graft.bcf.unaligned.ranges"))
-  }
+private[sources] object BcfBgzfSource {
+  def container(afFields: Seq[String]): BgzfContainer = BgzfContainer(
+    classOf[BcfBgzfSource].getName, "graft_bcf", VcfBgzfSource.schema,
+    "chrom", (spark, path, rs) => Bcf.regionPlan(spark, path, rs, 0L),
+    (spark, cols) => new BcfBgzfReaderFactory(BgzfPush.hadoopConf(spark),
+      cols, afFields, Bgzf.alignGuard(spark, "graft.bcf.unaligned.ranges")))
 }
 
 private[sources] class BcfBgzfReaderFactory(
@@ -528,15 +535,8 @@ class BamBgzfSource extends TableProvider {
     BamBgzfSource.schema
   override def getTable(schema: StructType,
                         partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table = {
-    // original-case map (asCaseSensitiveMap) — re-wrap, see
-    // [[VcfBgzfSource.getTable]]
-    val opts = new CaseInsensitiveStringMap(properties)
-    new BamBgzfTable(opts.get("path"),
-      Option(opts.get("splitsize")).map(_.toLong)
-        .getOrElse(32L << 20),
-      Option(opts.get("windowplan")))
-  }
+                        properties: java.util.Map[String, String]): Table =
+    BgzfTable.fromOptions(properties, _ => BamBgzfSource.container)
   // supportsExternalMetadata stays false (the default) — see the BCF
   // twin above
 }
@@ -558,81 +558,12 @@ private[sources] object BamBgzfSource {
     StructField("seq", StringType),
     StructField("qual", StringType),
     StructField("tags", StringType)))
-}
 
-private[sources] class BamBgzfTable(path: String, splitSize: Long,
-                                    windowPlanId: Option[String] = None)
-  extends Table with SupportsRead {
-  require(path != null, "graft.sources.BamBgzfSource needs a path")
-  override def name(): String = s"graft_bam($path)"
-  override def schema(): StructType = BamBgzfSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-      with SupportsPushDownRequiredColumns {
-      private var required: StructType = BamBgzfSource.schema
-      private var e = BgzfPush.Unextracted
-      override def pushFilters(fs: Array[Filter]): Array[Filter] = {
-        e = BgzfPush.extract(fs, "rname", "pos"); fs
-      }
-      override def pushedFilters(): Array[Filter] = e.used
-      override def pruneColumns(s: StructType): Unit = required = s
-      override def build(): Scan =
-        new BamBgzfScan(path, splitSize, required, e, windowPlanId)
-    }
-}
-
-private[sources] class BamBgzfScan(path: String, splitSize: Long,
-    required: StructType, e: BgzfPush.Extracted,
-    windowPlanId: Option[String] = None)
-  extends Scan with Batch with SupportsReportStatistics
-  with SupportsRuntimeV2Filtering {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    BgzfPush.describe("graft_bam", path, e, windowPlanId)
-
-  // runtime join pruning on the reference-name key — see the BCF twin
-  override def filterAttributes(): Array[NamedReference] =
-    if (windowPlanId.isDefined) Array.empty
-    else Array(Expressions.column("rname"))
-  override def filter(predicates: Array[Predicate]): Unit =
-    BgzfPush.runtimeChromSet(predicates, "rname")
-      .foreach(s => runtimeChroms = Some(s))
-
-  @volatile private var runtimeChroms: Option[Set[String]] = None
-  private var cachedChroms: Option[Set[String]] = None
-  private var cachedParts: Array[InputPartition] = null
-
-  private def parts: Array[InputPartition] = synchronized {
-    if (cachedParts == null || cachedChroms != runtimeChroms) {
-      cachedChroms = runtimeChroms
-      cachedParts = windowPlanId match {
-        case Some(id) =>
-          BgzfPush.tile(BgzfPush.windowPlan(id), splitSize)
-        case None =>
-          val spark = SparkSession.active
-          BgzfPush.plan(spark, path, splitSize,
-            BgzfPush.applyRuntime(e, runtimeChroms),
-            rs => Bam.regionPlan(spark, path, rs, maxSpan = 0L))
-      }
-    }
-    cachedParts
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = parts
-
-  override def estimateStatistics(): Statistics =
-    BgzfPush.stats(parts, BgzfPush.inflationFactor(SparkSession.active))
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    new BamBgzfReaderFactory(BgzfPush.hadoopConf(spark),
-      required.fieldNames,
-      Bgzf.alignGuard(spark, "graft.bam.unaligned.ranges"))
-  }
+  val container: BgzfContainer = BgzfContainer(
+    classOf[BamBgzfSource].getName, "graft_bam", schema, "rname",
+    (spark, path, rs) => Bam.regionPlan(spark, path, rs, 0L),
+    (spark, cols) => new BamBgzfReaderFactory(BgzfPush.hadoopConf(spark),
+      cols, Bgzf.alignGuard(spark, "graft.bam.unaligned.ranges")))
 }
 
 private[sources] class BamBgzfReaderFactory(

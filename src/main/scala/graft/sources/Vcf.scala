@@ -169,29 +169,20 @@ object Vcf {
       filesHint = sn.files)
     // the bisected windows — and any BGZF full-scan-fallback files,
     // tiled whole — read through the DSv2 relation with the finished
-    // plan attached (BgzfPush.registerWindows), so Catalyst's COLUMN
-    // PRUNING reaches the per-line parse: a panel read that only
-    // aggregates pos must not split 20 genotype columns per line (the
-    // r16 bench's 20× vsqx-vs-vpnx gap was exactly this). Only
-    // non-BGZF fallback files (plain text / plain gzip in a mixed
-    // directory) still parse through the column pipeline.
-    val bgzfWindows = plan.windows.filter(w => w.toByte > w.fromByte) ++
+    // plan as a field, so Catalyst's COLUMN PRUNING reaches the
+    // per-line parse: a panel read that only aggregates pos must not
+    // split 20 genotype columns per line (the r16 bench's 20×
+    // vsqx-vs-vpnx gap was exactly this). Only non-BGZF fallback files
+    // (plain text / plain gzip in a mixed directory) still parse
+    // through the column pipeline.
+    val bgzfWindows = plan.windows ++
       plan.fullScan.filter(_.isBgzf).map(f =>
         Bgzf.FileWindow(f.path, f.len, 0L, f.len, 0))
-    val windowFrame =
-      if (bgzfWindows.nonEmpty)
-        Some(spark.read.format(classOf[VcfBgzfSource].getName)
-          .option("afFields", afFields.mkString(","))
-          .option("splitSize", splitSize.toString)
-          .option("windowPlan", BgzfPush.registerWindows(bgzfWindows))
-          .load(path))
-      else None
     val textFrames = plan.fullScan.filterNot(_.isBgzf).map(f =>
       parseLines(spark.read.text(f.path), "value", afFields))
-    (windowFrame.toSeq ++ textFrames)
-      .reduceOption(_.unionAll(_))
-      .getOrElse(parseLines(Bgzf.linesDf(spark,
-        spark.sparkContext.emptyRDD[String]), "value", afFields))
+    (BgzfTable.planned(spark, VcfBgzfSource.container(afFields), path,
+      splitSize, bgzfWindows) +: textFrames)
+      .reduce(_.unionAll(_))
       .where(inAny)
   }
 
@@ -634,12 +625,19 @@ object Vcf {
     * per-sample literals: a 2,504-sample cohort would otherwise add a
     * 2,504-child expression that every later `withColumn`/`select`
     * re-analyses. The optimized plan is the same either way.
+    *
+    * The explode is `posexplode_outer` plus a not-null filter on the
+    * index, which keeps exactly `posexplode`'s rows: an inner
+    * `posexplode` lets `InferFiltersFromGenerate` add a `size(genotypes)
+    * > 0` filter that is pushed below [[normalize]]'s Project, where it
+    * evaluates `graft_rewrite_gts` a second time per allele row.
     */
   def genotypesLong(parsed: DataFrame, samples: Seq[String]): DataFrame = {
     val names = typedLit(samples)
     parsed
       .select(col("*"),
-        posexplode(col("genotypes")).as(Seq("_si", "gt")))
+        posexplode_outer(col("genotypes")).as(Seq("_si", "gt")))
+      .where(col("_si").isNotNull)
       .withColumn("sample", element_at(names, col("_si") + 1))
       .drop("_si", "genotypes")
   }

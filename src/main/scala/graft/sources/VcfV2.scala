@@ -2,35 +2,31 @@ package graft.sources
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 relation over sorted BGZF VCF — the piece that makes
-  * region pruning AUTOMATIC for SQL users: `readRegion` prunes only
-  * when callers know to ask for it, but the plan you want at 100× is
-  * the one `Vcf.readAuto(path).where("chrom='17' AND pos BETWEEN a
-  * AND b")` produces on its own. This source implements
-  * `SupportsPushDownFilters`: Catalyst hands the scan the conjunctive
-  * top-level filters, the builder extracts a `chrom` equality (or IN)
-  * plus `pos` bounds, and `planInputPartitions` turns them into the
-  * SAME per-file bisected byte windows `readRegion` uses
-  * ([[Vcf.regionPlan]] — sharded directories/globs bisect per shard,
-  * unrankable files full-scan, merged windows tile into ranges). Every
-  * filter is also RETAINED for Spark to re-apply above the scan
-  * (`pushFilters` returns its input), so the window's bounded overhang
-  * of out-of-range rows is invisible and pruning can never change
-  * results — only skip bytes. `SupportsPushDownRequiredColumns` prunes
-  * the per-line parse (a `select(chrom, pos)` never splits genotype
-  * columns or allocates the array).
+/** The VCF container of the one BGZF relation ([[BgzfTable]]) — the
+  * piece that makes region pruning AUTOMATIC for SQL users:
+  * `readRegion` prunes only when callers know to ask for it, but the
+  * plan you want at 100× is the one `Vcf.readAuto(path).where("chrom=
+  * '17' AND pos BETWEEN a AND b")` produces on its own. The relation
+  * extracts a `chrom` equality (or IN) plus `pos` bounds from the
+  * pushed filters and plans the SAME per-file bisected byte windows
+  * `readRegion` uses ([[Vcf.regionPlan]] — sharded directories/globs
+  * bisect per shard, unrankable files full-scan, merged windows tile
+  * into ranges). Every filter is also RETAINED for Spark to re-apply
+  * above the scan, so the window's bounded overhang of out-of-range
+  * rows is invisible and pruning can never change results — only skip
+  * bytes. Column pruning reaches the per-line parse here (a
+  * `select(chrom, pos)` never splits genotype columns or allocates the
+  * array). This file holds what is VCF's own: the provider, the row
+  * shape, the [[BgzfContainer]] value and the line reader.
   *
   * Row parity: the partition reader re-implements [[Vcf.parseLines]]'s
   * column semantics record-for-record (raw-line header/blank filter
@@ -53,18 +49,8 @@ class VcfBgzfSource extends TableProvider {
 
   override def getTable(schema: StructType,
                         partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table = {
-    // Spark hands getTable the ORIGINAL-case option map
-    // (asCaseSensitiveMap) — re-wrap so `.option("afFields", …)` /
-    // `.option("splitSize", …)` resolve regardless of caller casing
-    val opts = new CaseInsensitiveStringMap(properties)
-    new VcfBgzfTable(opts.get("path"),
-      Option(opts.get("affields")).map(_.split(",").toSeq)
-        .getOrElse(Vcf.defaultAfFields),
-      Option(opts.get("splitsize")).map(_.toLong)
-        .getOrElse(32L << 20),
-      Option(opts.get("windowplan")))
-  }
+                        properties: java.util.Map[String, String]): Table =
+    BgzfTable.fromOptions(properties, VcfBgzfSource.container)
 
   // supportsExternalMetadata stays false (the default): the row shape
   // is fixed by the container, so a user-supplied schema is a clear
@@ -72,6 +58,13 @@ class VcfBgzfSource extends TableProvider {
 }
 
 private[sources] object VcfBgzfSource {
+  def container(afFields: Seq[String]): BgzfContainer = BgzfContainer(
+    classOf[VcfBgzfSource].getName, "graft_vcf_bgzf", schema, "chrom",
+    (spark, path, rs) => Vcf.regionPlan(spark, path, rs, maxSpan = 0L),
+    (spark, cols) => new VcfBgzfReaderFactory(BgzfPush.hadoopConf(spark),
+      cols, afFields),
+    wantsBgzf = true)
+
   /** The [[Vcf.parseLines]] row shape, fixed order. */
   val schema: StructType = StructType(Seq(
     StructField("chrom", StringType),
@@ -133,158 +126,6 @@ private[sources] object VcfBgzfSource {
   private[sources] def fieldIndex(name: String): Int =
     FieldOf.getOrElse(name,
       throw new IllegalArgumentException(s"unknown column $name"))
-}
-
-private[sources] class VcfBgzfTable(path: String, afFields: Seq[String],
-                                    splitSize: Long,
-                                    windowPlanId: Option[String] = None)
-  extends Table with SupportsRead {
-  require(path != null, "graft.sources.VcfBgzfSource needs a path")
-
-  override def name(): String = s"graft_vcf_bgzf($path)"
-  override def schema(): StructType = VcfBgzfSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    new VcfBgzfScanBuilder(path, afFields, splitSize, windowPlanId)
-}
-
-private[sources] class VcfBgzfScanBuilder(path: String,
-                                          afFields: Seq[String],
-                                          splitSize: Long,
-                                          windowPlanId: Option[String])
-  extends ScanBuilder with SupportsPushDownFilters
-  with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = VcfBgzfSource.schema
-  private var e = BgzfPush.Unextracted
-
-  /** Extract the prunable predicates — chrom equality/IN plus pos
-    * bounds, in conjunct OR bounded-DNF panel shape ([[BgzfPush
-    * .extract]], shared with the BCF/BAM relations). EVERYTHING is
-    * returned as residual (Spark re-applies all filters above the
-    * scan), so extraction can only skip bytes, never rows: the window
-    * contract guarantees every line matching the extracted predicates
-    * lies inside the planned windows.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    e = BgzfPush.extract(filters, "chrom", "pos")
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = e.used
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new VcfBgzfScan(path, afFields, splitSize, required, e, windowPlanId)
-}
-
-/** One byte range of one file — the DSv2 partition (package-visible so
-  * the specs can pin scanned-byte totals off the physical plan).
-  */
-private[graft] case class BgzfScanPartition(path: String, start: Long,
-                                           end: Long, len: Long)
-  extends InputPartition
-
-private[sources] class VcfBgzfScan(path: String, afFields: Seq[String],
-    splitSize: Long, required: StructType, e: BgzfPush.Extracted,
-    windowPlanId: Option[String] = None)
-  extends Scan with Batch with SupportsReportStatistics
-  with SupportsRuntimeV2Filtering {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def description(): String =
-    BgzfPush.describe("graft_vcf_bgzf", path, e, windowPlanId)
-
-  /** Runtime join pruning ([[BgzfPush.runtimeChromSet]]): a broadcast
-    * join `readTable ⋈ small panel ON chrom` re-plans the scan to the
-    * build side's chromosomes — the join-shaped twin of a literal
-    * `WHERE chrom IN (…)`. The windowPlan route opts out (its windows
-    * are already bisected, opaque bytes).
-    */
-  override def filterAttributes(): Array[NamedReference] =
-    if (windowPlanId.isDefined) Array.empty
-    else Array(Expressions.column("chrom"))
-  override def filter(predicates: Array[Predicate]): Unit =
-    BgzfPush.runtimeChromSet(predicates, "chrom")
-      .foreach(s => runtimeChroms = Some(s))
-
-  @volatile private var runtimeChroms: Option[Set[String]] = None
-  private var cachedChroms: Option[Set[String]] = None
-  private var cachedParts: Array[InputPartition] = null
-
-  /** Driver-side byte plan: a registered `windowPlan` (the region-API
-    * route — [[Vcf.readRegions]] already bisected, with its overlap
-    * maxSpan) tiles verbatim; else with usable chrom disjuncts, the
-    * exact [[Vcf.regionPlan]] bisection (maxSpan 0 — the predicate is
-    * on pos itself, so no REF-span back-off is needed to keep every
-    * MATCHING row inside the window); otherwise, or for files the plan
-    * can't rank, full-file tiling. Non-BGZF bytes are a loud error —
-    * this source exists for the member-chain layout. One shared lazy
-    * plan: estimateStatistics and planInputPartitions see the same
-    * windows.
-    */
-  private def parts: Array[InputPartition] = synchronized {
-    if (cachedParts == null || cachedChroms != runtimeChroms) {
-      cachedChroms = runtimeChroms
-      cachedParts = windowPlanId match {
-        case Some(id) =>
-          BgzfPush.tile(BgzfPush.windowPlan(id), splitSize)
-        case None =>
-          planParts(BgzfPush.applyRuntime(e, runtimeChroms))
-      }
-    }
-    cachedParts
-  }
-
-  private def planParts(e: BgzfPush.Extracted): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val windows = e.regions match {
-      case Some(rs) if rs.isEmpty =>
-        Seq.empty // statically contradictory filters
-      case Some(rs) =>
-        val plan = Vcf.regionPlan(spark, path, rs, maxSpan = 0L)
-        plan.fullScan.foreach { f =>
-          require(f.isBgzf,
-            s"graft.sources.VcfBgzfSource wants BGZF files; ${f.path} " +
-              "is not (read plain text through Vcf.read)")
-        }
-        plan.windows ++ plan.fullScan.map(f =>
-          Bgzf.FileWindow(f.path, f.len, 0L, f.len, 0))
-      case None =>
-        val files = Bgzf.resolveFiles(spark, path)
-        // one 18-byte signature peek, first file only — a non-BGZF
-        // file elsewhere in the directory fails loudly per range at
-        // read time ("not a BGZF member"), without an N-open planning
-        // pass here
-        files.headOption.foreach { case (fp, _) =>
-          require(Bgzf.isBgzf(spark.sparkContext.hadoopConfiguration, fp),
-            s"graft.sources.VcfBgzfSource wants BGZF files; $fp is " +
-              "not (read plain text through Vcf.read)")
-        }
-        files.map { case (fp, len) =>
-          Bgzf.FileWindow(fp, len, 0L, len, 0)
-        }
-    }
-    BgzfPush.tile(windows, splitSize)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = parts
-
-  override def estimateStatistics(): Statistics =
-    BgzfPush.stats(parts, BgzfPush.inflationFactor(SparkSession.active))
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    new VcfBgzfReaderFactory(BgzfPush.hadoopConf(spark),
-      required.fieldNames, afFields)
-  }
 }
 
 private[sources] class VcfBgzfReaderFactory(

@@ -269,5 +269,23 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offenders.isEmpty,
       "a second scan engine beside the DSv2 relations — read through " +
         s"readTable instead: ${offenders.mkString(", ")}")
+    // region reads hand the relation their plan as a field: no side
+    // channel keyed by a read option
+    val sideChannel = sources.collect {
+      case (f, t) if t.toLowerCase.contains("windowplan") ||
+        t.contains("registerWindows") => f
+    }
+    assert(sideChannel.isEmpty,
+      s"window-plan side channel under src/main: $sideChannel")
+    // one relation for VCF, BCF and BAM: one ScanBuilder with filter
+    // pushdown and one Scan under graft/sources
+    for (iface <- Seq("SupportsPushDownFilters", "Scan")) {
+      val impls = sources.filter(_._1.contains("/graft/sources/"))
+        .flatMap { case (f, t) =>
+          s"\\b(?:extends|with)\\s+$iface\\b".r.findAllIn(t).map(_ => f)
+        }
+      assert(impls.size <= 1,
+        s"$iface implemented ${impls.size} times: ${impls.mkString(", ")}")
+    }
   }
 }

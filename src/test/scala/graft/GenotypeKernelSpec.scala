@@ -8,7 +8,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.GraftFunctions
+import graft.plans.{GraftCall, GraftFunctions}
 import graft.sources.Vcf
 import GraftFunctionsSpec.kernelsByStage
 
@@ -171,6 +171,25 @@ class GenotypeKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     norm.collect()
     assert(kernelsByStage(norm.queryExecution.executedPlan) ==
       (Set("graft_rewrite_gts"), Set.empty[String]))
+  }
+
+  test("the optimized plan of genotypesLong(normalize(readTable(...))) " +
+    "calls graft_rewrite_gts exactly once") {
+    graft.fixtures.GenomicFixtures.ensure(spark)
+    val path = graft.fixtures.GenomicFixtures.vcfGzPath
+    val long = Vcf.genotypesLong(Vcf.normalize(Vcf.readTable(spark, path)),
+      Vcf.sampleNames(spark, graft.fixtures.GenomicFixtures.vcfPath))
+    val calls = long.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.flatMap(_.collect {
+        case GraftCall(k, _) if k.name == "graft_rewrite_gts" => k
+      })
+    }.flatten
+    assert(calls.size == 1, long.queryExecution.optimizedPlan.toString)
+    // the rows are posexplode's: one per (allele row, sample)
+    val norm = Vcf.normalize(Vcf.read(spark,
+      graft.fixtures.GenomicFixtures.vcfPath))
+    val want = norm.select(posexplode(col("genotypes"))).count()
+    assert(long.count() == want && want > 0)
   }
 
   /** Expression nodes in the analyzed plan. */

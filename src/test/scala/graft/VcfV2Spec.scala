@@ -355,8 +355,8 @@ class VcfV2Spec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("id * 10 as pos", "'x' as tag")
     // threshold between (pruned window × f) and (full file × f): the
     // pruned side must broadcast, the full side must not — f is the
-    // configurable stats inflation (spark.graft.statsInflation)
-    val f = spark.conf.get("spark.graft.statsInflation", "6").toLong
+    // relation's stats inflation constant
+    val f = graft.sources.BgzfScan.StatsInflation
     val threshold = fileLen * f / 2
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
