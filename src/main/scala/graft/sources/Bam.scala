@@ -52,6 +52,8 @@ private[graft] case class BamRec(
   */
 object Bam {
 
+  import Bgzf.writeLe32
+
   private val SeqCode = "=ACMGRSVTWYHKDBN"
   private val CigarOps = "MIDNSHP=X"
 
@@ -59,24 +61,10 @@ object Bam {
   /** The BAM read: a DSv2 relation ([[BamBgzfSource]]) over files,
     * directories and globs, wrapped in [[Sam.decorate]], one partition
     * per `splitSize` byte range per file — one huge BAM parallelizes
-    * WITHOUT a .bai/splitting index. Two-layer alignment (the spark-bam
-    * / Hadoop-BAM idea, rebuilt on this repo's BGZF machinery):
-    *
-    *  1. container: anchor each range at its first signature-verified
-    *     BGZF member start (18 fixed-layout bytes, BSIZE-chained —
-    *     [[Bgzf]]);
-    *  2. records: BAM records carry no sync marker and legally span
-    *     members, so the range scans its inflated stream byte-by-byte
-    *     for a PLAUSIBLE record start ([[plausibleChain]]) and requires
-    *     a CHAIN of 3 further plausible records before accepting — a
-    *     payload byte pattern surviving it is ~2^-100 per offset.
-    *
-    * Ownership: a record belongs to the range in whose byte span its
-    * first byte's MEMBER starts; the last owned record completes by
-    * inflating into the next range's members. A range at offset 0
-    * reads straight after the reference dictionary with no scan, so
-    * `splitSize` >= the file length reads each file whole on one task.
-    * Every task re-reads the dictionary from the file head.
+    * WITHOUT a .bai/splitting index. Each range anchors at a verified
+    * BGZF member and aligns on a chain of plausible records (the
+    * spark-bam / Hadoop-BAM idea: [[Bgzf.alignedRecords]] over
+    * [[Grammar]], which also defines record ownership).
     *
     * Region pruning is automatic: a `WHERE rname = '17' AND pos BETWEEN
     * a AND b` pushes through the decoration projection into the scan
@@ -144,7 +132,7 @@ object Bam {
     val in = fs.open(p)
     val dict =
       try headerDict(in, fs.getFileStatus(p).getLen)._2
-      finally { try in.close() catch { case _: java.io.IOException => } }
+      finally Bgzf.closeQuietly(in)
     val bare =
       if (path.endsWith(".bam")) Some(path.dropRight(4) + ".bai")
       else None
@@ -166,7 +154,7 @@ object Bam {
 
   /** Region read of a coordinate-sorted BAM — `samtools view
     * file.bam chr:start-end` semantics (reads OVERLAPPING the region)
-    * without a .bai and without scanning the file: [[Bgzf.searchWindow]]
+    * without a .bai and without scanning the file: [[Bgzf.regionWindows]]
     * bisects the member chain with probes that align the first record
     * OWNED by a member via the [[readTable]] plausible-chain machinery
     * and read its (refID, pos) prologue — the dictionary index is the
@@ -218,16 +206,13 @@ object Bam {
   }
 
   /** Driver-side byte plan of [[readRegions]] ([[Bgzf.binaryRegionPlan]]
-    * over [[planFile]]). Package-visible for the probe-count/window-size
+    * over [[Grammar]]). Package-visible for the probe-count/window-size
     * spec pins.
     */
   private[graft] def regionPlan(spark: SparkSession, path: String,
                                 regions: Seq[(String, Long, Long)],
                                 maxSpan: Long): Vcf.RegionPlan =
-    Bgzf.binaryRegionPlan(spark, path, regions.size) {
-      (conf, fp, len, useIndex) =>
-        planFile(conf, fp, len, regions, maxSpan, useIndex)
-    }
+    Bgzf.binaryRegionPlan(spark, path, Grammar, regions, maxSpan)
 
   /** Build `path.bai` (SAM spec §5.2) in one streaming pass over the
     * record wire — the `samtools index` operation for the repo's own
@@ -277,216 +262,99 @@ object Bam {
         else b.noCoor()
       }
       Tabix.writeSidecar(conf, path + ".bai", b.baiBytes(refs.length))
-    } finally { try in.close() catch { case _: java.io.IOException => } }
+    } finally Bgzf.closeQuietly(in)
   }
 
-  /** One file's share of [[regionPlan]] — Configuration-based so
-    * [[Bgzf.planFiles]] can run it on executors for dense panel×fleet
-    * plans.
+  /** BAM's record wire ([[Bgzf.RecordGrammar]]): the shared aligned-
+    * range reader and region planner run on it.
     */
-  private[sources] def planFile(
-      conf: org.apache.hadoop.conf.Configuration, fp: String, len: Long,
-      regions: Seq[(String, Long, Long)], maxSpan: Long,
-      useIndex: Boolean = true)
-    : Seq[Bgzf.FileWindow] = {
-    // positions are int32: clamp so a caller's "to end of chrom"
-    // end = Long.MaxValue can't bleed into the rank bits or wrap the
-    // upper search target
-    val maxPos = Int.MaxValue.toLong
-    def key(r: Long, pos1: Long): Long = (r << 32) | (pos1 & 0xffffffffL)
-    val windows = Seq.newBuilder[Bgzf.FileWindow]
-    val p = new org.apache.hadoop.fs.Path(fp)
-    val fs = p.getFileSystem(conf)
-    val in0 = fs.open(p)
-    val refs =
-      try headerCursor(in0, len)._2
-      finally { try in0.close() catch { case _: java.io.IOException => } }
-    // a usable sidecar index (`x.bam.bai`, samtools' `x.bai` twin, or
-    // a `.csi`) replaces the bisection: zero probes, exact spans past
-    // the maxSpan back-off, ref ids resolved through THIS file's own
-    // dictionary — see Vcf.planFile
-    if (useIndex) {
+  private[sources] object Grammar
+    extends Bgzf.RecordGrammar[Array[String], BamRec] {
+    def header(in: org.apache.hadoop.fs.FSDataInputStream, len: Long)
+      : (Bgzf.MemberCursor, Array[String]) = headerCursor(in, len)
+    def contigs(refs: Array[String]): Array[String] = refs
+    def peek: Int = 36
+    def prologue: Int = 4
+
+    /** Bounds sit at the spec's maxima, not at "typical" values — a
+      * bound tighter than the spec rejects legal records (ONT ultralong
+      * reads, qnames to 254 chars, positions to 2^31-1) and a rejected
+      * TRUE anchor silently drops the whole range; the plausibility bits
+      * come from the dictionary-bounded refIDs, the printable-NUL-
+      * terminated name, the fixed-section arithmetic and the 4-record
+      * chain (a payload pattern survives it at ~2^-100 per offset), not
+      * from narrow magnitude caps.
+      */
+    def plausibleChain(cur: Bgzf.MemberCursor,
+                       refs: Array[String]): Boolean = {
+      val nRef = refs.length
+      var off = 0
+      var k = 0
+      while (k < 4) {
+        if (!cur.ensure(off + 36)) return k > 0 // clean EOF ends a chain
+        val bs = cur.le32(off)
+        if (bs < 33 || bs > (1 << 30)) return false // 1 GiB: alloc ceiling
+        val refId = cur.le32(off + 4)
+        if (refId < -1 || refId >= nRef) return false
+        val pos = cur.le32(off + 8)
+        if (pos < -1) return false // any int32 position is spec-legal
+        val lrn = cur.byte(off + 12) & 0xff
+        if (lrn < 2) return false // uint8: up to 255 (254-char qname) legal
+        val nCigar = cur.le16(off + 16)
+        val lSeq = cur.le32(off + 20)
+        if (lSeq < 0) return false // fixed-section fit below bounds it vs bs
+        val nextRef = cur.le32(off + 24)
+        if (nextRef < -1 || nextRef >= nRef) return false
+        val nextPos = cur.le32(off + 28)
+        if (nextPos < -1) return false
+        val fixed = 32L + lrn + 4L * nCigar + (lSeq.toLong + 1) / 2 +
+          lSeq.toLong
+        if (fixed > bs) return false
+        // read name: printable, NUL exactly at its declared end
+        if (!cur.ensure(off + 36 + lrn)) return k > 0
+        var i = 0
+        while (i < lrn - 1) {
+          val c = cur.byte(off + 36 + i) & 0xff
+          if (c < 0x21 || c > 0x7e) return false
+          i += 1
+        }
+        if (cur.byte(off + 36 + lrn - 1) != 0) return false
+        if (off + 4L + bs > Int.MaxValue - 64) return false // lookahead cap
+        off += 4 + bs
+        k += 1
+      }
+      true
+    }
+
+    def read(cur: Bgzf.MemberCursor, refs: Array[String]): BamRec = {
+      val blockSize = cur.le32(0)
+      require(cur.ensure(4 + blockSize), "truncated BAM record")
+      val b = ByteBuffer.wrap(cur.read(4 + blockSize), 4, blockSize)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      decodeRecord(b.slice().order(ByteOrder.LITTLE_ENDIAN), refs)
+    }
+
+    /** (refID, 1-based pos). Unmapped reads (refID -1) sort after every
+      * mapped read (samtools sort) and rank +inf: the raw bit-packing
+      * would produce a NEGATIVE key and corrupt the bisection on any
+      * sorted BAM whose unmapped tail the search probes.
+      */
+    def probeKey(cur: Bgzf.MemberCursor): Long = {
+      val refId = cur.le32(4)
+      if (refId < 0) Long.MaxValue
+      else Bgzf.sortKey(refId, cur.le32(8) + 1L)
+    }
+
+    /** `x.bam.bai`, samtools' `x.bai` twin, then a `.csi`. */
+    def sidecars(fp: String): Seq[(String,
+      (org.apache.hadoop.conf.Configuration, String) => Tabix.Index)] = {
       val bare =
         if (fp.endsWith(".bam")) Some(fp.dropRight(4) + ".bai") else None
-      Tabix.sidecar(conf, fp,
-        Seq((fp + ".bai", Tabix.readBai _)) ++
-          bare.map(b => (b, Tabix.readBai _)) ++
-          Seq((fp + ".csi", Tabix.readCsi _))) match {
-        case Some(idx) =>
-          return Tabix.queryWindows(idx, fp, len, regions, { c =>
-            val r = refs.indexOf(c); if (r < 0) None else Some(r)
-          })
-        case None =>
-      }
+      Seq((fp + ".bai", Tabix.readBai _)) ++
+        bare.map(b => (b, Tabix.readBai _)) ++
+        Seq((fp + ".csi", Tabix.readCsi _))
     }
-    // regions whose chrom THIS file's dictionary ranks; the rest are
-    // dictionary-closed empty for this file
-    val ranked = regions.flatMap { case (chrom, start, end) =>
-      val r = refs.indexOf(chrom)
-      if (r < 0) None else Some((r, start, end))
-    }
-    if (ranked.nonEmpty) {
-      // one shared positioned-read handle for every search of this
-      // file; neither lambda closes it
-      val sin = fs.open(p)
-      try {
-        // memoized per member — a panel's searches all start at the
-        // same midpoint members
-        val probeMemo =
-          scala.collection.mutable.HashMap.empty[Long, Long]
-        def probe(m: Long): Long = probeMemo.getOrElseUpdate(m, {
-          val cur = new Bgzf.MemberCursor(sin, len, m)
-          var aligned = false
-          while (!aligned && cur.ensure(36)) {
-            if (plausibleChain(cur, refs.length, 4)) aligned = true
-            else cur.drop(1)
-          }
-          if (!aligned || !cur.ensure(12)) Long.MaxValue
-          else {
-            val refId = cur.le32(4)
-            // unmapped (refID -1) sorts after every mapped read
-            // (samtools sort); rank it +inf — the raw bit-packing
-            // would produce a NEGATIVE key and corrupt the bisection
-            // on any sorted BAM whose unmapped tail the search probes
-            if (refId < 0) Long.MaxValue
-            else key(refId.toLong,
-              math.max(0L, math.min(cur.le32(8).toLong + 1L, maxPos)))
-          }
-        })
-        val memberMemo =
-          scala.collection.mutable.HashMap.empty[Long, Long]
-        def nextMember(mid: Long): Long =
-          memberMemo.getOrElseUpdate(mid,
-            Bgzf.firstMemberIn(sin, mid, len, len))
-        // sortedness verified, not assumed — see Vcf.planFile
-        val checked = Bgzf.monotonicProbe(fp, probe)
-        try ranked.foreach { case (rank, start, end) =>
-          // saturate into [0, maxPos] before the back-off so a
-          // degenerate Long bound clamps instead of wrapping
-          val s0 = math.min(math.max(start, 0L), maxPos)
-          val span = math.max(0L, maxSpan)
-          val lo = if (span >= s0) 0L else s0 - span
-          val hi = math.max(0L, math.min(end, maxPos))
-          val w = Bgzf.searchWindow(len, nextMember, checked,
-            key(rank.toLong, lo), key(rank.toLong, hi))
-          windows += Bgzf.FileWindow(fp, len, w.fromByte, w.toByte,
-            w.probes)
-        } catch {
-          // probe-key inversion: fall back to the whole file (replaces
-          // any partial windows — they'd double-count its rows)
-          case _: Bgzf.UnsortedFile =>
-            return Seq(Bgzf.FileWindow(fp, len, 0L, len, 0))
-        }
-      } finally {
-        try sin.close() catch { case _: java.io.IOException => }
-      }
-    }
-    windows.result()
   }
-
-  private[sources] def splitRangeRecords(
-      in: org.apache.hadoop.fs.FSDataInputStream, path: String,
-      start: Long, end: Long, len: Long,
-      guard: Bgzf.AlignGuard): Iterator[BamRec] = {
-    // every task decodes the reference dictionary from the file head
-    val (head, refs) = headerCursor(in, len)
-    if (start == 0L) {
-      // range 0: records begin exactly after the dictionary — exact,
-      // no scanning
-      return recordIterator(head, end, refs)
-    }
-    val first = Bgzf.firstMemberIn(in, start, end, len)
-    if (first < 0) { in.close(); return Iterator.empty }
-    val cur = new Bgzf.MemberCursor(in, len, first)
-    // scan the inflated stream for a validated record start while the
-    // candidate byte's member is still owned by this range
-    var aligned = false
-    while (!aligned && cur.ensure(36) && cur.headMember < end) {
-      if (plausibleChain(cur, refs.length, 4)) aligned = true
-      else cur.drop(1)
-    }
-    if (!aligned || cur.headMember >= end) {
-      // owned members aligned no record: silent per-range loss on a
-      // corrupt payload — count it (throw under strictAlign)
-      guard.unaligned(path, start, end)
-      in.close(); return Iterator.empty
-    }
-    recordIterator(cur, end, refs)
-  }
-
-  /** Records from the cursor while their first byte's member starts
-    * before `end` (the last owned record reads past `end` freely).
-    */
-  private def recordIterator(cur: Bgzf.MemberCursor, end: Long,
-                             refs: Array[String]): Iterator[BamRec] =
-    new Iterator[BamRec] {
-      private var nextRec: BamRec = _
-      private var done = false
-      advance()
-      private def advance(): Unit = {
-        if (!cur.ensure(4) || cur.headMember >= end) {
-          nextRec = null; done = true; cur.close(); return
-        }
-        val blockSize = cur.le32(0)
-        require(cur.ensure(4 + blockSize), "truncated BAM record")
-        val b = ByteBuffer.wrap(cur.read(4 + blockSize), 4, blockSize)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        nextRec = decodeRecord(b.slice().order(ByteOrder.LITTLE_ENDIAN),
-          refs)
-      }
-      override def hasNext: Boolean = !done
-      override def next(): BamRec = { val r = nextRec; advance(); r }
-    }
-
-  /** `depth` chained plausible records at the cursor head (peek only).
-    * Bounds sit at the spec's maxima, not at "typical" values — a bound
-    * tighter than the spec rejects legal records (ONT ultralong reads,
-    * qnames to 254 chars, positions to 2^31-1) and a rejected TRUE
-    * anchor silently drops the whole range; the plausibility bits come
-    * from the dictionary-bounded refIDs, the printable-NUL-terminated
-    * name, the fixed-section arithmetic and the 4-record chain, not
-    * from narrow magnitude caps.
-    */
-  private def plausibleChain(cur: Bgzf.MemberCursor, nRef: Int, depth: Int): Boolean = {
-    var off = 0
-    var k = 0
-    while (k < depth) {
-      if (!cur.ensure(off + 36)) return k > 0 // clean EOF ends a chain
-      val bs = cur.le32(off)
-      if (bs < 33 || bs > (1 << 30)) return false // 1 GiB: alloc ceiling
-      val refId = cur.le32(off + 4)
-      if (refId < -1 || refId >= nRef) return false
-      val pos = cur.le32(off + 8)
-      if (pos < -1) return false // any int32 position is spec-legal
-      val lrn = cur.byte(off + 12) & 0xff
-      if (lrn < 2) return false // uint8: up to 255 (254-char qname) legal
-      val nCigar = (cur.byte(off + 16) & 0xff) |
-        ((cur.byte(off + 17) & 0xff) << 8)
-      val lSeq = cur.le32(off + 20)
-      if (lSeq < 0) return false // fixed-section fit below bounds it vs bs
-      val nextRef = cur.le32(off + 24)
-      if (nextRef < -1 || nextRef >= nRef) return false
-      val nextPos = cur.le32(off + 28)
-      if (nextPos < -1) return false
-      val fixed = 32L + lrn + 4L * nCigar + (lSeq.toLong + 1) / 2 +
-        lSeq.toLong
-      if (fixed > bs) return false
-      // read name: printable, NUL exactly at its declared end
-      if (!cur.ensure(off + 36 + lrn)) return k > 0
-      var i = 0
-      while (i < lrn - 1) {
-        val c = cur.byte(off + 36 + i) & 0xff
-        if (c < 0x21 || c > 0x7e) return false
-        i += 1
-      }
-      if (cur.byte(off + 36 + lrn - 1) != 0) return false
-      if (off + 4L + bs > Int.MaxValue - 64) return false // lookahead cap
-      off += 4 + bs
-      k += 1
-    }
-    true
-  }
-
 
   private def decodeRecord(b: ByteBuffer, refs: Array[String]): BamRec = {
     val refId = b.getInt
@@ -683,31 +551,6 @@ object Bam {
     if (index) Tabix.forEachFile(reads.sparkSession, dir)(writeIndex)
   }
 
-  /** The spec's fixed 28-byte empty-member EOF marker (SAM spec §4.1.2).
-    */
-  private[graft] def BgzfEof: Array[Byte] = Bgzf.Eof
-
-  private[graft] def writeBgzfMember(out: ByteArrayOutputStream,
-                                     data: Array[Byte], off: Int,
-                                     len: Int): Unit =
-    Bgzf.writeMember(out, data, off, len)
-
-  private def writeLe32(o: ByteArrayOutputStream, v: Int): Unit = {
-    o.write(v & 0xff); o.write((v >> 8) & 0xff)
-    o.write((v >> 16) & 0xff); o.write((v >> 24) & 0xff)
-  }
-
-  /** SAM-spec reg2bin over a 0-based half-open interval. */
-  private[graft] def reg2bin(beg: Int, end: Int): Int = {
-    val e = end - 1
-    if (beg >> 14 == e >> 14) ((1 << 15) - 1) / 7 + (beg >> 14)
-    else if (beg >> 17 == e >> 17) ((1 << 12) - 1) / 7 + (beg >> 17)
-    else if (beg >> 20 == e >> 20) ((1 << 9) - 1) / 7 + (beg >> 20)
-    else if (beg >> 23 == e >> 23) ((1 << 6) - 1) / 7 + (beg >> 23)
-    else if (beg >> 26 == e >> 26) ((1 << 3) - 1) / 7 + (beg >> 26)
-    else 0
-  }
-
   private val CigarTok = "(\\d+)([MIDNSHP=X])".r
 
   private def encodeRecord(qname: String, flag: Int, rname: Option[String],
@@ -728,7 +571,7 @@ object Bam {
     val sq = seq.getOrElse("")
     val bin =
       if (pos0 < 0) 0
-      else reg2bin(pos0, pos0 + math.max(refLen, 1))
+      else Tabix.reg2bin(pos0, pos0 + math.max(refLen, 1))
     val nextRefId = rnext match {
       case Some("=") => refId
       case Some(n) => refIdx(n)

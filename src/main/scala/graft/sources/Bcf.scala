@@ -58,21 +58,17 @@ private[graft] case class BcfRec(
   */
 object Bcf {
 
+  import Bgzf.writeLe32
+
   private val FloatMissing = 0x7f800001
   private val FloatEnd = 0x7f800002
 
   // -------------------------------------------------------------- read
   /** The BCF read: a DSv2 relation ([[BcfBgzfSource]]) over files,
     * directories and globs, one partition per `splitSize` byte range
-    * per file. A range anchors at its first signature-verified BGZF
-    * member start, then scans the inflated stream for a plausible record
-    * start — l_shared/l_indiv bounds, contig-index and position sanity,
-    * allele count, and the record's 24-bit n_sample EQUAL to the
-    * header's sample count, over a 4-record chain (a payload collision
-    * survives at ~2^-120 per offset). A range at offset 0 reads straight
-    * from the header with no alignment scan, so `splitSize` >= the file
-    * length reads each file whole on one task. Every task re-reads the
-    * metadata-scale header members.
+    * per file. Each range anchors at a verified BGZF member and aligns
+    * on a chain of plausible records ([[Bgzf.alignedRecords]] over
+    * [[Grammar]], which also defines record ownership).
     *
     * Region pruning is automatic: a `WHERE chrom = '17' AND pos BETWEEN
     * a AND b` routes through `SupportsPushDownFilters` into the same
@@ -87,13 +83,20 @@ object Bcf {
       .option("splitSize", splitSize.toString)
       .load(path)
 
+  /** What the embedded header declares: contig names and the shared
+    * string dictionary (both in implicit-IDX order), and the sample
+    * count every record's n_sample must equal.
+    */
+  private[sources] case class Header(contigs: Array[String],
+                                     strings: Array[String],
+                                     nSamples: Int)
+
   /** Consume the `BCF\2` magic + embedded header text from a cursor at
     * file offset 0; returns the cursor positioned at the first record
-    * plus (contigs, strings, nSamples).
+    * plus the decoded [[Header]].
     */
   private def headerCursor(in: org.apache.hadoop.fs.FSDataInputStream,
-                           len: Long)
-    : (Bgzf.MemberCursor, Array[String], Array[String], Int) = {
+                           len: Long): (Bgzf.MemberCursor, Header) = {
     val head = new Bgzf.MemberCursor(in, len, 0L)
     require(head.ensure(9), "empty BCF")
     require(head.byte(0) == 'B' && head.byte(1) == 'C' &&
@@ -107,111 +110,88 @@ object Bcf {
     val nSamples = headerText.split("\n").find(_.startsWith("#CHROM"))
       .map(l => math.max(0, l.stripSuffix("\r").split("\t").length - 9))
       .getOrElse(0)
-    (head, contigs, strings, nSamples)
+    (head, Header(contigs, strings, nSamples))
   }
 
-  /** @param needGenotypes false = the caller's pruned schema excludes
+  /** BCF's record wire ([[Bgzf.RecordGrammar]]): the shared aligned-range
+    * reader and region planner run on it.
+    *
+    * @param needGenotypes false = the caller's pruned schema excludes
     *   `genotypes`: the per-sample block is SKIPPED outright (bytes
     *   dropped from the cursor, no typed-vector decode, no per-sample
     *   string assembly — the dominant per-record cost on cohort BCFs)
     *   and the record carries an empty genotype seq the caller never
-    *   reads. The one caller is the DSv2 partition reader
-    *   ([[BcfBgzfReaderFactory]]), which passes its pruned schema's
-    *   answer.
+    *   reads.
     */
-  private[sources] def splitRangeRecords(
-      in: org.apache.hadoop.fs.FSDataInputStream, path: String,
-      start: Long, end: Long, len: Long,
-      guard: Bgzf.AlignGuard,
-      needGenotypes: Boolean): Iterator[BcfRec] = {
-    val (head, contigs, strings, nSamples) = headerCursor(in, len)
-    if (start == 0L)
-      return recordIterator(head, end, contigs, strings, needGenotypes)
-    val first = Bgzf.firstMemberIn(in, start, end, len)
-    if (first < 0) { in.close(); return Iterator.empty }
-    val cur = new Bgzf.MemberCursor(in, len, first)
-    var aligned = false
-    while (!aligned && cur.ensure(32) && cur.headMember < end) {
-      if (plausibleChain(cur, contigs.length, nSamples, 4)) aligned = true
-      else cur.drop(1)
-    }
-    if (!aligned || cur.headMember >= end) {
-      // owned members aligned no record: silent per-range loss on a
-      // corrupt payload — count it (throw under strictAlign)
-      guard.unaligned(path, start, end)
-      in.close(); return Iterator.empty
-    }
-    recordIterator(cur, end, contigs, strings, needGenotypes)
-  }
+  private[sources] case class Grammar(needGenotypes: Boolean)
+    extends Bgzf.RecordGrammar[Header, BcfRec] {
+    def header(in: org.apache.hadoop.fs.FSDataInputStream, len: Long)
+      : (Bgzf.MemberCursor, Header) = headerCursor(in, len)
+    def contigs(h: Header): Array[String] = h.contigs
+    def peek: Int = 32
+    def prologue: Int = 8
 
-  private def recordIterator(cur: Bgzf.MemberCursor, end: Long,
-                             contigs: Array[String],
-                             strings: Array[String],
-                             needGenotypes: Boolean)
-    : Iterator[BcfRec] =
-    new Iterator[BcfRec] {
-      private var nextRec: BcfRec = _
-      private var done = false
-      advance()
-      private def advance(): Unit = {
-        if (!cur.ensure(8) || cur.headMember >= end) {
-          nextRec = null; done = true; cur.close(); return
-        }
-        val lShared = cur.le32(0)
-        val lIndiv = cur.le32(4)
-        cur.drop(8)
-        val sh = ByteBuffer.wrap(cur.read(lShared))
-          .order(ByteOrder.LITTLE_ENDIAN)
-        val ind =
-          if (needGenotypes)
-            ByteBuffer.wrap(cur.read(lIndiv))
-              .order(ByteOrder.LITTLE_ENDIAN)
-          else { cur.drop(lIndiv); null }
-        nextRec = decodeRecord(sh, ind, contigs, strings)
+    /** Bounds sit at spec maxima (the [[Bam.Grammar]] rationale):
+      * positions/rlen are legal to 2^31-1 and block sizes to uint32, so
+      * magnitude caps tighter than the spec would silently drop a range
+      * whose true anchor they reject; the plausibility bits come from
+      * the dictionary-bounded contig index and the exact n_sample
+      * equality — a payload collision survives a 4-record chain at
+      * ~2^-120 per offset.
+      */
+    def plausibleChain(cur: Bgzf.MemberCursor, h: Header): Boolean = {
+      var off = 0
+      var k = 0
+      while (k < 4) {
+        if (!cur.ensure(off + 32)) return k > 0
+        val lShared = cur.le32(off)
+        if (lShared < 24 || lShared > (1 << 30)) return false // alloc ceiling
+        val lIndiv = cur.le32(off + 4)
+        if (lIndiv < 0 || lIndiv > (1 << 30)) return false
+        val chrom = cur.le32(off + 8)
+        if (chrom < 0 || chrom >= h.contigs.length) return false
+        val pos = cur.le32(off + 12)
+        if (pos < -1) return false // any int32 position is spec-legal
+        val rlen = cur.le32(off + 16)
+        if (rlen < 0) return false
+        val nAllele = cur.le32(off + 24) >>> 16
+        if (nAllele < 1) return false
+        if ((cur.le32(off + 28) & 0xffffff) != h.nSamples) return false
+        val step = 8L + lShared + lIndiv
+        if (off + step > Int.MaxValue - 64) return false // lookahead cap
+        off += step.toInt
+        k += 1
       }
-      override def hasNext: Boolean = !done
-      override def next(): BcfRec = { val r = nextRec; advance(); r }
+      true
     }
 
-  /** `depth` chained plausible BCF record starts at the cursor head.
-    * Bounds sit at spec maxima (the [[Bam.plausibleChain]] rationale):
-    * positions/rlen are legal to 2^31-1 and block sizes to uint32, so
-    * magnitude caps tighter than the spec would silently drop a range
-    * whose true anchor they reject; the plausibility bits come from the
-    * dictionary-bounded contig index and the exact n_sample equality.
-    */
-  private def plausibleChain(cur: Bgzf.MemberCursor, nContig: Int,
-                             nSamples: Int, depth: Int): Boolean = {
-    var off = 0
-    var k = 0
-    while (k < depth) {
-      if (!cur.ensure(off + 32)) return k > 0
-      val lShared = cur.le32(off)
-      if (lShared < 24 || lShared > (1 << 30)) return false // alloc ceiling
-      val lIndiv = cur.le32(off + 4)
-      if (lIndiv < 0 || lIndiv > (1 << 30)) return false
-      val chrom = cur.le32(off + 8)
-      if (chrom < 0 || chrom >= nContig) return false
-      val pos = cur.le32(off + 12)
-      if (pos < -1) return false // any int32 position is spec-legal
-      val rlen = cur.le32(off + 16)
-      if (rlen < 0) return false
-      val nAlleleInfo = cur.le32(off + 24)
-      val nAllele = nAlleleInfo >>> 16
-      if (nAllele < 1) return false
-      val nFmtSample = cur.le32(off + 28)
-      if ((nFmtSample & 0xffffff) != nSamples) return false
-      val step = 8L + lShared + lIndiv
-      if (off + step > Int.MaxValue - 64) return false // chain lookahead cap
-      off += step.toInt
-      k += 1
+    def read(cur: Bgzf.MemberCursor, h: Header): BcfRec = {
+      val lShared = cur.le32(0)
+      val lIndiv = cur.le32(4)
+      cur.drop(8)
+      val sh = ByteBuffer.wrap(cur.read(lShared))
+        .order(ByteOrder.LITTLE_ENDIAN)
+      val ind =
+        if (needGenotypes)
+          ByteBuffer.wrap(cur.read(lIndiv)).order(ByteOrder.LITTLE_ENDIAN)
+        else { cur.drop(lIndiv); null }
+      decodeRecord(sh, ind, h.contigs, h.strings)
     }
-    true
+
+    /** (contig index, 1-based pos): records carry the dictionary index
+      * natively, so the sort rank needs no header convention.
+      */
+    def probeKey(cur: Bgzf.MemberCursor): Long =
+      Bgzf.sortKey(cur.le32(8), cur.le32(12) + 1L)
+
+    def sidecars(fp: String): Seq[(String,
+      (org.apache.hadoop.conf.Configuration, String) => Tabix.Index)] =
+      Seq((fp + ".csi", Tabix.readCsi _))
   }
 
   /** Region read of a coordinate-sorted BCF — [[Vcf.readRegion]]'s
     * contract on the binary container: a driver-side binary search over
-    * the BGZF member chain ([[Bgzf.searchWindow]]) whose probes align
+    * the BGZF member chain ([[Bgzf.regionWindows]]) whose probes align
     * the first record OWNED by a member via the [[readTable]]
     * plausible-chain machinery and read its (contig-index, pos) —
     * records carry the dictionary index natively, so the sort rank
@@ -265,16 +245,14 @@ object Bcf {
   }
 
   /** Driver-side byte plan of [[readRegions]] ([[Bgzf.binaryRegionPlan]]
-    * over [[planFile]]). Package-visible for the probe-count/window-size
+    * over [[Grammar]]). Package-visible for the probe-count/window-size
     * spec pins.
     */
   private[graft] def regionPlan(spark: SparkSession, path: String,
                                 regions: Seq[(String, Long, Long)],
                                 maxSpan: Long): Vcf.RegionPlan =
-    Bgzf.binaryRegionPlan(spark, path, regions.size) {
-      (conf, fp, len, useIndex) =>
-        planFile(conf, fp, len, regions, maxSpan, useIndex)
-    }
+    Bgzf.binaryRegionPlan(spark, path, Grammar(needGenotypes = true),
+      regions, maxSpan)
 
   /** Build `path.csi` (the CSI spec, min_shift 14 / depth 5 — what
     * `bcftools index` writes for BCF) in one streaming pass over the
@@ -289,7 +267,8 @@ object Bcf {
     val len = fs.getFileStatus(p).getLen
     val in = fs.open(p)
     try {
-      val (cur, contigs, _, _) = headerCursor(in, len)
+      val (cur, h) = headerCursor(in, len)
+      val contigs = h.contigs
       val b = new Tabix.Builder(path)
       while (cur.ensure(8)) {
         val begV = cur.headVOffset
@@ -308,98 +287,7 @@ object Bcf {
           pos + math.max(1L, rlen.toLong), begV, endV)
       }
       Tabix.writeSidecar(conf, path + ".csi", b.csiBytes(contigs.length))
-    } finally { try in.close() catch { case _: java.io.IOException => } }
-  }
-
-  /** One file's share of [[regionPlan]] — Configuration-based so
-    * [[Bgzf.planFiles]] can run it on executors for dense panel×fleet
-    * plans.
-    */
-  private[sources] def planFile(
-      conf: org.apache.hadoop.conf.Configuration, fp: String, len: Long,
-      regions: Seq[(String, Long, Long)], maxSpan: Long,
-      useIndex: Boolean = true)
-    : Seq[Bgzf.FileWindow] = {
-    val maxPos = Int.MaxValue.toLong
-    val windows = Seq.newBuilder[Bgzf.FileWindow]
-    val p = new org.apache.hadoop.fs.Path(fp)
-    val fs = p.getFileSystem(conf)
-    val in0 = fs.open(p)
-    val (_, contigs, _, nSamples) =
-      try headerCursor(in0, len)
-      finally { try in0.close() catch { case _: java.io.IOException => } }
-    // a usable `.csi` sidecar replaces the bisection: zero probes,
-    // exact spans past the maxSpan back-off, ref ids resolved through
-    // THIS file's contig dictionary — see Vcf.planFile
-    if (useIndex) {
-      Tabix.sidecar(conf, fp,
-        Seq((fp + ".csi", Tabix.readCsi _))) match {
-        case Some(idx) =>
-          return Tabix.queryWindows(idx, fp, len, regions, { c =>
-            val r = contigs.indexOf(c); if (r < 0) None else Some(r)
-          })
-        case None =>
-      }
-    }
-    // regions whose chrom THIS file's dictionary ranks; the rest are
-    // dictionary-closed empty for this file
-    val ranked = regions.flatMap { case (chrom, start, end) =>
-      val r = contigs.indexOf(chrom)
-      if (r < 0) None else Some((r, start, end))
-    }
-    if (ranked.nonEmpty) {
-      // one shared positioned-read handle for every search of this
-      // file; neither lambda closes it
-      val sin = fs.open(p)
-      try {
-        // first owned record key at member `m`: byte-scan alignment
-        // from the member's first byte (the partition readers'
-        // ownership rule), then the record prologue's (chrom-index, 1-based
-        // pos). Memoized per member — a panel's searches all start
-        // at the same midpoint members.
-        val probeMemo =
-          scala.collection.mutable.HashMap.empty[Long, Long]
-        def probe(m: Long): Long = probeMemo.getOrElseUpdate(m, {
-          val cur = new Bgzf.MemberCursor(sin, len, m)
-          var aligned = false
-          while (!aligned && cur.ensure(32)) {
-            if (plausibleChain(cur, contigs.length, nSamples, 4))
-              aligned = true
-            else cur.drop(1)
-          }
-          if (!aligned || !cur.ensure(16)) Long.MaxValue
-          else (cur.le32(8).toLong << 32) |
-            math.max(0L, math.min(cur.le32(12).toLong + 1L, maxPos))
-        })
-        val memberMemo =
-          scala.collection.mutable.HashMap.empty[Long, Long]
-        def nextMember(mid: Long): Long =
-          memberMemo.getOrElseUpdate(mid,
-            Bgzf.firstMemberIn(sin, mid, len, len))
-        // sortedness verified, not assumed — see Vcf.planFile
-        val checked = Bgzf.monotonicProbe(fp, probe)
-        try ranked.foreach { case (rank, start, end) =>
-          // saturate into [0, maxPos] before the back-off so a
-          // degenerate Long bound clamps instead of wrapping
-          val s0 = math.min(math.max(start, 0L), maxPos)
-          val span = math.max(0L, maxSpan)
-          val lo = if (span >= s0) 0L else s0 - span
-          val hi = math.max(0L, math.min(end, maxPos))
-          val w = Bgzf.searchWindow(len, nextMember, checked,
-            (rank.toLong << 32) | lo, (rank.toLong << 32) | hi)
-          windows += Bgzf.FileWindow(fp, len, w.fromByte, w.toByte,
-            w.probes)
-        } catch {
-          // probe-key inversion: fall back to the whole file (replaces
-          // any partial windows — they'd double-count its rows)
-          case _: Bgzf.UnsortedFile =>
-            return Seq(Bgzf.FileWindow(fp, len, 0L, len, 0))
-        }
-      } finally {
-        try sin.close() catch { case _: java.io.IOException => }
-      }
-    }
-    windows.result()
+    } finally Bgzf.closeQuietly(in)
   }
 
   /** Sample names from the `#CHROM` line of the embedded header text —
@@ -891,11 +779,6 @@ object Bcf {
       val allele = if (a == "." || a.isEmpty) -1 else a.toInt
       ((allele + 1) << 1) | (if (i > 0 && p) 1 else 0)
     }
-  }
-
-  private def writeLe32(o: ByteArrayOutputStream, v: Int): Unit = {
-    o.write(v & 0xff); o.write((v >> 8) & 0xff)
-    o.write((v >> 16) & 0xff); o.write((v >> 24) & 0xff)
   }
 
   /** Descriptor byte(s): (len<<4)|type with the 15-overflow rule. */

@@ -32,7 +32,10 @@ object Bgzf {
     0x00, 0x42, 0x43, 0x02, 0x00, 0x1b, 0x00, 0x03, 0x00, 0x00, 0x00,
     0x00, 0x00, 0x00, 0x00, 0x00, 0x00).map(_.toByte)
 
-  private def writeLe32(o: ByteArrayOutputStream, v: Int): Unit = {
+  /** Little-endian int32 — the one writer the member trailer and the
+    * BCF/BAM encoders share.
+    */
+  private[sources] def writeLe32(o: ByteArrayOutputStream, v: Int): Unit = {
     o.write(v & 0xff); o.write((v >> 8) & 0xff)
     o.write((v >> 16) & 0xff); o.write((v >> 24) & 0xff)
   }
@@ -387,10 +390,90 @@ object Bgzf {
     AlignGuard(spark.sparkContext.longAccumulator(name),
       spark.conf.get("spark.graft.strictAlign", "false").toBoolean)
 
-  /** [[scanMember]] for the sibling container decoders and planners. */
-  private[sources] def firstMemberIn(
-      in: org.apache.hadoop.fs.FSDataInputStream, from: Long, to: Long,
-      len: Long): Long = scanMember(in, from, to, len)
+  /** One binary container's record wire as the shared aligned-range
+    * reader ([[alignedRecords]]) and region planner
+    * ([[binaryRegionPlan]]) see it; BCF and BAM each define one. `D` is
+    * what the header decode yields: the dictionaries the plausibility
+    * test and the record decode read.
+    */
+  private[sources] abstract class RecordGrammar[D, R] extends Serializable {
+    /** Magic, header and dictionaries from file offset 0: a cursor at
+      * the first record, and the decoded header.
+      */
+    def header(in: org.apache.hadoop.fs.FSDataInputStream,
+               len: Long): (MemberCursor, D)
+    /** Contig names in dictionary order: the sort rank records carry. */
+    def contigs(d: D): Array[String]
+    /** Bytes [[plausibleChain]] needs at a candidate record start. */
+    def peek: Int
+    /** A chain of 4 plausible records at the cursor head (peek only). */
+    def plausibleChain(cur: MemberCursor, d: D): Boolean
+    /** Bytes of the length prologue every record starts with. */
+    def prologue: Int
+    /** Decode the record at the cursor head, consuming it. */
+    def read(cur: MemberCursor, d: D): R
+    /** [[sortKey]] of the aligned record at the cursor head; MaxValue
+      * ranks it after every contig.
+      */
+    def probeKey(cur: MemberCursor): Long
+    /** Index sidecars to try for `fp`, in order. */
+    def sidecars(fp: String): Seq[(String,
+      (org.apache.hadoop.conf.Configuration, String) => Tabix.Index)]
+  }
+
+  /** The records byte range `r` of a binary container OWNS. A record
+    * belongs to the range in whose span its first byte's member starts;
+    * the last owned record completes by inflating into the next range's
+    * members. A range at offset 0 reads straight after the header with
+    * no scan, so `splitSize` >= the file length reads each file whole on
+    * one task. Any other range anchors at its first verified member and
+    * scans the inflated stream byte by byte for a plausible record chain
+    * (records carry no sync marker and legally span members); a range
+    * whose owned members align none counts into `guard` and yields
+    * nothing. Every range decodes the header from the file head.
+    */
+  private[sources] def alignedRecords[D, R](g: RecordGrammar[D, R],
+      in: org.apache.hadoop.fs.FSDataInputStream, r: Range,
+      guard: AlignGuard): Iterator[R] = {
+    val (head, d) = g.header(in, r.len)
+    val cur =
+      if (r.start == 0L) head
+      else {
+        val first = scanMember(in, r.start, r.end, r.len)
+        if (first < 0) { in.close(); return Iterator.empty }
+        val c = new MemberCursor(in, r.len, first)
+        if (!align(g, d, c, r.end)) {
+          // owned members aligned no record: silent per-range loss on a
+          // corrupt payload — count it (throw under strictAlign)
+          guard.unaligned(r.path, r.start, r.end)
+          in.close(); return Iterator.empty
+        }
+        c
+      }
+    new Iterator[R] {
+      private var nextRec: R = _
+      private var done = false
+      advance()
+      private def advance(): Unit =
+        if (!cur.ensure(g.prologue) || cur.headMember >= r.end) {
+          nextRec = null.asInstanceOf[R]; done = true; cur.close()
+        } else nextRec = g.read(cur, d)
+      override def hasNext: Boolean = !done
+      override def next(): R = { val x = nextRec; advance(); x }
+    }
+  }
+
+  /** Advance `cur` byte by byte to the first plausible record chain
+    * whose member starts before `end`; false when there is none.
+    */
+  private def align[D](g: RecordGrammar[D, _], d: D, cur: MemberCursor,
+                       end: Long): Boolean = {
+    while (cur.ensure(g.peek) && cur.headMember < end) {
+      if (g.plausibleChain(cur, d)) return true
+      cur.drop(1)
+    }
+    false
+  }
 
   /** First verified member start in [from, to), or -1. A member must
     * start within 64 KiB + header of any offset (members are capped),
@@ -587,38 +670,79 @@ object Bgzf {
   }
 
   // ---------------------------------------------------- region pushdown
-  /** Driver-side result of [[regionWindow]]: the byte window that is
-    * guaranteed to own every line whose key falls in the requested
-    * range, plus how many members the binary search actually inflated
-    * (the number a spec pins ≪ total members).
+  /** Positions are int32 in every container. */
+  private val MaxPos = Int.MaxValue.toLong
+
+  /** The sort key every container bisects on: contig rank in the high
+    * 32 bits, the 1-based position SATURATED into [0, 2^31-1] in the
+    * low, so a degenerate Long bound (end = Long.MaxValue "to end of
+    * chrom", a pushed pos > 2^31-class filter) clamps instead of
+    * bleeding into the rank bits.
     */
-  private[graft] case class RegionWindow(fromByte: Long, toByte: Long,
-                                         probes: Int)
+  private[sources] def sortKey(rank: Long, pos: Long): Long =
+    (rank << 32) | math.max(0L, math.min(pos, MaxPos))
+
+  /** The key range of one region under overlap semantics: the start
+    * clamps into [0, 2^31-1] first, then backs off by `maxSpan` bases
+    * (records that start before the region and span into it), never
+    * below 0.
+    */
+  private[sources] def keyRange(rank: Int, start: Long, end: Long,
+                                maxSpan: Long): (Long, Long) = {
+    val s0 = math.min(math.max(start, 0L), MaxPos)
+    val span = math.max(0L, maxSpan)
+    (sortKey(rank, if (span >= s0) 0L else s0 - span), sortKey(rank, end))
+  }
+
+  /** One file's pruned byte window — the planning unit of the region
+    * reads: `[fromByte, toByte)` of `path`, plus how many members the
+    * binary search(es) inflated to find it (the O(log n) the specs pin,
+    * ≪ total members). Shards of a sorted sharded layout each get their
+    * own windows; [[mergeWindows]] coalesces overlaps.
+    */
+  private[graft] case class FileWindow(path: String, fileLen: Long,
+                                       fromByte: Long, toByte: Long,
+                                       probes: Int)
 
   /** Binary-search a KEY-SORTED BGZF text file for the byte window
     * containing all data lines with key in [fromKey, toKey] — the
-    * tabix access pattern without a .tbi: O(log fileLen) driver-side
-    * probes, each anchoring one member ([[scanMember]]) and inflating
-    * just enough of its chain to read the first line it OWNS (the
-    * ownership rule of [[rangeLines]], so boundary lines are never
-    * skipped past). `keyOf` maps a line to its sort key, or None for
-    * non-data lines (headers) — which therefore must only appear at the
-    * file head, and data lines must be sorted by the key (exactly the
-    * sortedness tabix requires; an unsorted file yields garbage there
-    * too).
-    *
-    * Window contracts (both proven by the fk-monotonicity of sorted
-    * files): every line with key >= fromKey starts in a member at or
-    * after `fromByte`; every line with key <= toKey starts in a member
-    * strictly before `toByte`. Lines outside [fromKey, toKey] can
-    * still fall inside the window (up to one member chain + the search
-    * slack) — callers re-filter after parsing.
+    * tabix access pattern without a .tbi, through [[regionWindows]]
+    * with a [[lineProbe]]. `keyOf` maps a line to its sort key, or None
+    * for non-data lines (headers) — which therefore must only appear at
+    * the file head, and data lines must be sorted by the key (exactly
+    * the sortedness tabix requires).
     */
   private[graft] def regionWindow(spark: SparkSession, path: String,
                                   keyOf: String => Option[Long],
                                   fromKey: Long,
-                                  toKey: Long): RegionWindow =
-    regionWindows(spark, path, keyOf, Seq((fromKey, toKey))).head
+                                  toKey: Long): FileWindow = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(conf).getFileStatus(p)
+    require(st.isFile, s"region read wants a single file: $path")
+    regionWindows(conf, path, st.getLen, lineProbe(path, st.getLen, keyOf),
+      Seq((fromKey, toKey)), 1).head
+  }
+
+  /** The first-owned-key probe of a text container: the key of the
+    * first data line member `m` OWNS (its first byte inflates from `m`,
+    * the ownership rule of [[rangeLines]], so boundary lines are never
+    * skipped past), reading forward across members as needed; MaxValue
+    * when no data line starts at or after `m`.
+    */
+  private[sources] def lineProbe(path: String, len: Long,
+      keyOf: String => Option[Long])
+    : (org.apache.hadoop.fs.FSDataInputStream, Long) => Long =
+    (in, m) => {
+      val it = rangeLines(in, Range(path, m, len, len))
+      var k = Long.MaxValue
+      var found = false
+      while (!found && it.hasNext) keyOf(it.next()) match {
+        case Some(x) => k = x; found = true
+        case None =>
+      }
+      k
+    }
 
   /** Driver-side fixed-pool map for PLANNING fan-out (per-file
     * bisections across a shard fleet, per-region searches across a
@@ -696,61 +820,82 @@ object Bgzf {
   }
 
   /** Driver-side byte plan of a BINARY container's region read (BCF,
-    * BAM): `planFile(conf, path, len, useIndex)` plans one file — its
-    * header decode plus a sidecar lookup or per-region bisections —
-    * fanned out by [[planFiles]] and recombined in file order, so the
-    * plan is deterministic; the windows merge per file. Binary contig
-    * dictionaries are closed, so no file ever falls back to a full
-    * scan.
+    * BAM). Per file, fanned out by [[planFiles]] and recombined in file
+    * order so the plan is deterministic: the header decode, then a
+    * usable sidecar index (zero probes, exact spans past the maxSpan
+    * back-off, ref ids resolved through THIS file's dictionary) or one
+    * [[regionWindows]] search over `g`'s record-alignment probe. Binary
+    * contig dictionaries are closed — a chrom the file's dictionary
+    * lacks cannot appear in its records — so that (file, region) pair
+    * plans nothing. A file whose probes prove it unsorted reads whole.
+    * The windows merge per file.
     */
-  private[sources] def binaryRegionPlan(spark: SparkSession, path: String,
-      nRegions: Int)(
-      planFile: (org.apache.hadoop.conf.Configuration, String, Long,
-        Boolean) => Seq[FileWindow]): Vcf.RegionPlan = {
+  private[sources] def binaryRegionPlan[D](spark: SparkSession,
+      path: String, g: RecordGrammar[D, _],
+      regions: Seq[(String, Long, Long)], maxSpan: Long): Vcf.RegionPlan = {
     val useIndex =
       spark.conf.get("spark.graft.useIndex", "true").toBoolean
-    val windows = planFiles(spark, resolveFiles(spark, path), nRegions) {
-      (conf, fp, len, _) => planFile(conf, fp, len, useIndex)
+    val windows = planFiles(spark, resolveFiles(spark, path),
+      regions.size) { (conf, fp, len, regionPar) =>
+      val p = new org.apache.hadoop.fs.Path(fp)
+      val in = p.getFileSystem(conf).open(p)
+      val d = try g.header(in, len)._2 finally closeQuietly(in)
+      val contigs = g.contigs(d)
+      val rank = (c: String) => Some(contigs.indexOf(c)).filter(_ >= 0)
+      val index =
+        if (useIndex) Tabix.sidecar(conf, fp, g.sidecars(fp)) else None
+      index match {
+        case Some(idx) => Tabix.queryWindows(idx, fp, len, regions, rank)
+        case None =>
+          val keyRanges = regions.flatMap { case (c, start, end) =>
+            rank(c).map(keyRange(_, start, end, maxSpan))
+          }
+          // first owned record key at member `m`: the partition
+          // readers' alignment from the member's first byte
+          val probe = (in: org.apache.hadoop.fs.FSDataInputStream,
+                       m: Long) => {
+            val cur = new MemberCursor(in, len, m)
+            if (align(g, d, cur, Long.MaxValue)) g.probeKey(cur)
+            else Long.MaxValue
+          }
+          if (keyRanges.isEmpty) Seq.empty
+          else try regionWindows(conf, fp, len, probe, keyRanges, regionPar)
+          catch {
+            // probe-key inversion: the whole file, no partial windows
+            // (they'd double-count its rows)
+            case _: UnsortedFile => Seq(FileWindow(fp, len, 0L, len, 0))
+          }
+      }
     }.flatten
     Vcf.RegionPlan(mergeWindows(windows), Seq.empty,
       windows.map(_.probes).sum)
   }
 
-  /** [[regionWindow]] for a LIST of key ranges over one file — the
-    * multi-region planner's driver-side hot path, three levers:
-    * per-member MEMOIZATION of both probe kinds (a panel's searches
-    * all start at the same midpoint members, so the cache turns
-    * 2·regions·log n probes into the distinct-member count), shared
-    * handles (a close-suppressing view survives rangeLines'
-    * iterator-EOF close; on object stores the saved per-probe open()
-    * dominates), and BOUNDED PARALLELISM across the searches
-    * (`parallelism` driver threads, each with its own positioned-read
-    * handle — searches are independent once the memos are concurrent).
-    * Callers already fanning out per FILE pass parallelism=1.
-    */
-  private[graft] def regionWindows(spark: SparkSession, path: String,
-                                   keyOf: String => Option[Long],
-                                   keyRanges: Seq[(Long, Long)],
-                                   parallelism: Int = 8)
-    : Seq[RegionWindow] =
-    regionWindows(spark.sparkContext.hadoopConfiguration, path, keyOf,
-      keyRanges, parallelism)
-
-  /** Configuration-based variant: the per-file planning bodies run on
-    * EXECUTORS when [[planFiles]] distributes a large fleet×panel plan,
-    * where there is no SparkSession — everything below here touches
-    * only the Hadoop FS API.
+  /** Bisect one KEY-SORTED file for each of `keyRanges` — the one
+    * region search of the three containers. `firstOwnedKey(in, m)` is
+    * the container's probe: the sort key of the first record OWNED by
+    * member `m` (MaxValue past the last record) — [[lineProbe]] for
+    * text, record alignment for BCF/BAM. Three levers: per-member
+    * MEMOIZATION of both probe kinds (a panel's searches all start at
+    * the same midpoint members, so the memo turns 2·regions·log n probes
+    * into the distinct-member count), shared handles (one positioned-
+    * read handle per thread, probes get a close-suppressing view), and
+    * BOUNDED PARALLELISM across the searches (`parallelism` threads;
+    * callers already fanning out per FILE pass 1). Configuration-based:
+    * [[planFiles]] may run it on executors, where there is no
+    * SparkSession.
+    *
+    * Sortedness is VERIFIED, not assumed ([[monotonicProbe]]): any
+    * probe-key inversion throws [[UnsortedFile]], which the planners
+    * catch as a full-scan fallback — an unsorted file must degrade to
+    * the always-correct unpruned read, never silently drop rows.
     */
   private[graft] def regionWindows(
-      conf: org.apache.hadoop.conf.Configuration, path: String,
-      keyOf: String => Option[Long], keyRanges: Seq[(Long, Long)],
-      parallelism: Int)
-    : Seq[RegionWindow] = {
+      conf: org.apache.hadoop.conf.Configuration, path: String, len: Long,
+      firstOwnedKey: (org.apache.hadoop.fs.FSDataInputStream, Long) => Long,
+      keyRanges: Seq[(Long, Long)], parallelism: Int): Seq[FileWindow] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    require(st.isFile, s"region read wants a single file: $path")
-    val len = st.getLen
     val handles =
       new java.util.concurrent.ConcurrentLinkedQueue[
         org.apache.hadoop.fs.FSDataInputStream]()
@@ -764,48 +909,30 @@ object Bgzf {
         }
       }
     try {
-      val keyMemo =
-        new java.util.concurrent.ConcurrentHashMap[
-          java.lang.Long, java.lang.Long]()
-      // key of the first data line OWNED by the member at `m` (first
-      // byte inflates from it), reading forward across members as
-      // needed; MaxValue when no data line starts at or after `m`
-      def firstOwnedKey(m: Long): Long =
-        keyMemo.computeIfAbsent(Long.box(m), _ => {
-          val it = rangeLines(noCloseView(local.get()),
-            Range(path, m, len, len))
-          var k = Long.MaxValue
-          var found = false
-          while (!found && it.hasNext) keyOf(it.next()) match {
-            case Some(x) => k = x; found = true
-            case None =>
-          }
-          Long.box(k)
-        })
-      val memberMemo =
-        new java.util.concurrent.ConcurrentHashMap[
-          java.lang.Long, java.lang.Long]()
+      val keyMemo = new java.util.concurrent.ConcurrentHashMap[
+        java.lang.Long, java.lang.Long]()
+      val memberMemo = new java.util.concurrent.ConcurrentHashMap[
+        java.lang.Long, java.lang.Long]()
       def nextMember(mid: Long): Long =
         memberMemo.computeIfAbsent(Long.box(mid),
           _ => Long.box(scanMember(local.get(), mid, len, len)))
-      // sortedness is VERIFIED, not assumed: any probe-key inversion
-      // throws UnsortedFile, which the per-file planners catch as a
-      // full-scan fallback — an unsorted shard must degrade to the
-      // always-correct unpruned read, never silently drop rows
-      val checkedKey = monotonicProbe(path, firstOwnedKey)
+      val checkedKey = monotonicProbe(path, m =>
+        keyMemo.computeIfAbsent(Long.box(m),
+          _ => Long.box(firstOwnedKey(noCloseView(local.get()), m))))
       parMap(keyRanges, parallelism) { case (fromKey, toKey) =>
-        searchWindow(len, nextMember, checkedKey, fromKey, toKey)
+        searchWindow(path, len, nextMember, checkedKey, fromKey, toKey)
       }
-    } finally {
-      handles.forEach(h =>
-        try h.close() catch { case _: java.io.IOException => })
-    }
+    } finally handles.forEach(closeQuietly(_))
   }
 
+  /** Close, ignoring an IOException: cleanup after the real outcome. */
+  private[sources] def closeQuietly(c: java.io.Closeable): Unit =
+    try c.close() catch { case _: java.io.IOException => }
+
   /** A close-suppressing view of a positioned-read stream: driver-side
-    * probe machinery shares ONE handle across [[rangeLines]]-based
-    * probes (whose iterators close their stream at EOF). The caller
-    * owns and closes the underlying handle.
+    * probe machinery shares ONE handle per thread across probes (whose
+    * iterators close their stream at EOF). The caller owns and closes
+    * the underlying handle.
     */
   private def noCloseView(in: org.apache.hadoop.fs.FSDataInputStream)
     : org.apache.hadoop.fs.FSDataInputStream =
@@ -875,16 +1002,6 @@ object Bgzf {
     }
   }
 
-  /** One file's pruned byte window — the planning unit of the multi-
-    * file/multi-region reads: `[fromByte, toByte)` of `path`, plus how
-    * many members the binary search(es) inflated to find it (the
-    * O(log n) the specs pin). Shards of a sorted sharded layout each
-    * get their own windows; [[mergeWindows]] coalesces overlaps.
-    */
-  private[graft] case class FileWindow(path: String, fileLen: Long,
-                                       fromByte: Long, toByte: Long,
-                                       probes: Int)
-
   /** Coalesce overlapping/adjacent windows per file so every byte reads
     * at most once — a multi-region panel whose regions' windows touch
     * (or whose searches bottom out on the same 128 KiB floor) scans one
@@ -904,12 +1021,17 @@ object Bgzf {
         }.reverse
     }
 
-  /** The [[regionWindow]] bisection, generic over the record grammar:
+  /** The bisection behind [[regionWindows]], for one key range:
     * `nextMember(mid)` = first verified member start at or after `mid`
     * (or -1), `firstOwnedKey(m)` = sort key of the first record OWNED
-    * by member `m` (MaxValue past the last record). [[Bcf.readRegion]]
-    * and [[Bam.readRegion]] plug their record-alignment probes in here;
-    * the text path plugs a line probe.
+    * by member `m` (MaxValue past the last record).
+    *
+    * Window contracts (both proven by the key-monotonicity of sorted
+    * files): every record with key >= fromKey starts in a member at or
+    * after `fromByte`; every record with key <= toKey starts in a member
+    * strictly before `toByte`. Records outside [fromKey, toKey] can
+    * still fall inside the window (up to one member chain + the search
+    * slack) — callers re-filter after parsing.
     *
     * Invariants: lo is 0 or a verified member start whose first owned
     * key < target; every member starting at or after hi has first
@@ -918,10 +1040,10 @@ object Bgzf {
     * shrinks geometrically until the 128 KiB floor — 2x the member
     * bound, below which a bisection step can't be proven to progress).
     */
-  private[graft] def searchWindow(len: Long, nextMember: Long => Long,
-                                  firstOwnedKey: Long => Long,
-                                  fromKey: Long,
-                                  toKey: Long): RegionWindow = {
+  private def searchWindow(path: String, len: Long,
+                           nextMember: Long => Long,
+                           firstOwnedKey: Long => Long, fromKey: Long,
+                           toKey: Long): FileWindow = {
     def search(target: Long): (Long, Long, Int) = {
       var lo = 0L
       var hi = len
@@ -939,7 +1061,7 @@ object Bgzf {
     }
     val (fromByte, _, p1) = search(fromKey)
     val (_, toByte, p2) = search(toKey + 1)
-    RegionWindow(fromByte, math.max(toByte, fromByte), p1 + p2)
+    FileWindow(path, len, fromByte, math.max(toByte, fromByte), p1 + p2)
   }
 
   /** Executor-side sharded-sink scaffold shared by [[Bam.writeSharded]]

@@ -32,14 +32,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * deterministic projection, so Catalyst pushes rname/pos filters
   * straight through it into the scan.
   *
-  * These relations are the only scan engine of the binary containers:
-  * their partition readers are the one place the record decoders
-  * (`Bcf.splitRangeRecords`/`Bam.splitRangeRecords`, with the
-  * unaligned-range guard) run, converting records to InternalRows under
-  * `SupportsPushDownRequiredColumns` pruning. Split-size parity with
-  * the whole-file read is spec-pinned (BcfSpec, BamSpec, BinaryV2Spec)
-  * and gate-pinned against the independent DuckDB text parses
-  * (bcf1/bcf2, bam1/bam2, g59b/g59c).
+  * This relation is the only scan engine of the three containers. Its
+  * one partition reader ([[BgzfReaderFactory]]) is the one place the
+  * record decoders run, converting records to InternalRows under
+  * `SupportsPushDownRequiredColumns` pruning: VCF's line reader
+  * (`Bgzf.rangeLinesOf`), and for BCF and BAM the shared aligned-range
+  * reader `Bgzf.alignedRecords` (with the unaligned-range guard) over
+  * each container's `Grammar`. Split-size parity with the whole-file
+  * read is spec-pinned (BcfSpec, BamSpec, BinaryV2Spec) and
+  * gate-pinned against the independent DuckDB text parses (bcf1/bcf2,
+  * bam1/bam2, g59b/g59c).
   */
 private[sources] object BgzfPush {
 
@@ -449,6 +451,44 @@ private[graft] object BgzfScan {
   val StatsInflation = 6L
 }
 
+/** The one partition reader of the BGZF relation. Per byte range it
+  * opens the file, builds the container's record iterator — closing the
+  * handle if that eager construction (header decode, member scan,
+  * alignment) throws, or every failed task attempt leaks one — and
+  * turns each record into a row through the pruned schema's
+  * extractors, one per required column. Both functions are built per
+  * scan on the driver.
+  */
+private[sources] class BgzfReaderFactory[R](
+    hconf: org.apache.spark.SerializableWritable[
+      org.apache.hadoop.conf.Configuration],
+    records: (org.apache.hadoop.fs.FSDataInputStream, Bgzf.Range) =>
+      Iterator[R],
+    extractors: Array[R => Any])
+  extends PartitionReaderFactory {
+
+  override def createReader(
+      partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[BgzfScanPartition]
+    val hp = new org.apache.hadoop.fs.Path(p.path)
+    val in = hp.getFileSystem(hconf.value).open(hp)
+    val recs =
+      try records(in, Bgzf.Range(p.path, p.start, p.end, p.len))
+      catch { case t: Throwable => Bgzf.closeQuietly(in); throw t }
+    new PartitionReader[InternalRow] {
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        if (!recs.hasNext) return false
+        val r = recs.next()
+        row = InternalRow.fromSeq(extractors.map(_(r)).toIndexedSeq)
+        true
+      }
+      override def get(): InternalRow = row
+      override def close(): Unit = Bgzf.closeQuietly(in)
+    }
+  }
+}
+
 // ------------------------------------------------------------------ BCF
 
 class BcfBgzfSource extends TableProvider {
@@ -467,64 +507,33 @@ private[sources] object BcfBgzfSource {
   def container(afFields: Seq[String]): BgzfContainer = BgzfContainer(
     classOf[BcfBgzfSource].getName, "graft_bcf", VcfBgzfSource.schema,
     "chrom", (spark, path, rs) => Bcf.regionPlan(spark, path, rs, 0L),
-    (spark, cols) => new BcfBgzfReaderFactory(BgzfPush.hadoopConf(spark),
-      cols, afFields, Bgzf.alignGuard(spark, "graft.bcf.unaligned.ranges")))
-}
+    (spark, cols) => {
+      // a pruned schema without `genotypes` skips the per-sample block
+      // decode entirely (the binary analog of the VCF split limit)
+      val g = Bcf.Grammar(needGenotypes = cols.contains("genotypes"))
+      val guard = Bgzf.alignGuard(spark, "graft.bcf.unaligned.ranges")
+      new BgzfReaderFactory[BcfRec](BgzfPush.hadoopConf(spark),
+        (in, r) => Bgzf.alignedRecords(g, in, r, guard),
+        extractors(cols, VcfBgzfSource.afPatterns(afFields)))
+    })
 
-private[sources] class BcfBgzfReaderFactory(
-    hconf: org.apache.spark.SerializableWritable[
-      org.apache.hadoop.conf.Configuration],
-    fieldNames: Array[String], afFields: Seq[String],
-    guard: Bgzf.AlignGuard)
-  extends PartitionReaderFactory {
-
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BgzfScanPartition]
-    val hp = new org.apache.hadoop.fs.Path(p.path)
-    val in = hp.getFileSystem(hconf.value).open(hp)
-    // construction is eager (header cursor + alignment): close the
-    // handle before rethrowing, or every failed task attempt leaks one.
-    // A pruned schema without `genotypes` skips the per-sample block
-    // decode entirely (guide §6 — the binary analog of the VCF
-    // split-limit): the block's bytes are dropped from the member
-    // cursor undecoded.
-    val recs =
-      try Bcf.splitRangeRecords(in, p.path, p.start, p.end, p.len, guard,
-        needGenotypes = fieldNames.contains("genotypes"))
-      catch { case t: Throwable =>
-        try in.close() catch { case _: java.io.IOException => }
-        throw t
-      }
-    val patterns = VcfBgzfSource.afPatterns(afFields)
-    val extractors: Array[BcfRec => Any] = fieldNames.map {
-      case "chrom" => (r: BcfRec) => UTF8String.fromString(r.chrom)
-      case "pos" => (r: BcfRec) => r.pos
-      case "id" => (r: BcfRec) => UTF8String.fromString(r.id)
-      case "ref" => (r: BcfRec) => UTF8String.fromString(r.ref)
-      case "alt" => (r: BcfRec) => UTF8String.fromString(r.alt)
-      case "qual" => (r: BcfRec) => UTF8String.fromString(r.qual)
-      case "filter" => (r: BcfRec) => UTF8String.fromString(r.filter)
-      case "info" => (r: BcfRec) => UTF8String.fromString(r.info)
-      case "genotypes" => (r: BcfRec) => new GenericArrayData(
-        r.genotypes.map(UTF8String.fromString(_): Any).toArray)
-      case "af" => (r: BcfRec) => UTF8String.fromString(
-        VcfBgzfSource.afOf(r.info, patterns))
-      case other =>
-        throw new IllegalArgumentException(s"unknown column $other")
-    }
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        if (!recs.hasNext) return false
-        val r = recs.next()
-        row = InternalRow.fromSeq(extractors.map(_(r)).toIndexedSeq)
-        true
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit =
-        try in.close() catch { case _: java.io.IOException => }
-    }
+  private def extractors(cols: Array[String],
+                         patterns: Seq[java.util.regex.Pattern])
+    : Array[BcfRec => Any] = cols.map {
+    case "chrom" => (r: BcfRec) => UTF8String.fromString(r.chrom)
+    case "pos" => (r: BcfRec) => r.pos
+    case "id" => (r: BcfRec) => UTF8String.fromString(r.id)
+    case "ref" => (r: BcfRec) => UTF8String.fromString(r.ref)
+    case "alt" => (r: BcfRec) => UTF8String.fromString(r.alt)
+    case "qual" => (r: BcfRec) => UTF8String.fromString(r.qual)
+    case "filter" => (r: BcfRec) => UTF8String.fromString(r.filter)
+    case "info" => (r: BcfRec) => UTF8String.fromString(r.info)
+    case "genotypes" => (r: BcfRec) => new GenericArrayData(
+      r.genotypes.map(UTF8String.fromString(_): Any).toArray)
+    case "af" => (r: BcfRec) => UTF8String.fromString(
+      VcfBgzfSource.afOf(r.info, patterns))
+    case other =>
+      throw new IllegalArgumentException(s"unknown column $other")
   }
 }
 
@@ -562,32 +571,18 @@ private[sources] object BamBgzfSource {
   val container: BgzfContainer = BgzfContainer(
     classOf[BamBgzfSource].getName, "graft_bam", schema, "rname",
     (spark, path, rs) => Bam.regionPlan(spark, path, rs, 0L),
-    (spark, cols) => new BamBgzfReaderFactory(BgzfPush.hadoopConf(spark),
-      cols, Bgzf.alignGuard(spark, "graft.bam.unaligned.ranges")))
-}
+    (spark, cols) => {
+      val guard = Bgzf.alignGuard(spark, "graft.bam.unaligned.ranges")
+      new BgzfReaderFactory[BamRec](BgzfPush.hadoopConf(spark),
+        (in, r) => Bgzf.alignedRecords(Bam.Grammar, in, r, guard),
+        extractors(cols))
+    })
 
-private[sources] class BamBgzfReaderFactory(
-    hconf: org.apache.spark.SerializableWritable[
-      org.apache.hadoop.conf.Configuration],
-    fieldNames: Array[String], guard: Bgzf.AlignGuard)
-  extends PartitionReaderFactory {
-
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BgzfScanPartition]
-    val hp = new org.apache.hadoop.fs.Path(p.path)
-    val in = hp.getFileSystem(hconf.value).open(hp)
-    // close before rethrowing a construction failure — see the BCF twin
-    val recs =
-      try Bam.splitRangeRecords(in, p.path, p.start, p.end, p.len, guard)
-      catch { case t: Throwable =>
-        try in.close() catch { case _: java.io.IOException => }
-        throw t
-      }
+  private def extractors(cols: Array[String]): Array[BamRec => Any] = {
     def s(v: String): AnyRef = UTF8String.fromString(v)
     def os(v: Option[String]): AnyRef = v.map(s).orNull
     def ol(v: Option[Long]): AnyRef = v.map(Long.box).orNull
-    val extractors: Array[BamRec => Any] = fieldNames.map {
+    cols.map {
       case "qname" => (r: BamRec) => s(r.qname)
       case "flag" => (r: BamRec) => r.flag
       case "rname" => (r: BamRec) => os(r.rname)
@@ -602,18 +597,6 @@ private[sources] class BamBgzfReaderFactory(
       case "tags" => (r: BamRec) => os(r.tags)
       case other =>
         throw new IllegalArgumentException(s"unknown column $other")
-    }
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        if (!recs.hasNext) return false
-        val r = recs.next()
-        row = InternalRow.fromSeq(extractors.map(_(r)).toIndexedSeq)
-        true
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit =
-        try in.close() catch { case _: java.io.IOException => }
     }
   }
 }

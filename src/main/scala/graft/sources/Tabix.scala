@@ -82,7 +82,7 @@ object Tabix {
   // ------------------------------------------------------ binning
 
   /** CSI-generalized reg2bin over a 0-based half-open [beg, end). */
-  private[sources] def reg2bin(beg: Long, end0: Long,
+  private[graft] def reg2bin(beg: Long, end0: Long,
                                minShift: Int = 14, depth: Int = 5): Int = {
     val e = math.max(beg, end0 - 1)
     var l = depth

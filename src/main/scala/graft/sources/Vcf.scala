@@ -268,8 +268,6 @@ object Vcf {
       regions: Seq[(String, Long, Long)], maxSpan: Long, regionPar: Int,
       useIndex: Boolean = true)
     : (Seq[Bgzf.FileWindow], Option[FullScanFile]) = {
-    val maxPos = Int.MaxValue.toLong
-    def key(rank: Int, pos: Long) = (rank.toLong << 32) | pos
     // plain .vcf / non-BGZF gzip have no member chain to bisect, and
     // an unranked chrom can't be ordered against the data
     val isBgzf = Bgzf.isBgzf(conf, fp)
@@ -306,30 +304,18 @@ object Vcf {
             for {
               rk <- ranks.get(c)
               pv <- p.toLongOption
-            } yield key(rk, math.max(0L, math.min(pv, maxPos)))
+            } yield Bgzf.sortKey(rk, pv)
           }
         }
       }
-      // positions are int32 in every container: SATURATE into [0,
-      // maxPos] before the maxSpan back-off so a degenerate Long bound
-      // (end = Long.MaxValue "to end of chrom", a pushed
-      // pos > 2^31-class filter) clamps instead of wrapping — the
-      // packed key's rank bits must never be bled into. One batched
-      // regionWindows call per file: every search shares the
-      // per-member probe memo.
+      // one batched regionWindows call per file: every search shares
+      // the per-member probe memo
       val keyRanges = regions.map { case (chrom, start, end) =>
-        val s0 = math.min(math.max(start, 0L), maxPos)
-        val span = math.max(0L, maxSpan)
-        val lo = if (span >= s0) 0L else s0 - span
-        val hi = math.max(0L, math.min(end, maxPos))
-        (key(ranks(chrom), lo), key(ranks(chrom), hi))
+        Bgzf.keyRange(ranks(chrom), start, end, maxSpan)
       }
-      try {
-        val ws = Bgzf.regionWindows(conf, fp, keyOf, keyRanges,
-          regionPar).map(w =>
-          Bgzf.FileWindow(fp, len, w.fromByte, w.toByte, w.probes))
-        (ws, None)
-      } catch {
+      try (Bgzf.regionWindows(conf, fp, len, Bgzf.lineProbe(fp, len, keyOf),
+        keyRanges, regionPar), None)
+      catch {
         // probe-key inversion: the file breaks the sorted contract, so
         // its bisected windows can't be trusted — full scan of THIS
         // file only (correct, just unpruned), all-or-nothing like the

@@ -2,11 +2,10 @@ package graft.sources
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes. Column pruning reaches the per-line parse here (a
   * `select(chrom, pos)` never splits genotype columns or allocates the
   * array). This file holds what is VCF's own: the provider, the row
-  * shape, the [[BgzfContainer]] value and the line reader.
+  * shape, the [[BgzfContainer]] value and the line reader's split and
+  * extractors.
   *
   * Row parity: the partition reader re-implements [[Vcf.parseLines]]'s
   * column semantics record-for-record (raw-line header/blank filter
@@ -61,9 +61,52 @@ private[sources] object VcfBgzfSource {
   def container(afFields: Seq[String]): BgzfContainer = BgzfContainer(
     classOf[VcfBgzfSource].getName, "graft_vcf_bgzf", schema, "chrom",
     (spark, path, rs) => Vcf.regionPlan(spark, path, rs, maxSpan = 0L),
-    (spark, cols) => new VcfBgzfReaderFactory(BgzfPush.hadoopConf(spark),
-      cols, afFields),
+    (spark, cols) => readers(spark, cols, afFields),
     wantsBgzf = true)
+
+  /** The line reader of one pruned scan. The tab split is bounded by
+    * the LAST field the pruned schema touches: a (chrom, pos) panel
+    * scan over a 20-sample cohort must not materialize 29 field strings
+    * per line — split with limit k+2 yields fields 0..k intact plus one
+    * un-split remainder. Only a schema that asks for `genotypes`
+    * (fields 10+) needs the full split. One extractor per REQUIRED
+    * column, each bound to the SAME shared field table the split bound
+    * came from — a pruned scan never splits genotype columns it will
+    * not emit.
+    */
+  private def readers(spark: org.apache.spark.sql.SparkSession,
+                      cols: Array[String],
+                      afFields: Seq[String]): PartitionReaderFactory = {
+    val maxField: Int =
+      if (cols.contains("genotypes")) Int.MaxValue
+      else cols.map(fieldIndex).foldLeft(0)(math.max)
+    val splitLimit = if (maxField == Int.MaxValue) -1 else maxField + 2
+    val patterns = afPatterns(afFields)
+    val extractors: Array[Array[String] => Any] = cols.map {
+      case "pos" =>
+        val i = fieldIndex("pos")
+        (f: Array[String]) => if (f.length > i) tryLong(f(i)) else null
+      case "genotypes" => (f: Array[String]) =>
+        new GenericArrayData(f.drop(9).map(UTF8String.fromString(_): Any))
+      case "af" =>
+        val i = fieldIndex("af")
+        (f: Array[String]) =>
+          if (f.length > i) UTF8String.fromString(afOf(f(i), patterns))
+          else null
+      case name =>
+        val i = fieldIndex(name)
+        (f: Array[String]) =>
+          if (f.length > i) UTF8String.fromString(f(i)) else null
+    }
+    new BgzfReaderFactory[Array[String]](BgzfPush.hadoopConf(spark),
+      (in, r) => Bgzf.rangeLinesOf(in, r).filter(isData).map { line =>
+        val stripped =
+          if (line.nonEmpty && line.charAt(line.length - 1) == '\r')
+            line.substring(0, line.length - 1)
+          else line
+        stripped.split("\t", splitLimit)
+      }, extractors)
+  }
 
   /** The [[Vcf.parseLines]] row shape, fixed order. */
   val schema: StructType = StructType(Seq(
@@ -126,80 +169,4 @@ private[sources] object VcfBgzfSource {
   private[sources] def fieldIndex(name: String): Int =
     FieldOf.getOrElse(name,
       throw new IllegalArgumentException(s"unknown column $name"))
-}
-
-private[sources] class VcfBgzfReaderFactory(
-    hconf: org.apache.spark.SerializableWritable[
-      org.apache.hadoop.conf.Configuration],
-    fieldNames: Array[String], afFields: Seq[String])
-  extends PartitionReaderFactory {
-
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BgzfScanPartition]
-    val hp = new org.apache.hadoop.fs.Path(p.path)
-    val in = hp.getFileSystem(hconf.value).open(hp)
-    // construction is eager (member scan + boundary probe): close the
-    // handle before rethrowing, or every failed task attempt leaks one
-    val lines =
-      try Bgzf.rangeLinesOf(in,
-        Bgzf.Range(p.path, p.start, p.end, p.len))
-        .filter(VcfBgzfSource.isData)
-      catch { case t: Throwable =>
-        try in.close() catch { case _: java.io.IOException => }
-        throw t
-      }
-    val patterns = VcfBgzfSource.afPatterns(afFields)
-    // Bound the tab-split by the LAST field the pruned schema touches:
-    // a (chrom, pos) panel scan over a 20-sample cohort must not
-    // materialize 29 field strings per line — split with limit k+2
-    // yields fields 0..k intact plus one un-split remainder. Only a
-    // schema that asks for `genotypes` (fields 10+) needs the full
-    // split.
-    val maxField: Int =
-      if (fieldNames.contains("genotypes")) Int.MaxValue
-      else fieldNames.map(VcfBgzfSource.fieldIndex).foldLeft(0)(math.max)
-    val splitLimit = if (maxField == Int.MaxValue) -1 else maxField + 2
-    // one extractor per REQUIRED column, each bound to the SAME shared
-    // field table the split bound came from — a pruned scan never
-    // splits genotype columns it will not emit
-    val extractors: Array[Array[String] => Any] = fieldNames.map {
-      case "pos" =>
-        val i = VcfBgzfSource.fieldIndex("pos")
-        (f: Array[String]) =>
-          if (f.length > i) VcfBgzfSource.tryLong(f(i)) else null
-      case "genotypes" => (f: Array[String]) =>
-        new GenericArrayData(
-          f.drop(9).map(UTF8String.fromString(_): Any))
-      case "af" =>
-        val i = VcfBgzfSource.fieldIndex("af")
-        (f: Array[String]) =>
-          if (f.length > i)
-            UTF8String.fromString(VcfBgzfSource.afOf(f(i), patterns))
-          else null
-      case name =>
-        val i = VcfBgzfSource.fieldIndex(name)
-        (f: Array[String]) =>
-          if (f.length > i) UTF8String.fromString(f(i)) else null
-    }
-
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        if (!lines.hasNext) return false
-        val line = lines.next()
-        val stripped =
-          if (line.nonEmpty && line.charAt(line.length - 1) == '\r')
-            line.substring(0, line.length - 1)
-          else line
-        val f = stripped.split("\t", splitLimit)
-        row = InternalRow.fromSeq(
-          extractors.map(_(f)).toIndexedSeq)
-        true
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit =
-        try in.close() catch { case _: java.io.IOException => }
-    }
-  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.sources.{Bam, Sam}
+import graft.sources.{Bam, Bgzf, Sam, Tabix}
 
 /** Byte-level BGZF/BAM reader+writer pins (SAM spec §4): container
   * grammar the gate's row-level oracle can't see — member caps, the
@@ -67,7 +67,7 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bam.write(Sam.read(spark, samPath), refs, p)
     val bytes = Files.readAllBytes(Paths.get(p))
     // tail = the fixed 28-byte empty member
-    assert(bytes.takeRight(28).sameElements(Bam.BgzfEof))
+    assert(bytes.takeRight(28).sameElements(Bgzf.Eof))
     // walk members by BSIZE; every header carries the BC subfield
     var off = 0
     var members = 0
@@ -92,10 +92,10 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
     var off = 0
     while (off < payload.length) {
       val n = math.min(0xff00, payload.length - off)
-      Bam.writeBgzfMember(out, payload, off, n)
+      Bgzf.writeMember(out, payload, off, n)
       off += n
     }
-    out.write(Bam.BgzfEof)
+    out.write(Bgzf.Eof)
     val in = new GZIPInputStream(
       new ByteArrayInputStream(out.toByteArray), 65536)
     val got = in.readAllBytes()
@@ -329,9 +329,9 @@ class BamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("reg2bin matches the SAM spec examples") {
-    assert(Bam.reg2bin(0, 1) == 4681)           // smallest 16kb bin
-    assert(Bam.reg2bin(0, 1 << 14) == 4681)
-    assert(Bam.reg2bin(1 << 14, (1 << 14) + 1) == 4682)
-    assert(Bam.reg2bin(0, 1 << 29) == 0)        // whole-axis
+    assert(Tabix.reg2bin(0, 1) == 4681)           // smallest 16kb bin
+    assert(Tabix.reg2bin(0, 1 << 14) == 4681)
+    assert(Tabix.reg2bin(1 << 14, (1 << 14) + 1) == 4682)
+    assert(Tabix.reg2bin(0, 1 << 29) == 0)        // whole-axis
   }
 }

@@ -287,5 +287,28 @@ class BinaryV2Spec extends AnyFunSuite with BeforeAndAfterAll {
       assert(impls.size <= 1,
         s"$iface implemented ${impls.size} times: ${impls.mkString(", ")}")
     }
+    // one record grammar per binary container: the aligned-range
+    // reader, the region search and the partition reader exist once
+    val perContainer = sources.collect {
+      case (f, t) if f.endsWith("/sources/Bcf.scala") ||
+        f.endsWith("/sources/Bam.scala") =>
+        Seq("splitRangeRecords", "recordIterator", "planFile")
+          .filter(fn => s"\\bdef\\s+$fn\\b".r.findFirstIn(t).isDefined)
+          .map(fn => s"$f: def $fn")
+    }.flatten
+    assert(perContainer.isEmpty,
+      s"a per-container copy of shared BGZF machinery: $perContainer")
+    val searchCalls = sources.collect {
+      case (f, t) if !f.endsWith("/sources/Bgzf.scala") &&
+        (calls(t, "searchWindow") || calls(t, "monotonicProbe")) => f
+    }
+    assert(searchCalls.isEmpty,
+      s"bisection driven outside Bgzf.regionWindows: $searchCalls")
+    val readers = sources.filter(_._1.contains("/graft/sources/"))
+      .flatMap { case (f, t) =>
+        "\\bnew\\s+PartitionReader\\b".r.findAllIn(t).map(_ => f)
+      }
+    assert(readers.size == 1,
+      s"new PartitionReader ${readers.size} times: ${readers.mkString(", ")}")
   }
 }

@@ -18,8 +18,8 @@ import graft.sources.{Bcf, Bgzf, Tabix, Vcf}
   * the first action; and on generated sorted cohorts (REF spans up to
   * `maxSpan`, random BGZF member sizes, random region lists) the rows
   * of `readRegions` equal the text-parse overlap oracle on a single
-  * `.vcf.gz`, the same file with a `.tbi`, a sharded directory and a
-  * `Bcf.writeSharded` directory.
+  * `.vcf.gz`, the same file with a `.tbi`, a sharded directory, and a
+  * `Bcf.writeSharded` directory without and with `.csi` sidecars.
   */
 class RegionRelationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -222,8 +222,15 @@ class RegionRelationSpec extends AnyFunSuite with BeforeAndAfterAll {
           .sortWithinPartitions("chrom", "pos"),
         contigs.map(c => (c, 1000000L)), Seq("S1", "S2"), bcf,
         blockSize = blockSize)
+      // the same shards with a .csi each: sidecar-served windows
+      val bcfCsi = s"$dir/bcf-csi"
+      Bcf.writeSharded(
+        parsed.repartitionByRange(3, col("chrom"), col("pos"))
+          .sortWithinPartitions("chrom", "pos"),
+        contigs.map(c => (c, 1000000L)), Seq("S1", "S2"), bcfCsi,
+        blockSize = blockSize, index = true)
       val layouts = Seq("single" -> single, "tbi" -> indexed,
-        "sharded" -> s"$dir/sharded", "bcf" -> bcf)
+        "sharded" -> s"$dir/sharded", "bcf" -> bcf, "bcf+csi" -> bcfCsi)
       (0 until 3).foreach { i =>
         val regions = regionGen(recs)
           .apply(Gen.Parameters.default, Seed(seed * 31 + i)).get
