@@ -1,15 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{HaploProteins, Haplotypes, IntervalJoin}
 import graft.queries.GenomicPipeline
 import graft.sources.{Fasta, Gtf, Vcf}
 
-/** Shared plumbing for the [[Prohap]] / [[Provar]] CLI mains: flag
-  * parsing in the reference's argparse style (`-i file.vcf -af 0.01 ...`),
-  * input readers, and the three writers (metadata TSV, protein FASTA,
-  * optional cDNA FASTA).
+/** The ProHap/ProVar pipeline behind the [[Prohap]] and [[Provar]] CLI
+  * mains: flag parsing in the reference's argparse style (`-i file.vcf
+  * -af 0.01 ...`), input readers, the composition steps both modes
+  * share, and the three writers (metadata TSV, protein FASTA, optional
+  * cDNA FASTA). The h4/h5/f9/p2/pv1 gates run this composition on the
+  * fixture files under [[graft.fixtures.GenomicFixtures.cliOpts]], and
+  * the `gts_long` fixture the h1-h6 gates read is built by
+  * [[transcriptIntervals]] and [[genotypesByTranscript]].
   *
   * Divergences from the reference CLI (documented, all by design):
   *  - `-db` takes the GTF file itself (read by [[Gtf.read]]), not a
@@ -27,10 +31,19 @@ import graft.sources.{Fasta, Gtf, Vcf}
   */
 private[graft] object ProHapCli {
 
+  /** `-flag value` pairs. A value may itself start with `-`
+    * (`-min_backoff_logp -8`); a key token without the leading `-`, or
+    * a trailing flag with no value, is rejected by name.
+    */
   def parseArgs(args: Array[String]): Map[String, String] =
-    args.grouped(2).collect {
+    args.grouped(2).map {
       case Array(flag, value) if flag.startsWith("-") =>
         flag.stripPrefix("-") -> value
+      case Array(flag, _*) if !flag.startsWith("-") =>
+        throw new IllegalArgumentException(
+          s"expected a -flag, got '$flag'")
+      case Array(flag) =>
+        throw new IllegalArgumentException(s"flag '$flag' has no value")
     }.toMap
 
   /** `-af_field MAF` (vcf_filter_fix.py:11): which INFO key(s) carry the
@@ -166,15 +179,58 @@ private[graft] object ProHapCli {
         "pos", "ref", "alt", "allele_af", "gt")
   }
 
+  /** Annotation + cDNA of the selected transcripts. `-require_start 1`
+    * (reference default, prohap.py:122-127, provar.py:33-34) drops
+    * transcripts without a start_codon annotation; 0 keeps them (they
+    * translate in all three frames, reading_frame = -1).
+    */
+  def transcriptInfo(spark: SparkSession, gtf: DataFrame,
+                     transcripts: DataFrame,
+                     opts: Map[String, String]): DataFrame = {
+    val cdna = Fasta.read(spark, opts("cdna"))
+      .select(col("accession").as("transcript_id"), col("sequence"))
+    val tinfo = GenomicPipeline.transcriptInfoFrom(gtf, cdna)
+      .join(broadcast(transcripts.select("transcript")), Seq("transcript"),
+        "left_semi")
+    if (opts.getOrElse("require_start", "1") == "1")
+      tinfo.where(col("start_codon_start").isNotNull)
+    else tinfo
+  }
+
+  /** The `-i` variant rows, normalized with the `-af` threshold. */
+  def variants(spark: SparkSession, opts: Map[String, String]): DataFrame =
+    Vcf.normalize(readVcfInput(spark, opts),
+      opts.getOrElse("af", "0").toDouble)
+
+  /** What both modes read: the [[variants]], the selected transcript
+    * intervals and their [[transcriptInfo]].
+    */
+  def inputs(spark: SparkSession, opts: Map[String, String])
+  : (DataFrame, DataFrame, DataFrame) = {
+    val gtf = Gtf.read(spark, opts("db"))
+    val transcripts = transcriptIntervals(spark, gtf, opts)
+    (variants(spark, opts), transcripts,
+      transcriptInfo(spark, gtf, transcripts, opts))
+  }
+
+  /** `-bin_size`: bin width of the variant-to-transcript interval join. */
+  def binSize(opts: Map[String, String]): Long =
+    opts.getOrElse("bin_size", "100000").toLong
+
+  /** Content-derived haplotype ID: `idPrefix` + the first 12 hex digits
+    * of md5("transcript|vcf_ids").
+    */
+  def haplotypeId(idPrefix: String): Column =
+    concat(lit(idPrefix), substring(
+      md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12))
+
   /** Reference metadata column layout (process_haplotypes.py:9-32). */
   def metadataFrame(db: DataFrame, idPrefix: String): DataFrame =
     db.select(
       col("transcript").as("TranscriptID"),
       col("chromosome"),
       col("biotype").as("transcript_biotype"),
-      concat(lit(idPrefix), substring(
-        md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12))
-        .as("HaplotypeID"),
+      haplotypeId(idPrefix).as("HaplotypeID"),
       col("vcf_ids").as("VCF_IDs"),
       col("dna_changes").as("DNA_changes"),
       col("allele_freqs").as("allele_frequencies"),
@@ -193,58 +249,43 @@ private[graft] object ProHapCli {
       col("frequency_superpopulation"),
       col("samples"))
 
-  /** Protein FASTA entries: one per distinct sequence, header
+  /** Protein FASTA entries: one per distinct sequence
+    * ([[HaploProteins.dedupProteins]] keyed by [[haplotypeId]]), header
     * `tag|{accPrefix}_{md5_12}|matching_proteins:... start:N
     * reading_frame:r1;r2` (prohap.py:174-179, content-derived accession).
     */
   def fastaEntries(db: DataFrame, tag: String, accPrefix: String,
-                   idPrefix: String): DataFrame = {
-    val hapId = concat(lit(idPrefix), substring(
-      md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12))
-    val entries = when(col("alt_frame_sequences") === "-",
-      array(struct(col("protein_sequence").as("seq"),
-        col("reading_frame").cast("string").as("rf"))))
-      .otherwise(array(
-        struct(col("protein_sequence").as("seq"), lit("0").as("rf")),
-        struct(split(col("alt_frame_sequences"), ";").getItem(0).as("seq"),
-          lit("1").as("rf")),
-        struct(split(col("alt_frame_sequences"), ";").getItem(1).as("seq"),
-          lit("2").as("rf"))))
-    db.select(hapId.as("hap"), col("protein_prefix_length").as("ps"),
-        explode(entries).as("e"))
-      .groupBy(col("e.seq").as("sequence"))
-      .agg(
-        array_join(sort_array(collect_list(col("hap"))), ";").as("haps"),
-        min(col("ps")).as("start"),
-        array_join(array_distinct(sort_array(collect_list(col("e.rf")))),
-          ";").as("rfs"))
+                   idPrefix: String): DataFrame =
+    HaploProteins.dedupProteins(db, haplotypeId(idPrefix))
       .select(lit(tag).as("tag"),
         concat(lit(accPrefix), lit("_"),
-          substring(md5(col("sequence")), 1, 12)).as("accession"),
-        concat(lit("matching_proteins:"), col("haps"),
+          substring(md5(col("protein_sequence")), 1, 12)).as("accession"),
+        concat(lit("matching_proteins:"), col("haplotypes"),
           lit(" start:"), col("start"),
           lit(" reading_frame:"), col("rfs")).as("description"),
-        col("sequence"))
-  }
+        col("protein_sequence").as("sequence"))
 
-  /** cDNA FASTA entries (prohap.py:184-193 header layout inside the
-    * tag|accession|description grammar [[Fasta.write]] emits).
+  /** cDNA FASTA entries: [[HaploProteins.dedupCdna]] keyed by
+    * [[haplotypeId]].
     */
   def cdnaEntries(db: DataFrame, tag: String, idPrefix: String)
-  : DataFrame = {
-    val keyed = db.withColumn("_hap", concat(lit(idPrefix), substring(
-      md5(concat(col("transcript"), lit("|"), col("vcf_ids"))), 1, 12)))
-    keyed.groupBy(col("cdna_sequence"))
-      .agg(array_join(sort_array(collect_list(col("_hap"))), ";")
-          .as("haps"),
-        min(col("cdna_start")).as("start"))
-      .select(lit(tag).as("tag"),
-        concat(lit("cdna_"), substring(md5(col("cdna_sequence")), 1, 12))
-          .as("accession"),
-        concat(col("haps"), lit(" start:"), col("start"))
-          .as("description"),
-        col("cdna_sequence").as("sequence"))
-  }
+  : DataFrame =
+    cdnaFasta(HaploProteins.dedupCdna(db, haplotypeId(idPrefix)), tag,
+      "cdna_")
+
+  /** FASTA rows of a [[HaploProteins.dedupCdna]] frame: accession
+    * `{accPrefix}{md5_12}`, description `haplotypes start:N`
+    * (prohap.py:184-193 header layout inside the tag|accession|description
+    * grammar [[Fasta.write]] emits).
+    */
+  def cdnaFasta(dedup: DataFrame, tag: String, accPrefix: String)
+  : DataFrame =
+    dedup.select(lit(tag).as("tag"),
+      concat(lit(accPrefix), substring(md5(col("cdna_sequence")), 1, 12))
+        .as("accession"),
+      concat(col("haplotypes"), lit(" start:"), col("cdna_start"))
+        .as("description"),
+      col("cdna_sequence").as("sequence"))
 
   def write(df: DataFrame, path: String, opts: Map[String, String],
             asFasta: Boolean): Unit = {
@@ -253,6 +294,39 @@ private[graft] object ProHapCli {
     if (asFasta) Fasta.write(out, path)
     else out.write.mode("overwrite").option("sep", "\t")
       .option("header", "true").csv(path)
+  }
+
+  /** The three outputs of a protein database: `-output_csv` metadata TSV,
+    * `-output_fasta` protein FASTA and, with `-output_cdna_fasta`, the
+    * cDNA FASTA. `-tag`, `-acc_prefix` and `-id_prefix` override the
+    * mode's defaults.
+    */
+  def writeOutputs(db: DataFrame, opts: Map[String, String], tag: String,
+                   accPrefix: String, idPrefix: String): Unit = {
+    val t = opts.getOrElse("tag", tag)
+    val id = opts.getOrElse("id_prefix", idPrefix)
+    write(metadataFrame(db, id), opts("output_csv"), opts, asFasta = false)
+    write(fastaEntries(db, t, opts.getOrElse("acc_prefix", accPrefix), id),
+      opts("output_fasta"), opts, asFasta = true)
+    opts.get("output_cdna_fasta").foreach { p =>
+      write(cdnaEntries(db, t, id), p, opts, asFasta = true)
+    }
+  }
+
+  /** One CLI invocation: session, database, outputs, cache release and
+    * session stop.
+    */
+  def cliMain(args: Array[String], app: String, tag: String,
+              accPrefix: String, idPrefix: String)(
+      run: (SparkSession, Map[String, String]) => DataFrame): Unit = {
+    val opts = parseArgs(args)
+    val spark = session(opts, app)
+    spark.sparkContext.setLogLevel("WARN")
+    val db = run(spark, opts).persist()
+    writeOutputs(db, opts, tag, accPrefix, idPrefix)
+    GenomicPipeline.releaseCaches()
+    db.unpersist()
+    spark.stop()
   }
 }
 
@@ -271,34 +345,21 @@ private[graft] object ProHapCli {
 object Prohap {
   import ProHapCli._
 
-  /** The pipeline minus the SparkSession/paths: exposed so tests drive
-    * it against the fixture raw files without forking a JVM.
+  /** The pipeline minus the SparkSession/paths; the mutated-cDNA columns
+    * are kept when `-output_cdna_fasta` is given.
     */
-  def run(spark: SparkSession, opts: Map[String, String]): DataFrame = {
-    val vcfPath = opts("i")
-    val minAf = opts.getOrElse("af", "0").toDouble
-    val norm = Vcf.normalize(
-      ProHapCli.readVcfInput(spark, opts), minAf)
-    val gtf = Gtf.read(spark, opts("db"))
+  def run(spark: SparkSession, opts: Map[String, String]): DataFrame =
+    database(spark, opts, keepCdna = opts.contains("output_cdna_fasta"))
+
+  def database(spark: SparkSession, opts: Map[String, String],
+               keepCdna: Boolean): DataFrame = {
+    val (norm, transcripts, tinfo) = inputs(spark, opts)
     val meta = samplesMeta(spark, opts("s"))
-    val transcripts = transcriptIntervals(spark, gtf, opts)
-    val gts = genotypesByTranscript(norm, Vcf.sampleNamesAuto(spark, vcfPath),
-      meta, transcripts,
+    val gts = genotypesByTranscript(norm,
+      Vcf.sampleNamesAuto(spark, opts("i")), meta, transcripts,
       opts.getOrElse("x_par1_to", "2781479").toLong,
       opts.getOrElse("x_par2_from", "155701383").toLong,
-      opts.getOrElse("bin_size", "100000").toLong)
-    val cdna = Fasta.read(spark, opts("cdna"))
-      .select(col("accession").as("transcript_id"), col("sequence"))
-    // -require_start 1 (reference default, prohap.py:122-127): transcripts
-    // without a start_codon annotation are dropped entirely; 0 keeps them
-    // (they translate in all three frames, reading_frame = -1)
-    val tinfo0 = GenomicPipeline.transcriptInfoFrom(gtf, cdna)
-      .join(broadcast(transcripts.select("transcript")), Seq("transcript"),
-        "left_semi")
-    val tinfo =
-      if (opts.getOrElse("require_start", "1") == "1")
-        tinfo0.where(col("start_codon_start").isNotNull)
-      else tinfo0
+      binSize(opts))
     val metaOpt =
       if (Seq("population", "superpopulation").forall(
         meta.columns.contains(_))) Some(meta)
@@ -312,29 +373,12 @@ object Prohap {
       ignoreUtr = opts.getOrElse("ignore_UTR", "1") == "1",
       skipStartLoss = opts.getOrElse("skip_start_lost", "1") == "1",
       minCount = minCount,
-      keepCdna = opts.contains("output_cdna_fasta"))
+      keepCdna = keepCdna)
     if (minFreq >= 0) db.where(col("frequency") >= minFreq) else db
   }
 
-  def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
-    val spark = session(opts, "graft-prohap")
-    spark.sparkContext.setLogLevel("WARN")
-    val db = run(spark, opts).persist()
-    val tag = opts.getOrElse("tag", "generic_enshap")
-    val accPrefix = opts.getOrElse("acc_prefix", "enshap")
-    val idPrefix = opts.getOrElse("id_prefix", "haplo_")
-    write(metadataFrame(db, idPrefix), opts("output_csv"), opts,
-      asFasta = false)
-    write(fastaEntries(db, tag, accPrefix, idPrefix),
-      opts("output_fasta"), opts, asFasta = true)
-    opts.get("output_cdna_fasta").foreach { p =>
-      write(cdnaEntries(db, tag, idPrefix), p, opts, asFasta = true)
-    }
-    GenomicPipeline.releaseCaches()
-    db.unpersist()
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    cliMain(args, "graft-prohap", "generic_enshap", "enshap", "haplo_")(run)
 }
 
 /** ProVar end-to-end CLI (provar.py:14-57): one protein row per variant x
@@ -344,18 +388,13 @@ object Provar {
   import ProHapCli._
 
   def run(spark: SparkSession, opts: Map[String, String]): DataFrame = {
-    val minAf = opts.getOrElse("af", "0").toDouble
-    val norm = Vcf.normalize(
-      ProHapCli.readVcfInput(spark, opts), minAf)
-    val gtf = Gtf.read(spark, opts("db"))
-    val transcripts = transcriptIntervals(spark, gtf, opts)
+    val (norm, transcripts, tinfo) = inputs(spark, opts)
     // one row per allele line: multi-allelic rows share a VCF id, so the
     // per-allele id is made unique (provar emits one row per allele)
     val perVariant = IntervalJoin.pointsInIntervals(
       norm.select(col("chrom"), col("pos"), col("id"), col("ref"),
         col("alt"), col("allele_af")),
-      transcripts, Seq("chrom"),
-      opts.getOrElse("bin_size", "100000").toLong)
+      transcripts, Seq("chrom"), binSize(opts))
       .select("transcript", "id", "pos", "ref", "alt", "allele_af")
       .distinct()
       .withColumn("varId", concat(col("id"), lit(":"), col("alt")))
@@ -366,38 +405,12 @@ object Provar {
       .withColumn("frequency", lit(0.0))
       .withColumn("samples", lit(""))
       .drop("id")
-    val cdna = Fasta.read(spark, opts("cdna"))
-      .select(col("accession").as("transcript_id"), col("sequence"))
-    // same -require_start contract as Prohap (provar.py:33-34)
-    val tinfo0 = GenomicPipeline.transcriptInfoFrom(gtf, cdna)
-      .join(broadcast(transcripts.select("transcript")), Seq("transcript"),
-        "left_semi")
-    val tinfo =
-      if (opts.getOrElse("require_start", "1") == "1")
-        tinfo0.where(col("start_codon_start").isNotNull)
-      else tinfo0
     HaploProteins.proteinDatabase(perVariant.join(tinfo, Seq("transcript")),
       forceRf = opts.getOrElse("force_rf", "1") == "1",
       ignoreUtr = false, skipStartLoss = false, requireNonSyn = false,
       keepCdna = opts.contains("output_cdna_fasta"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
-    val spark = session(opts, "graft-provar")
-    spark.sparkContext.setLogLevel("WARN")
-    val db = run(spark, opts).persist()
-    val tag = opts.getOrElse("tag", "generic_var")
-    val accPrefix = opts.getOrElse("acc_prefix", "var")
-    val idPrefix = opts.getOrElse("id_prefix", "var_")
-    write(metadataFrame(db, idPrefix), opts("output_csv"), opts,
-      asFasta = false)
-    write(fastaEntries(db, tag, accPrefix, idPrefix),
-      opts("output_fasta"), opts, asFasta = true)
-    opts.get("output_cdna_fasta").foreach { p =>
-      write(cdnaEntries(db, tag, idPrefix), p, opts, asFasta = true)
-    }
-    db.unpersist()
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    cliMain(args, "graft-provar", "generic_var", "var", "var_")(run)
 }

@@ -2,8 +2,8 @@ package graft.fixtures
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ProHapCli
 import graft.sources.{Fasta, Gtf, Vcf}
-import graft.operators.{Haplotypes, IntervalJoin}
 
 /** Deterministic genomic fixture inputs for the driver's correctness gate.
   *
@@ -284,35 +284,31 @@ object GenomicFixtures {
   def sampleNames(spark: SparkSession): Seq[String] =
     Vcf.sampleNames(spark, vcfPath)
 
-  /** Normalized variant rows (all valid alleles, no AF threshold). */
-  def vcfNorm(spark: SparkSession): DataFrame =
-    Vcf.normalize(Vcf.read(spark, vcfPath), 0.0)
+  /** The ProHap/ProVar CLI options under which the CLI composition runs
+    * the fixture files: the fixture's PAR bounds, 20 bp interval bins,
+    * and `-require_start 0` so start-codon-less transcripts (rf = -1)
+    * stay in the gates (the CLI default mirrors the reference's 1).
+    */
+  val cliOpts: Map[String, String] = Map(
+    "i" -> vcfPath,
+    "db" -> gtfPath,
+    "cdna" -> cdnaPath,
+    "s" -> s"$rawDir/samples.tsv",
+    "x_par1_to" -> par1To.toString,
+    "x_par2_from" -> par2From.toString,
+    "require_start" -> "0",
+    "bin_size" -> "20")
 
   /** Long genotype matrix joined to transcripts: one row per
-    * (transcript, variant, sample) with sex + autosomal ploidy flags.
+    * (transcript, variant, sample) with sex + autosomal ploidy flags —
+    * the CLI's own steps on [[cliOpts]].
     */
-  def gtsLong(spark: SparkSession): DataFrame = {
-    val samples = sampleNames(spark)
-    val gts = Vcf.genotypesLong(vcfNorm(spark), samples)
-      .select(col("chrom"), col("pos"), col("id").as("varId"), col("ref"),
-        col("alt"), col("allele_af"), col("sample"), col("gt"))
-    val transcripts = Gtf.transcriptsByBiotype(
-      Gtf.read(spark, gtfPath), Seq("all"))
-      .select(col("chromosome").as("chrom"),
-        col("transcriptID").as("transcript"),
-        col("start"), col("end"), col("strand"))
-    val joined = IntervalJoin.pointsInIntervals(gts, transcripts,
-      Seq("chrom"), binSize = 20)
-    val meta = spark.read.option("sep", "\t").option("header", "true")
-      .csv(s"$rawDir/samples.tsv")
-    joined
-      .join(meta.select(col("sample"), col("sex")), Seq("sample"))
-      .withColumn("autosomal",
-        Haplotypes.isAutosomal(col("start"), col("end"),
-          isXChrom = true, par1To, par2From) || col("chrom") =!= "X")
-      .select("transcript", "chrom", "sample", "sex", "autosomal", "varId",
-        "pos", "ref", "alt", "allele_af", "gt")
-  }
+  def gtsLong(spark: SparkSession): DataFrame =
+    ProHapCli.genotypesByTranscript(ProHapCli.variants(spark, cliOpts),
+      sampleNames(spark), ProHapCli.samplesMeta(spark, cliOpts("s")),
+      ProHapCli.transcriptIntervals(spark, Gtf.read(spark, gtfPath),
+        cliOpts),
+      par1To, par2From, ProHapCli.binSize(cliOpts))
 
   /** Hand-written DNA-function cases (cDNA coordinates, 1-based). */
   private def applyCases(spark: SparkSession): DataFrame = {
@@ -651,7 +647,8 @@ object GenomicFixtures {
         col("start"), col("end"), col("strand"))
     val tables: Seq[(() => DataFrame, String)] = Seq(
       (() => Vcf.read(spark, vcfPath), "vcf_parsed"),
-      (() => vcfNorm(spark), "vcf_norm"),
+      // normalized variant rows (all valid alleles, no AF threshold)
+      (() => Vcf.normalize(Vcf.read(spark, vcfPath), 0.0), "vcf_norm"),
       (() => Gtf.read(spark, gtfPath), "gtf"),
       (() => exons, "exons"),
       (() => Gtf.exonsByTranscript(Gtf.read(spark, gtfPath)), "exon_arrays"),
@@ -673,8 +670,8 @@ object GenomicFixtures {
           col("attributes")), "ensref_tr"),
       (() => spark.read.option("sep", "\t").option("header", "true")
         .csv(s"$rawDir/peptides.tsv"), "peptides"),
-      (() => spark.read.option("sep", "\t").option("header", "true")
-        .csv(s"$rawDir/samples.tsv"), "samples_meta"),
+      (() => ProHapCli.samplesMeta(spark, cliOpts("s")),
+        "samples_meta"),
       // per-base reference table for the pileup caller (g13): one row
       // per (chrom, pos, ref) from the raw genome TSV
       (() => spark.read.option("sep", "\t").csv(s"$rawDir/genome.txt")

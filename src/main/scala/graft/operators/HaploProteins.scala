@@ -442,13 +442,18 @@ object HaploProteins {
     if (keepCdna) out else out.drop("cdna_sequence", "cdna_start")
   }
 
+  /** The haplotype key the dedup aggregations collect by default. */
+  private def hapKey: Column =
+    concat(col("transcript"), lit(":"), col("vcf_ids"))
+
   /** Deduplicate protein sequences across haplotypes: one row per distinct
-    * sequence with the ordered haplotype keys and reading frames — the
-    * FASTA-entry aggregation of process_haplotypes.py:437-470. Unknown-
-    * frame haplotypes (reading_frame = -1) contribute THREE sequence
-    * entries, one per frame, exactly like the reference's rf-loop.
+    * sequence with the sorted `key`s of its haplotypes, the min protein
+    * start and the reading frames — the FASTA-entry aggregation of
+    * process_haplotypes.py:437-470. Unknown-frame haplotypes
+    * (reading_frame = -1) contribute THREE sequence entries, one per
+    * frame, exactly like the reference's rf-loop.
     */
-  def dedupProteins(db: DataFrame): DataFrame = {
+  def dedupProteins(db: DataFrame, key: Column = hapKey): DataFrame = {
     val entries = when(col("alt_frame_sequences") === "-",
       array(struct(col("protein_sequence").as("seq"),
         col("reading_frame").cast("string").as("rf"))))
@@ -458,13 +463,14 @@ object HaploProteins {
           lit("1").as("rf")),
         struct(split(col("alt_frame_sequences"), ";").getItem(1).as("seq"),
           lit("2").as("rf"))))
-    db.select(col("transcript"), col("vcf_ids"), explode(entries).as("e"))
+    db.select(key.as("hap"), col("protein_prefix_length").as("ps"),
+        explode(entries).as("e"))
       .groupBy(col("e.seq").as("protein_sequence"))
       .agg(
         count(lit(1)).as("n_haplotypes"),
-        array_join(sort_array(collect_list(
-          concat(col("transcript"), lit(":"), col("vcf_ids")))), ";")
+        array_join(sort_array(collect_list(col("hap"))), ";")
           .as("haplotypes"),
+        min(col("ps")).as("start"),
         array_join(array_distinct(sort_array(collect_list(
           col("e.rf")))), ";").as("rfs"))
   }
@@ -472,8 +478,8 @@ object HaploProteins {
   /** Deduplicate mutated cDNA sequences across haplotypes — the entry
     * aggregation behind ProHap's optional cDNA FASTA
     * (process_haplotypes.py:444-454,474-478; prohap.py:184-193): one row
-    * per distinct mutated cDNA with the haplotype keys that produced it
-    * and the start offset. Input must come from
+    * per distinct mutated cDNA with the sorted `key`s of the haplotypes
+    * that produced it and the start offset. Input must come from
     * [[proteinDatabase]]`(keepCdna = true)`.
     *
     * Divergence (documented): the reference keeps the first-encountered
@@ -481,12 +487,11 @@ object HaploProteins {
     * here the min start is kept and the haplotype list is sorted, so the
     * output is deterministic under any partitioning.
     */
-  def dedupCdna(db: DataFrame): DataFrame =
-    db.groupBy(col("cdna_sequence"))
+  def dedupCdna(db: DataFrame, key: Column = hapKey): DataFrame =
+    db.withColumn("_hap", key).groupBy(col("cdna_sequence"))
       .agg(
         count(lit(1)).as("n_haplotypes"),
-        array_join(sort_array(collect_list(
-          concat(col("transcript"), lit(":"), col("vcf_ids")))), ";")
+        array_join(sort_array(collect_list(col("_hap"))), ";")
           .as("haplotypes"),
         min(col("cdna_start")).as("cdna_start"))
 }

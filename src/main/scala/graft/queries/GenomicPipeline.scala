@@ -2,33 +2,32 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ProHapCli
 import graft.fixtures.GenomicFixtures
+import graft.fixtures.GenomicFixtures.cliOpts
 import graft.operators.{HaploProteins, Haplotypes, PeptideAnnotate,
   PeptideVariants}
-import graft.sources.Gtf
+import graft.sources.{Fasta, Gtf}
 
-/** End-to-end ProHap/ProVar pipelines over the genomic fixtures:
-  * VCF genotypes -> per-copy haplotypes -> mutated cDNA -> protein
-  * database. The full pipeline is not expressible in one DuckDB SQL
-  * statement, so h4/h5/pv1 are hash-checked against committed
-  * expected-output snapshots (fixtures/expected/) that HaploProteinsSpec
-  * independently asserts field-by-field from hand-computed reference
-  * semantics; p2 has a real SQL oracle.
+/** The ProHap/ProVar gates. h4/h5/f9/p2 read one protein database built
+  * by [[graft.Prohap]]'s composition from the raw fixture files under
+  * [[GenomicFixtures.cliOpts]]; pv1 is [[graft.Provar]]`.run` on the same
+  * options. So the gates check the pipeline the CLI mains ship. The full
+  * pipeline is not expressible in one DuckDB SQL statement, so h4/h5/f9/
+  * pv1 are hash-checked against committed expected-output snapshots
+  * (fixtures/expected/) that HaploProteinsSpec independently asserts
+  * field-by-field from hand-computed reference semantics; p2 has a real
+  * SQL oracle. [[transcriptInfoFrom]] and [[haploInputFrom]] are the
+  * composition's annotation and haplotype steps; [[haploInput]] feeds the
+  * latter from the `gts_long` fixture for the operator specs.
   */
 object GenomicPipeline {
 
   private val fx = GenomicFixtures.dir
   private def prep(s: SparkSession): Unit = GenomicFixtures.ensure(s)
 
-  /** Per-transcript annotation + cDNA: transcript, chrom, biotype, strand,
-    * exons, start_codon_start, stop_codon_start, cdna.
-    */
-  def transcriptInfo(s: SparkSession): DataFrame =
-    transcriptInfoFrom(Gtf.read(s, GenomicFixtures.gtfPath),
-      s.read.parquet(s"$fx/cdna.parquet"))
-
-  /** [[transcriptInfo]] from already-read frames — the entry point the
-    * Prohap/Provar CLI mains use with arbitrary GTF/cDNA inputs.
+  /** Per-transcript annotation + cDNA: transcript, chrom, biotype,
+    * strand, exons, start_codon_start, stop_codon_start, cdna.
     * `cdna0` columns: transcript_id, sequence.
     */
   def transcriptInfoFrom(gtf: DataFrame, cdna0: DataFrame): DataFrame = {
@@ -55,12 +54,17 @@ object GenomicPipeline {
 
   /** Haplotype rows with full variant detail arrays (conflicts dropped),
     * counts and frequencies — get_haplotypes.py output shape, plus the
-    * transcript annotation columns proteinDatabase needs.
+    * transcript annotation columns proteinDatabase needs — from the
+    * `gts_long`/`samples_meta` fixtures and the CLI's transcript-info
+    * step on [[GenomicFixtures.cliOpts]].
     */
-  def haploInput(s: SparkSession): DataFrame =
+  def haploInput(s: SparkSession): DataFrame = {
+    val gtf = Gtf.read(s, GenomicFixtures.gtfPath)
     haploInputFrom(s.read.parquet(s"$fx/gts_long.parquet"),
       Some(s.read.parquet(s"$fx/samples_meta.parquet")),
-      transcriptInfo(s))
+      ProHapCli.transcriptInfo(s, gtf,
+        ProHapCli.transcriptIntervals(s, gtf, cliOpts), cliOpts))
+  }
 
   /** [[haploInput]] from already-built frames — the entry point the
     * Prohap CLI main uses. `meta` (sample, population, superpopulation)
@@ -133,15 +137,15 @@ object GenomicPipeline {
     }
   }
 
-  /** The protein database is consumed by h4/h5/p2 — materialize it once
-    * per JVM instead of re-running the pipeline per query.
+  /** The protein database is consumed by h4/h5/f9/p2 — materialize it
+    * once per JVM instead of re-running the pipeline per query.
     */
   def proteinDb(s: SparkSession): DataFrame = synchronized {
     val path = s"$fx/protein_db.parquet"
     if (!dbReady) {
       // keepCdna: one pipeline run serves h4/h5/p2 (which drop or ignore
       // the cdna columns) AND the f9 cDNA FASTA output
-      HaploProteins.proteinDatabase(haploInput(s), keepCdna = true)
+      graft.Prohap.database(s, cliOpts, keepCdna = true)
         .write.mode("overwrite").parquet(path)
       dbReady = true
       releaseCaches() // the parquet is the product; drop the lineage cache
@@ -161,21 +165,15 @@ object GenomicPipeline {
       // ProHap -output_cdna_fasta round trip: dedup mutated cDNAs, write
       // as FASTA (header carries the haplotype list + start offset like
       // prohap.py:189), read back through the splittable reader
-      import graft.sources.Fasta
       val out = s"$fx/cdna_fasta_written"
-      Fasta.write(HaploProteins.dedupCdna(proteinDb(s))
-        .select(lit("cdna").as("tag"),
-          concat(lit("chap_"), substring(md5(col("cdna_sequence")), 1, 12))
-            .as("accession"),
-          concat(col("haplotypes"), lit(" start:"), col("cdna_start"))
-            .as("description"),
-          col("cdna_sequence").as("sequence")), out)
+      Fasta.write(ProHapCli.cdnaFasta(
+        HaploProteins.dedupCdna(proteinDb(s)), "cdna", "chap_"), out)
       Fasta.read(s, out).orderBy("accession")
     }),
 
     "h5_protein_dedup" -> ((s, _) => {
       prep(s)
-      HaploProteins.dedupProteins(proteinDb(s))
+      HaploProteins.dedupProteins(proteinDb(s)).drop("start")
     }),
 
     "p2_pep_annotate" -> ((s, _) => {
@@ -264,22 +262,7 @@ object GenomicPipeline {
       prep(s)
       // ProVar: one row per variant x transcript (no haplotype grouping,
       // UTRs kept, synonymous kept) — process_variants.py semantics
-      val gts = s.read.parquet(s"$fx/gts_long.parquet")
-      val perVariant = gts
-        .select("transcript", "varId", "pos", "ref", "alt", "allele_af")
-        .distinct()
-        // multi-allelic rows share a VCF id: make the per-allele id unique
-        // so rows don't merge (reference emits one row per allele line)
-        .withColumn("varId", concat(col("varId"), lit(":"), col("alt")))
-        .withColumn("changes", array(struct(col("pos"), col("varId"),
-          col("ref"), col("alt"), col("allele_af").as("af"))))
-        .withColumn("signature", col("varId"))
-        .withColumn("hap_count", lit(1L))
-        .withColumn("frequency", lit(0.0))
-        .withColumn("samples", lit(""))
-        .join(transcriptInfo(s), Seq("transcript"))
-      HaploProteins.proteinDatabase(perVariant, ignoreUtr = false,
-        skipStartLoss = false, requireNonSyn = false)
+      graft.Provar.run(s, cliOpts)
         .orderBy("transcript", "vcf_ids")
     })
   )

@@ -6,8 +6,10 @@ import org.scalatest.BeforeAndAfterAll
 import graft.fixtures.GenomicFixtures
 import graft.queries.GenomicPipeline
 
-/** The CLI mains must reproduce the gate pipelines end-to-end from the
-  * RAW fixture files (VCF/GTF/FASTA/TSV), i.e. one command = h4/pv1.
+/** The CLI mains end-to-end from the RAW fixture files
+  * (VCF/GTF/FASTA/TSV). The h4/pv1 gates run the same composition, so
+  * `Prohap.run`/`Provar.run` are also checked against the committed
+  * snapshots in fixtures/expected/.
   */
 class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -26,17 +28,13 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val fixtureOpts = Map(
-    "i" -> GenomicFixtures.vcfPath,
-    "db" -> GenomicFixtures.gtfPath,
-    "cdna" -> GenomicFixtures.cdnaPath,
-    "s" -> s"${GenomicFixtures.rawDir}/samples.tsv",
-    "x_par1_to" -> GenomicFixtures.par1To.toString,
-    "x_par2_from" -> GenomicFixtures.par2From.toString,
-    // the gate pipeline keeps start-codon-less transcripts (rf = -1);
-    // the CLI default mirrors the reference's require_start=1
-    "require_start" -> "0",
-    "bin_size" -> "20")
+  private val fixtureOpts = GenomicFixtures.cliOpts
+
+  /** A committed gate snapshot: checked independently of the composition
+    * that the gates and the CLI mains now share.
+    */
+  private def expected(name: String) =
+    spark.read.parquet(s"fixtures/expected/$name.parquet")
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[String] = {
     val cols = df.columns.sorted
@@ -50,6 +48,9 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       .drop("cdna_sequence", "cdna_start")
     assert(cli.columns.sorted.sameElements(gate.columns.sorted))
     assert(rowsOf(cli) == rowsOf(gate))
+    val snapshot = expected("h4_protein_db")
+    assert(cli.columns.sorted.sameElements(snapshot.columns.sorted))
+    assert(rowsOf(cli) == rowsOf(snapshot))
     GenomicPipeline.releaseCaches()
   }
 
@@ -161,7 +162,71 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cli = Provar.run(spark, fixtureOpts)
     val gate = SparkEntry.queries("pv1_provar")(spark, "")
     assert(rowsOf(cli) == rowsOf(gate))
+    assert(rowsOf(cli) == rowsOf(expected("pv1_provar")))
     GenomicPipeline.releaseCaches()
+  }
+
+  test("Provar's writers: one TSV row per pv1 row, FASTA entries tagged " +
+    "generic_var with var_ accessions") {
+    val out = s"${GenomicFixtures.dir}/cli_out_provar"
+    val opts = fixtureOpts ++ Map("single_file" -> "1",
+      "output_csv" -> s"$out/var.tsv", "output_fasta" -> s"$out/var.fasta")
+    val db = Provar.run(spark, opts)
+    ProHapCli.writeOutputs(db, opts, "generic_var", "var", "var_")
+    val meta = spark.read.option("sep", "\t").option("header", "true")
+      .csv(s"$out/var.tsv")
+    assert(meta.count() == expected("pv1_provar").count())
+    assert(meta.collect().forall(
+      _.getAs[String]("HaplotypeID").startsWith("var_")))
+    val fasta = graft.sources.Fasta.read(spark, s"$out/var.fasta").collect()
+    assert(fasta.nonEmpty)
+    assert(fasta.forall(_.getAs[String]("tag") == "generic_var"))
+    assert(fasta.forall(_.getAs[String]("accession").startsWith("var_")))
+    GenomicPipeline.releaseCaches()
+  }
+
+  test("parseArgs rejects a trailing flag without a value and a key " +
+    "token without '-', naming the token; values may start with '-'") {
+    val trailing = intercept[IllegalArgumentException](
+      ProHapCli.parseArgs(Array("-i", "in.vcf", "-af")))
+    assert(trailing.getMessage.contains("-af"))
+    val bare = intercept[IllegalArgumentException](
+      ProHapCli.parseArgs(Array("-i", "in.vcf", "af", "0.01")))
+    assert(bare.getMessage.contains("'af'"))
+    assert(ProHapCli.parseArgs(Array("-min_backoff_logp", "-8", "-i", "x"))
+      == Map("min_backoff_logp" -> "-8", "i" -> "x"))
+  }
+
+  test("one ProHap/ProVar definition: the fixtures build gts_long " +
+    "through the CLI step, the haplotype ID, the writers and the " +
+    "frame-entries explode each exist once under src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src", "main")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val sources = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => (p.toString.replace(java.io.File.separatorChar, '/'),
+        new String(Files.readAllBytes(p), "UTF-8")))
+      .toSeq.sortBy(_._1)
+    def count(needle: String): Seq[String] = sources.flatMap {
+      case (f, t) => Iterator.iterate(t.indexOf(needle))(
+        i => t.indexOf(needle, i + needle.length)).takeWhile(_ >= 0)
+        .map(_ => f)
+    }
+    val fixtures = sources.collect {
+      case (f, t) if f.endsWith("/GenomicFixtures.scala") => t
+    }.mkString
+    for (fn <- Seq("pointsInIntervals(", "genotypesLong("))
+      assert(!fixtures.contains(fn),
+        s"GenomicFixtures calls $fn — build gts_long through ProHapCli")
+    val hapId = count(
+      """md5(concat(col("transcript"), lit("|"), col("vcf_ids")))""")
+    assert(hapId.size == 1, s"haplotype-ID expression at $hapId")
+    val writers = count("write(metadataFrame(")
+    assert(writers.size == 1, s"writer composition at $writers")
+    val explodes = count("""alt_frame_sequences") === "-"""")
+    assert(explodes.size <= 2, s"frame-entries explode at $explodes")
   }
 
   test("Prohap writers emit TSV + FASTA + cDNA FASTA round-trippably") {
